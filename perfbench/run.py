@@ -18,26 +18,17 @@ import json
 import math
 import os
 import shutil
+import statistics
 import subprocess
 import sys
+import time
 
 sys.dont_write_bytecode = True
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 
-# leaves room under a run's 180 s for start-up and the output check
-JVM_TIMEOUT_S = 160
-# the module opens Spark needs on JDK 17 outside spark-submit (the same
-# list as build.sbt's jdk17AddOpens)
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
+# a run must end within 180 s; the JVM and the output check share this
+BUDGET_S = 170
 
 
 def fail(msg):
@@ -45,53 +36,84 @@ def fail(msg):
     sys.exit(1)
 
 
-def cores():
-    return len(os.sched_getaffinity(0))
-
-
-def heap():
-    """Half the machine's memory in whole GiB, clamped to [2, 8]."""
-    with open("/proc/meminfo") as fh:
-        kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
-    return f"{min(8, max(2, kb // 2097152))}g"
-
-
-def oracle_failures(work):
-    """Compares each query dump under <work>/check with its DuckDB oracle
-    over the same tables; returns the names that differ."""
-    import duckdb
+def oracle_failures(work, deadline):
+    """Runs the repository's DuckDB oracle compare (tools/compare_oracle.py)
+    over the query results of each operation (<work>/check<op>); returns
+    the queries it reports as failed, one entry per failing operation."""
     tables = open(os.path.join(work, "tables_dir")).read()
-    check = os.path.join(work, "check")
-    con = duckdb.connect()
-    for d in glob.glob(os.path.join(tables, "*.parquet")):
-        name = os.path.basename(d)[:-len(".parquet")]
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{d}/*.parquet'")
-    oracle = json.load(open(os.path.join(check, "oracle_sql.json")))
-
-    def canon(df):
-        df = df[sorted(df.columns)]
-        return sorted(df.itertuples(index=False, name=None),
-                      key=lambda t: tuple(str(x) for x in t))
-
-    def same(a, b):
-        return str(a) == str(b) or (isinstance(a, float) and isinstance(b, float)
-                                    and abs(a - b) < 1e-12)
-
     bad = []
-    for name, sql in sorted(oracle.items()):
-        try:
-            o = con.execute(sql).fetch_df()
-            s = duckdb.connect().execute(
-                f"SELECT * FROM '{check}/{name}/*.parquet'").fetch_df()
-            ok = (sorted(o.columns) == sorted(s.columns) and len(o) == len(s)
-                  and all(all(same(a, b) for a, b in zip(ra, rb))
-                          for ra, rb in zip(canon(o), canon(s))))
-        except Exception as e:  # a query the oracle cannot run is a failure
-            print(f"perfbench: oracle {name}: {e}", file=sys.stderr)
-            ok = False
-        if not ok:
-            bad.append(name)
+    for check in sorted(glob.glob(os.path.join(work, "check*", "oracle_sql.json"))):
+        r = subprocess.run([sys.executable, os.path.join("tools", "compare_oracle.py"),
+                            tables, os.path.dirname(check)],
+                           capture_output=True, text=True,
+                           timeout=deadline - time.monotonic())
+        failed = [l.split()[1].rstrip(":") for l in r.stdout.splitlines()
+                  if l.startswith(("FAIL", "ERR"))]
+        if r.returncode != 0 and not failed:
+            sys.stderr.write(r.stdout[-2000:] + r.stderr[-2000:])
+            failed = ["compare_oracle"]
+        bad += failed
     return bad
+
+
+def recorded_run_s(workload):
+    """run_s of every correct untraced run of `workload` since the last
+    build of this checkout."""
+    path = os.path.join(build.UNTRACED, f"{workload}.jsonl")
+    if not os.path.exists(path):
+        return []
+    return [json.loads(l)["run_s"] for l in open(path)]
+
+
+def run_jvm(a, classpath, deadline):
+    """Runs one benchmark JVM and checks its outputs. Returns its result
+    (see Main.scala) with the step failures the oracle check found added
+    to `failed`; a run with wrong results keeps none of its times."""
+    cp, cds = classpath
+    work = os.path.join(build.BUILD_DIR, "work", f"{a.workload}-{a.seed}-{os.getpid()}")
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(os.path.join(work, "tmp"))
+    log = os.path.join(build.BUILD_DIR, "logs", f"{a.workload}-{a.seed}-t{a.trace}.log")
+    os.makedirs(os.path.dirname(log), exist_ok=True)
+    cmd = (["java", f"-Xms{build.heap()}", f"-Xmx{build.heap()}",
+            f"-Djava.io.tmpdir={work}/tmp"] + cds + build.JVM_FLAGS
+           + ["-cp", cp, "graft.perfbench.Main",
+              "--workload", a.workload, "--seed", str(a.seed),
+              "--trace", str(a.trace),
+              "--work", work, "--cores", str(build.cores())])
+    try:
+        t0 = time.monotonic()
+        with open(log, "w") as out:
+            r = subprocess.run(cmd, stdout=out, stderr=subprocess.STDOUT,
+                               timeout=deadline - t0)
+        t1 = time.monotonic()
+        res_file = os.path.join(work, "result.json")
+        if r.returncode != 0 or not os.path.exists(res_file):
+            sys.stderr.write(open(log).read()[-4000:])
+            fail(f"benchmark JVM exited with {r.returncode}; log in {log}")
+        res = json.load(open(res_file))
+        bad = oracle_failures(work, deadline) if a.workload == "driver_suite" else []
+        print(f"perfbench: JVM {t1 - t0:.1f} s, oracle check {time.monotonic() - t1:.1f} s",
+              file=sys.stderr)
+        if a.trace:
+            traces = os.path.join(build.BUILD_DIR, "traces")
+            os.makedirs(traces, exist_ok=True)
+            shutil.copy(os.path.join(work, "spans.json"),
+                        os.path.join(traces, f"{a.workload}-seed{a.seed}.json"))
+    except subprocess.TimeoutExpired as e:
+        fail(f"{e.cmd[0]} exceeded the run's {BUDGET_S} s; log in {log}")
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    if not a.trace and res["failed"] == 0 and not bad:
+        os.makedirs(build.UNTRACED, exist_ok=True)
+        with open(os.path.join(build.UNTRACED, f"{a.workload}.jsonl"), "a") as fh:
+            fh.write(json.dumps({"seed": a.seed, "run_s": res["metrics"]["run_s"]}) + "\n")
+    if bad:
+        print(f"perfbench: results differ from the DuckDB oracle: {bad}", file=sys.stderr)
+        res["failed"] = min(res["attempted"], res["failed"] + len(bad))
+        res["metrics"] = {k: v for k, v in res["metrics"].items()
+                          if k in ("setup_s", "peak_rss_mb")}
+    return res
 
 
 def main():
@@ -105,52 +127,24 @@ def main():
     spec = json.load(open("BENCHMARK.json"))
     if a.workload not in [w["name"] for w in spec["workloads"]]:
         fail(f"unknown workload {a.workload}")
-    cp = build.classpath()
-
-    work = os.path.join(build.BUILD_DIR, "work", f"{a.workload}-{a.seed}-{os.getpid()}")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(os.path.join(work, "tmp"))
-    log = os.path.join(build.BUILD_DIR, "logs", f"{a.workload}-{a.seed}-t{a.trace}.log")
-    os.makedirs(os.path.dirname(log), exist_ok=True)
-    cmd = (["java", f"-Xms{heap()}", f"-Xmx{heap()}", "-XX:+UseParallelGC", "-Xss8m",
-            # no metaspace-triggered full GCs while Spark loads its classes
-            "-XX:MetaspaceSize=512m",
-            # no hsperfdata file outside the checkout
-            "-XX:-UsePerfData",
-            f"-Djava.io.tmpdir={work}/tmp",
-            "-Dlog4j2.configurationFile=perfbench/log4j2.properties"]
-           + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + ["-cp", cp, "graft.perfbench.Main",
-              "--workload", a.workload, "--seed", str(a.seed),
-              "--seconds", str(a.seconds), "--trace", str(a.trace),
-              "--work", work, "--cores", str(cores())])
-    try:
-        with open(log, "w") as out:
-            r = subprocess.run(cmd, stdout=out, stderr=subprocess.STDOUT,
-                               timeout=JVM_TIMEOUT_S)
-        res_file = os.path.join(work, "result.json")
-        if r.returncode != 0 or not os.path.exists(res_file):
-            sys.stderr.write(open(log).read()[-4000:])
-            fail(f"benchmark JVM exited with {r.returncode}; log in {log}")
-        res = json.load(open(res_file))
-        bad = oracle_failures(work) if a.workload == "driver_suite" else []
-        if a.trace:
-            traces = os.path.join(build.BUILD_DIR, "traces")
-            os.makedirs(traces, exist_ok=True)
-            shutil.copy(os.path.join(work, "spans.json"),
-                        os.path.join(traces, f"{a.workload}-seed{a.seed}.json"))
-    except subprocess.TimeoutExpired:
-        fail(f"benchmark JVM exceeded {JVM_TIMEOUT_S} s; log in {log}")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
+    classpath = build.classpath()
+    deadline = time.monotonic() + BUDGET_S
+    res = run_jvm(a, classpath, deadline)
     attempted, failed = res["attempted"], res["failed"]
     values = res["metrics"]
-    if bad:
-        # the operation produced wrong results: none of its times count
-        print(f"perfbench: results differ from the DuckDB oracle: {bad}", file=sys.stderr)
-        failed = min(attempted, failed + len(bad) * res["ops"])
-        values = {k: v for k, v in values.items() if k in ("setup_s", "peak_rss_mb")}
+    if a.trace:
+        # tracing overhead: against the untraced runs of this workload in
+        # this checkout, or a fresh one when there are none
+        untraced = recorded_run_s(a.workload)
+        if not untraced:
+            plain = run_jvm(argparse.Namespace(**{**vars(a), "trace": 0}),
+                            classpath, deadline)
+            attempted += plain["attempted"]
+            failed += plain["failed"]
+            untraced = recorded_run_s(a.workload)
+        u = statistics.median(untraced) if untraced else math.nan
+        values.update({"trace.untraced_run_s": u,
+                       "trace.overhead_s": values.get("trace.run_s", math.nan) - u})
     metrics = {}
     for m in spec["per_layer" if a.trace else "end_to_end"]:
         name = m["name"]
@@ -162,7 +156,7 @@ def main():
             failed = max(failed, 1)
             continue
         metrics[name] = {"value": v, "unit": m["unit"]}
-    print(json.dumps({"correct": failed == 0 and not bad, "attempted": attempted,
+    print(json.dumps({"correct": failed == 0, "attempted": attempted,
                       "failed": failed, "metrics": metrics}))
 
 

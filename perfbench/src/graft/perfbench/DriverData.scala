@@ -1,40 +1,53 @@
 package graft.perfbench
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.pipeline.Fs
 
 /** Seeded generator of the driver tables `SparkEntry.queries` read: a
   * TPC-H-shaped star schema (region, nation, customer, supplier, part,
   * orders, lineitem), an `events` stream table, `documents` (short texts
   * over a small vocabulary, with planted near-duplicates) and
   * `embeddings` (64-d unit vectors). Column names and types follow the
-  * queries and their DuckDB oracles; every table is one parquet
-  * directory `<dir>/<name>.parquet`. */
+  * queries and their DuckDB oracles. Row counts are those of the
+  * SF 0.001 driver tables (1/100 of SF 0.1 for the star schema and
+  * `events`; `documents` and `embeddings` have 500 rows each, as at
+  * SF 0.01), and the documents follow their text shape: 10 to 100
+  * tokens over a 31-word vocabulary, about 40% of them `en`. Every
+  * table is one parquet file `<dir>/<name>.parquet`. */
 object DriverData {
-  val Customers = 600
-  val Suppliers = 40
-  val Parts = 800
-  val Orders = 6000
-  val LineItems = 12000
-  val Events = 5000
-  val Users = 150
-  val Documents = 300
+  val Customers = 150
+  val Suppliers = 10
+  val Parts = 200
+  val Orders = 1500
+  val LineItems = 6000
+  val Events = 1000
+  val Users = 15
+  val Documents = 500
   val Embeddings = 500
   val Dim = 64
 
   private val vocab = ("row the query stream fast spark line small customer " +
     "group value hash batch sort data big filter dup key agg scan slow table " +
     "part a merge window order column join vector").split(" ")
-  private val langs = Array("en", "de", "es", "fr", "zh")
+  private val otherLangs = Array("de", "es", "fr", "zh")
 
   private def r2(d: Double): Double = math.round(d * 100) / 100.0
 
   def write(spark: SparkSession, seed: Long, dir: String): Unit = {
     val rnd = new java.util.Random(seed)
-    def table(name: String, schema: StructType, rows: Seq[Row]): Unit =
+    // one file per table, as the driver tables are
+    def table(name: String, schema: StructType, rows: Seq[Row]): Unit = {
+      val tmp = s"$dir/_$name"
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-        .write.parquet(s"$dir/$name.parquet")
+        .write.parquet(tmp)
+      val part = Fs.listFiles(tmp, "part-").head.stripPrefix("file:")
+      Files.move(Paths.get(part), Paths.get(s"$dir/$name.parquet"),
+        StandardCopyOption.ATOMIC_MOVE)
+      Fs.deleteRecursive(tmp)
+    }
     def f(n: String, t: DataType) = StructField(n, t)
 
     val regions = Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
@@ -71,12 +84,12 @@ object DriverData {
     val epoch1995 = 788918400000L // 1995-01-01T00:00:00Z
     val prios = Array("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
     val status = Array("F", "O", "P")
-    // two customers in three place orders (q3's anti join has rows)
+    // one customer in a hundred places no order (q3's anti join has rows)
     table("orders", StructType(Seq(f("o_orderkey", LongType), f("o_custkey", LongType),
       f("o_orderstatus", StringType), f("o_totalprice", DoubleType),
       f("o_orderdate", TimestampType), f("o_orderpriority", StringType))),
       (0 until Orders).map { i =>
-        val c = rnd.nextInt(Customers / 3) * 3 + 1 + rnd.nextInt(2)
+        val c = rnd.nextInt(Customers - Customers / 100)
         Row(i.toLong, c.toLong, status(rnd.nextInt(3)), r2(1000 + rnd.nextDouble() * 300000),
           new Timestamp(epoch1995 + rnd.nextInt(2404) * day), prios(rnd.nextInt(5)))
       })
@@ -108,24 +121,24 @@ object DriverData {
           r2(0.01 + rnd.nextDouble() * 490), s"""{"k": ${rnd.nextInt(100)}}""")
       })
 
-    // one document in five is a copy of an earlier one with a few tokens
-    // replaced, so the near-duplicate operators have pairs to verify
+    // one document in twenty is a copy of an earlier one with a few
+    // tokens replaced, so the near-duplicate operators have pairs to verify
     val texts = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
     (0 until Documents).foreach { i =>
       val toks =
-        if (i >= 10 && rnd.nextInt(5) == 0) {
+        if (i >= 10 && rnd.nextInt(20) == 0) {
           val t = texts(rnd.nextInt(i)).clone()
           (0 until 1 + rnd.nextInt(3)).foreach(_ => t(rnd.nextInt(t.length)) = vocab(rnd.nextInt(vocab.length)))
           t
-        } else Array.fill(8 + rnd.nextInt(80))(vocab(rnd.nextInt(vocab.length)))
+        } else Array.fill(10 + rnd.nextInt(91))(vocab(rnd.nextInt(vocab.length)))
       texts += toks
     }
     table("documents", StructType(Seq(f("doc_id", LongType), f("text", StringType),
       f("lang", StringType), f("source", StringType), f("n_chars", LongType))),
       texts.zipWithIndex.map { case (t, i) =>
         val s = t.mkString(" ")
-        Row(i.toLong, s, langs(rnd.nextInt(langs.length)), s"src${rnd.nextInt(20)}",
-          s.length.toLong)
+        val lang = if (rnd.nextInt(5) < 2) "en" else otherLangs(rnd.nextInt(4))
+        Row(i.toLong, s, lang, s"src${rnd.nextInt(20)}", s.length.toLong)
       }.toSeq)
 
     table("embeddings", StructType(Seq(f("vec_id", LongType),

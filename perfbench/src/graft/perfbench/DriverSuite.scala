@@ -7,27 +7,24 @@ import graft.pipeline.{Caches, Fs}
 /** `driver_suite`: every `SparkEntry.queries` query over the seeded
   * driver tables ([[DriverData]]), run once each in one session after an
   * untimed warm-up query. A step is one query, timed while its result
-  * is written as parquet to `<work>/check/<query>`; the operation is the
-  * sum over all queries. Caches are released between queries outside
-  * the timer.
+  * is written as parquet to `<work>/check<op>/<query>`; the operation
+  * is the sum over all queries. Caches are released between queries
+  * outside the timer.
   *
-  * Check: `perfbench/run.py` compares every written result against the
-  * query's DuckDB oracle (`SparkEntry.oracleSql`, written to
-  * `<work>/check/oracle_sql.json`) over the same tables, after the JVM
-  * has exited. An untraced run is one operation: a second pass would
-  * time queries whose plans the first pass already compiled. */
+  * Check: after the JVM has exited, `perfbench/run.py` runs the
+  * repository's `tools/compare_oracle.py` over every `check<op>`
+  * directory, which compares each result with the query's DuckDB oracle
+  * (`SparkEntry.oracleSql`) over the same tables. */
 final class DriverSuite(spark: SparkSession, seed: Long) extends Workload {
   private val names = SparkEntry.queries.keys.toSeq.sorted
 
   def stepsPerOp: Int = names.size
   def layers: Seq[String] = Seq("q", "textops", "simsearch", "relational", "kg")
-  // the traced run first runs two untraced operations (the first one
-  // cold), so its traced/untraced pair times plans run twice before
-  override def warmupOps(trace: Boolean): Int = if (trace) 2 else 0
-  def timedOps(seconds: Double): Int = 1
 
   private var dir: String = _
+  private var work: String = _
   private var check: String = _
+  private var opNo = 0
 
   def setup(dir: String): Unit = {
     DriverData.write(spark, seed, dir)
@@ -35,17 +32,25 @@ final class DriverSuite(spark: SparkSession, seed: Long) extends Workload {
   }
 
   def prepare(work: String): Unit = {
-    check = s"$work/check"
+    this.work = work
     SparkEntry.queries(DriverSuite.WarmupQuery)(spark, dir)
       .write.format("noop").mode("overwrite").save()
     release()
-    // the kg_triples oracle reads the generator's golden triples
+    Fs.writeString(s"$work/tables_dir", dir)
+  }
+
+  /** A fresh results directory for the next operation, holding the
+    * oracle SQL, with the generator's golden triples (which the
+    * kg_triples oracle reads) beside it, as `graft.Verify` lays them
+    * out. */
+  private def freshCheck(): Unit = {
+    opNo += 1
+    check = s"$work/check$opNo"
     graft.corpus.CorpusGen.goldenTriples(spark, 0.0002).coalesce(1)
       .write.parquet(s"${check}_golden/kg_triples")
     val abs = java.nio.file.Paths.get(check).toAbsolutePath.toString
     Fs.writeString(s"$check/oracle_sql.json", Json.obj(SparkEntry.oracleSql.toSeq
       .map { case (k, v) => k -> Json.str(v.replace("__GRAFT_OUTDIR__", abs)) }))
-    Fs.writeString(s"$work/tables_dir", dir)
   }
 
   private def release(): Unit = { Caches.release(); spark.catalog.clearCache() }
@@ -73,9 +78,13 @@ final class DriverSuite(spark: SparkSession, seed: Long) extends Workload {
     Op(done, names.size, names.size - done.size, done.size.toLong)
   }
 
-  def op(): Op = opOf(names.map(n => n -> query(n, run => run)))
+  def op(): Op = {
+    freshCheck()
+    opOf(names.map(n => n -> query(n, run => run)))
+  }
 
   def tracedOp(t: Tracer, trace: Int, rec: LayerRecorder): Op = {
+    freshCheck()
     var ids = Seq.empty[(String, Int)]
     val op = t.span(trace, -1, "driver_suite") { root =>
       opOf(names.map { n =>

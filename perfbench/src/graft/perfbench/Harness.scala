@@ -15,25 +15,36 @@ final case class Op(steps: Seq[(String, Double)], attempted: Int,
 
 /** A benchmark workload. Inputs are generated from the seed in
   * [[setup]]; [[prepare]] computes the reference outputs the checks
-  * compare against and warms the JVM (untimed); [[op]] runs one timed
-  * operation and checks its outputs outside the timer; [[tracedOp]]
-  * runs the same operation as separate calls into each layer, inside
-  * spans, and records the layer metrics into `rec`. */
+  * compare against (untimed); [[op]] runs one timed operation and checks
+  * its outputs outside the timer; [[tracedOp]] runs the same operation
+  * as separate calls into each layer, inside spans, and records the
+  * layer metrics into `rec`. */
 trait Workload {
   /** Steps one operation attempts (for counting a thrown operation). */
   def stepsPerOp: Int
   /** Layer prefixes whose per-layer metrics this workload reports. */
   def layers: Seq[String]
-  /** Untimed operations run after [[prepare]], before measuring. */
-  def warmupOps(trace: Boolean): Int = 1
-  /** Timed operations in a run measuring `seconds`: a count fixed by
-    * the run length, not by how fast this run's operations happen to
-    * be, so every run's median is over the same operations. */
-  def timedOps(seconds: Double): Int
   def setup(dir: String): Unit
   def prepare(work: String): Unit
   def op(): Op
   def tracedOp(t: Tracer, trace: Int, rec: LayerRecorder): Op
+}
+
+/** Several workloads run as one, in one JVM: their set-ups,
+  * preparations and operations one after another. An operation's steps
+  * are the parts' steps in order; its outputs are their sum. */
+final class Chain(parts: Seq[Workload]) extends Workload {
+  def stepsPerOp: Int = parts.map(_.stepsPerOp).sum
+  def layers: Seq[String] = parts.flatMap(_.layers)
+  def setup(dir: String): Unit =
+    parts.zipWithIndex.foreach { case (w, i) => w.setup(s"$dir/part$i") }
+  def prepare(work: String): Unit =
+    parts.zipWithIndex.foreach { case (w, i) => w.prepare(s"$work/part$i") }
+  private def joined(ops: Seq[Op]): Op = Op(ops.flatMap(_.steps),
+    ops.map(_.attempted).sum, ops.map(_.failed).sum, ops.map(_.outputs).sum)
+  def op(): Op = joined(parts.map(_.op()))
+  def tracedOp(t: Tracer, trace: Int, rec: LayerRecorder): Op =
+    joined(parts.map(_.tracedOp(t, trace, rec)))
 }
 
 /** Per-layer samples of the traced operations; each metric reports the
@@ -46,7 +57,7 @@ final class LayerRecorder {
     samples.toSeq.map { case (k, vs) => k -> Stats.median(vs.toSeq) }
 }
 
-final case class RunResult(ops: Int, attempted: Int, failed: Int,
+final case class RunResult(attempted: Int, failed: Int,
     metrics: Seq[(String, Double)], layers: Seq[String])
 
 object Harness {
@@ -58,72 +69,50 @@ object Harness {
 
   private def log(msg: String): Unit = System.err.println(s"perfbench: $msg")
 
-  /** Runs `f` `n` times. A thrown operation counts every step as
+  /** Runs one operation. A thrown operation counts every step as
     * failed. */
-  private def loop(w: Workload, n: Int)(f: => Op): Seq[Op] = {
-    val ops = (1 to n).map { _ =>
-      try f catch {
-        case e: Exception =>
-          log(s"operation failed: $e")
-          e.printStackTrace()
-          Op(Nil, w.stepsPerOp, w.stepsPerOp, 0L)
-      }
+  private def attempt(w: Workload)(f: => Op): Op = {
+    val op = try f catch {
+      case e: Exception =>
+        log(s"operation failed: $e")
+        e.printStackTrace()
+        Op(Nil, w.stepsPerOp, w.stepsPerOp, 0L)
     }
-    log(s"ops ${ops.map(o => f"${o.runS}%.3f").mkString(" ")}")
-    ops
+    log(s"op ${op.steps.map { case (k, v) => f"$k=$v%.2f" }.mkString(" ")}")
+    op
   }
 
-  private def medianRun(ops: Seq[Op]): Double = {
-    val g = ops.filter(_.ok)
-    if (g.isEmpty) Double.NaN else Stats.median(g.map(_.runS))
-  }
-
-  def run(spark: SparkSession, w: Workload, work: String, seconds: Double,
-      trace: Boolean): RunResult = {
-    val setupS = (0 until SetupRepeats).map { i =>
+  /** One run: three set-ups (one when traced), the preparation, then one
+    * operation, traced or not. Every operation is the JVM's first, as a
+    * user's is. */
+  def run(spark: SparkSession, w: Workload, work: String, trace: Boolean): RunResult = {
+    // a traced run reports no set-up time, so it sets up once
+    val setupS = (0 until (if (trace) 1 else SetupRepeats)).map { i =>
       val dir = s"$work/setup-$i"
       graft.pipeline.Fs.deleteRecursive(dir)
       timed(w.setup(dir))
     }
     log(s"setup ${setupS.mkString(" ")}")
     log(f"prepare ${timed(w.prepare(work))}%.2f s")
-    val warm = loop(w, w.warmupOps(trace))(w.op())
     if (!trace) {
-      val ops = loop(w, w.timedOps(seconds))(w.op())
-      val all = warm ++ ops
-      val good = ops.filter(_.ok)
+      val op = attempt(w)(w.op())
       val metrics =
-        if (good.isEmpty) Seq("setup_s" -> Stats.median(setupS))
-        else {
-          val perKey = good.flatMap(_.steps).groupBy(_._1).values
-            .map(vs => Stats.median(vs.map(_._2))).toSeq
-          Seq(
-            "run_s" -> medianRun(good),
-            "setup_s" -> Stats.median(setupS),
-            "outputs_per_s" -> Stats.median(good.map(o => o.outputs / o.runS)),
-            "step_geomean_s" -> Stats.geomean(perKey),
-            "peak_rss_mb" -> peakRssMb())
-        }
-      RunResult(all.size, all.map(_.attempted).sum, all.map(_.failed).sum, metrics, Nil)
+        if (!op.ok) Seq("setup_s" -> Stats.median(setupS))
+        else Seq(
+          "run_s" -> op.runS,
+          "setup_s" -> Stats.median(setupS),
+          "outputs_per_s" -> op.outputs / op.runS,
+          "step_geomean_s" -> Stats.geomean(op.steps.map(_._2)),
+          "peak_rss_mb" -> peakRssMb())
+      RunResult(op.attempted, op.failed, metrics, Nil)
     } else {
-      // traced/untraced pairs; tracing overhead = median traced - median
-      // paired untraced run_s
       val tracer = new Tracer(spark.sparkContext)
       val rec = new LayerRecorder
-      val traced = mutable.ArrayBuffer.empty[Op]
-      var i = 0
-      val untraced = loop(w, math.max(1, w.timedOps(seconds) / 2)) {
-        i += 1
-        traced ++= loop(w, 1)(w.tracedOp(tracer, i, rec))
-        w.op()
-      }
+      val op = attempt(w)(w.tracedOp(tracer, 1, rec))
       tracer.writeJson(s"$work/spans.json")
       tracer.stop()
-      val all = warm ++ traced ++ untraced
-      val (tr, un) = (medianRun(traced.toSeq), medianRun(untraced))
-      RunResult(all.size, all.map(_.attempted).sum, all.map(_.failed).sum,
-        rec.medians ++ Seq("trace.run_s" -> tr, "trace.untraced_run_s" -> un,
-          "trace.overhead_s" -> (tr - un)),
+      RunResult(op.attempted, op.failed,
+        rec.medians :+ ("trace.run_s" -> (if (op.ok) op.runS else Double.NaN)),
         w.layers :+ "trace")
     }
   }

@@ -28,7 +28,7 @@ object Disk {
     files(dir).count(_.getFileName.toString.endsWith(".parquet"))
 }
 
-/** `kg_batch`: the headline user flow. Set-up writes the seeded corpus
+/** The batch part of `kg_flow`, the headline user flow. Set-up writes the seeded corpus
   * as a parquet table with the north-rule schema (repo, path,
   * commit, lang, content). One operation is `Pipeline.runWithMetrics`
   * over a scan of that table followed by `Pipeline.materialize` through
@@ -37,15 +37,10 @@ object Disk {
   * and requires P = R = 1.0 against `CorpusGen.goldenTriples`. */
 final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workload {
   import spark.implicits._
-  import KgBatch.{NominalOpS, Sf}
+  import KgBatch.Sf
 
   def stepsPerOp: Int = 1
   def layers: Seq[String] = Seq("extract", "entities", "canonical", "joins", "sink")
-  // operations keep getting faster for the first ~6 in a JVM (the JIT
-  // is still compiling next to the four task threads); timing from the
-  // sixth on keeps runs comparable
-  override def warmupOps(trace: Boolean): Int = 5
-  def timedOps(seconds: Double): Int = math.max(1, (seconds / NominalOpS).toInt)
 
   private var corpus: String = _
   private var out: String = _
@@ -93,7 +88,7 @@ final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workloa
 
   private def result(secs: Double, dir: String): Op = {
     val n = check(dir)
-    if (n < 0) Op(Nil, 1, 1, 0L) else Op(Seq("op" -> secs), 1, 0, n)
+    if (n < 0) Op(Nil, 1, 1, 0L) else Op(Seq("pipeline" -> secs), 1, 0, n)
   }
 
   def op(): Op = {
@@ -112,13 +107,18 @@ final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workloa
     val trunc = sc.longAccumulator("truncated_segments")
     def cachedMb = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum / 1048576.0
     val cacheBefore = cachedMb
-    val root = t.span(trace, -1, "kg_batch") { root =>
+    var extractCacheMb = 0.0
+    // the root span holds the five layer calls only; the boundary counts
+    // and the releases run after it closes
+    val (root, extracted, ents, canon, triples) = t.span(trace, -1, "pipeline") { root =>
       val extracted = t.span(trace, root.id, "extract") { s =>
         val e = Pipeline.extract(spark, scan(), gazette, Some(trunc),
           keepNegatives = false).persist()
         s.attrs("docs") = e.count().toDouble
         e
       }
+      // the extract cache alone: nothing else is persisted yet
+      extractCacheMb = cachedMb - cacheBefore
       val ents = t.span(trace, root.id, "entities") { s =>
         val e = Pipeline.dedupeEntities(extracted.flatMap(_.entities).toDF()).persist()
         s.attrs("rows") = e.count().toDouble
@@ -138,19 +138,13 @@ final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workloa
       t.span(trace, root.id, "sink") { _ =>
         TripleSink.resolve().write(spark, triples, dir, 32, Map.empty)
       }
-      // boundary counts read after the spans, so they cost no span time
-      val ex = t.get(root.id + 1)
-      ex.attrs("cache_mb") = cachedMb - cacheBefore
-      ex.attrs("positive_predictions") =
-        extracted.map(_.predictions.length.toLong).reduce(_ + _).toDouble
-      val sizes = canon.groupBy($"canonical").count()
-        .agg(count(lit(1)), max($"count")).head()
-      t.get(root.id + 3).attrs("components") = sizes.getLong(0).toDouble
-      t.get(root.id + 3).attrs("largest_component") = sizes.getLong(1).toDouble
-      Seq(extracted, ents, canon, triples).foreach(_.unpersist())
-      Caches.release()
-      root
+      (root, extracted, ents, canon, triples)
     }
+    val positives = extracted.map(_.predictions.length.toLong).reduce(_ + _).toDouble
+    val sizes = canon.groupBy($"canonical").count()
+      .agg(count(lit(1)), max($"count")).head()
+    Seq(extracted, ents, canon, triples).foreach(_.unpersist())
+    Caches.release()
     // positives over all candidates: one extract that keeps negatives
     if (trace == 1) {
       val pr = Pipeline.extract(spark, scan(), gazette)
@@ -167,16 +161,16 @@ final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workloa
     rec.add("extract.jobs", exC.jobs)
     rec.add("extract.tasks", exC.tasks.toDouble)
     rec.add("extract.docs", t.get(ex).attrs("docs"))
-    rec.add("extract.positive_predictions", t.get(ex).attrs("positive_predictions"))
+    rec.add("extract.positive_predictions", positives)
     rec.add("extract.truncated_segments", trunc.value.toDouble)
-    rec.add("extract.cache_mb", t.get(ex).attrs("cache_mb"))
+    rec.add("extract.cache_mb", extractCacheMb)
     rec.add("entities.wall_s", wall(en))
     rec.add("entities.rows", t.get(en).attrs("rows"))
     rec.add("entities.shuffle_write_mb", t.counters(en).shuffleWriteMb)
     val ccC = t.counters(cc)
     rec.add("canonical.wall_s", wall(cc))
-    rec.add("canonical.components", t.get(cc).attrs("components"))
-    rec.add("canonical.largest_component", t.get(cc).attrs("largest_component"))
+    rec.add("canonical.components", sizes.getLong(0).toDouble)
+    rec.add("canonical.largest_component", sizes.getLong(1).toDouble)
     rec.add("canonical.shuffle_write_mb", ccC.shuffleWriteMb)
     rec.add("canonical.spill_mb", ccC.spillMb)
     val jnC = t.counters(jn)
@@ -194,7 +188,4 @@ final class KgBatch(spark: SparkSession, seed: Long, cores: Int) extends Workloa
 object KgBatch {
   /** Corpus scale factor: `CorpusGen.numDocs(Sf)` documents. */
   val Sf = 0.01
-  /** Seconds one warm operation takes on a 4-core machine; sets how many
-    * operations a run of `--seconds` times. */
-  val NominalOpS = 3.0
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark JVM entry point (launched by `perfbench/run.py`).
   *
-  * Usage: Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *             --work <dir> --cores <n>
+  * Usage: Main --workload <name> --seed <n> --trace <0|1> --work <dir>
+  *             --cores <n>
   *
   * Writes `<work>/result.json`: `attempted`/`failed` step counts, the
   * named metric values, and the layers the run exercised. */
@@ -14,16 +14,39 @@ object Main {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val workload = a("workload")
     val seed = a("seed").toLong
-    val seconds = a("seconds").toDouble
     val trace = a("trace") == "1"
     val work = a("work")
     val cores = a("cores").toInt
     graft.pipeline.Fs.mkdirs(work)
 
     val t0 = System.nanoTime()
+    val spark = session(workload, work, cores)
+    val sessionS = (System.nanoTime() - t0) / 1e9
+
+    val w: Workload = workload match {
+      case "kg_flow" => new Chain(Seq(new KgBatch(spark, seed, cores),
+        new KgStream(spark, seed), new AlRound(spark, seed, cores)))
+      case "driver_suite" => new DriverSuite(spark, seed)
+      case other => throw new IllegalArgumentException(s"unknown workload $other")
+    }
+    val r = try Harness.run(spark, w, work, trace)
+    finally spark.stop()
+    val metrics = r.metrics ++ (if (trace) Seq("session.start_s" -> sessionS) else Nil)
+    val json = Json.obj(Seq(
+      "attempted" -> r.attempted.toString,
+      "failed" -> r.failed.toString,
+      "layers" -> (r.layers :+ "session").map(Json.str).mkString("[", ",", "]"),
+      "metrics" -> Json.obj(metrics.map { case (k, v) => k -> Json.num(v) })))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$work/result.json"), json)
+  }
+
+  /** The benchmark's Spark session: `local[cores]`, `cores` shuffle
+    * partitions, scratch space under `work`. */
+  def session(name: String, work: String, cores: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"perfbench-$workload")
+      .appName(s"perfbench-$name")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -31,24 +54,7 @@ object Main {
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sessionS = (System.nanoTime() - t0) / 1e9
-
-    val w: Workload = workload match {
-      case "kg_batch" => new KgBatch(spark, seed, cores)
-      case "driver_suite" => new DriverSuite(spark, seed)
-      case other => throw new IllegalArgumentException(s"unknown workload $other")
-    }
-    val r = try Harness.run(spark, w, work, seconds, trace)
-    finally spark.stop()
-    val metrics = r.metrics ++ (if (trace) Seq("session.start_s" -> sessionS) else Nil)
-    val json = Json.obj(Seq(
-      "ops" -> r.ops.toString,
-      "attempted" -> r.attempted.toString,
-      "failed" -> r.failed.toString,
-      "layers" -> (r.layers :+ "session").map(Json.str).mkString("[", ",", "]"),
-      "metrics" -> Json.obj(metrics.map { case (k, v) => k -> Json.num(v) })))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$work/result.json"), json)
+    spark
   }
 }
 
