@@ -1,172 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.SparkSession
 import graft.schema.{Evidence, SegMention}
 
-/** Driver-run benchmark: one JSON line on stdout.
-  *
-  * Three parts:
-  *  1. every SparkEntry query timed on SPARK_GRAFT_SF_DIR at
-  *     local[SPARK_GRAFT_CPUS], plus one active-learning round (C3-C7:
-  *     threshold folds + fit + rank) on a fixed synthetic evidence set.
-  *     Caches are released between queries so no timing reads another
-  *     query's persisted intermediates (the round-2 defect that showed
-  *     d9 at 47.6 s when it measures ~2 s standalone). Since round 6
-  *     every query is probe-bracketed and stamped clean/LOADED, with
-  *     retry sweeps for loaded queries (the round-5 defect: kg_triples
-  *     published at 37.7 s under host load — 4.3 s isolated — with no
-  *     flag anywhere).
-  *  2. the end-to-end KG pipeline: headline throughput at local[32]/
-  *     SF=0.1, then the N-vs-4N scaling measurement with a RAW-CPU PROBE
-  *     defending each pair (below), and one SF=2 spot-check run.
-  *  3. refreshes BENCH/BASELINE.md and PLANS.md's efficiency claim from
-  *     the same numbers (single source of truth; the two files can no
-  *     longer contradict each other).
-  *
-  * Measurement notes (why this shape):
-  *  - each measurement runs in its OWN child JVM (fresh heap, fresh
-  *    SparkContext): sequential in-JVM sessions contaminate each other
-  *    through GC state — measured swings of 2x on identical configs;
-  *  - a fixed-work multithreaded sha256 probe POINT (min-of-2 readings)
-  *    brackets every scaling pair; a pair is CLEAN only when both
-  *    bracketing points sit within 40% of the session FLOOR (the bar
-  *    sits between idle-machine point spread ~±20% and contention
-  *    inflation 50-100%+) — the min
-  *    over every probe point of the whole bench, classified
-  *    RETROACTIVELY so a baseline itself measured under load (the
-  *    round-3 defect) can never launder loaded pairs. Round 2 shipped
-  *    0.599 efficiency not because the pipeline stopped scaling
-  *    (quiet-machine replications: 0.865-0.875) but because background
-  *    load during the driver's run stole exactly the cores the 4N
-  *    children needed — the probe makes that visible and retries
-  *    instead of publishing it;
-  *  - the HEADLINE (gated) estimator is the median over clean pairs
-  *    (each pair runs adjacent in time, so slow machine drift cancels
-  *    within a pair); the min-ratio / best-pair / median-ratio
-  *    estimators are reported alongside, never gated on;
-  *  - both levels get the SAME fixed heap (the conservative protocol:
-  *    a real 4N-executor cluster would have 4x the aggregate memory);
-  *  - best-of-N timed runs inside a child isolate code cost from the
-  *    sandbox's one-sided host-steal noise; run counts per leg follow
-  *    the measured leg variance (N leg ~6%: 2 runs; 4N leg ~40%: 4).
-  */
+/** Synthetic inputs for the repository benchmark (`perfbench/`). */
 object Bench {
-
-  private def session(cores: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** One pipeline measurement in its own child JVM: warm-up at sf/5,
-    * then `timedRuns` timed runs; returns (triples, best seconds,
-    * intra-leg probe points the child emitted between its Spark-idle
-    * moments — outer brackets alone cannot see a steal burst confined
-    * to one child, the round-5 defect). */
-  def childRun(cores: Int, sf: Double, timedRuns: Int,
-      mem: String): (Long, Double, Seq[Double]) = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    // ParallelGC measured ~12% faster than G1 on this pipeline at
-    // both 2 and 8 cores (string-allocation heavy, throughput-bound)
-    val cmd = (Seq(javaBin, s"-Xmx$mem", "-XX:+UseParallelGC",
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC") ++ jdk17AddOpens ++
-      Seq("-cp", cp, "graft.RunPipeline", sf.toString, cores.toString,
-        "--bench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-      .redirectError(ProcessBuilder.Redirect.DISCARD) // Spark stderr
-                                                      // would fill the pipe
-    pb.environment().put("GRAFT_TIMED_RUNS", timedRuns.toString)
-    // Bench children run AQE-off with PLAIN SHUFFLE JOINS (dim hint
-    // auto): AQE's per-stage re-planning is pure fixed latency at
-    // single-node scale (measured 5.4 s of the 32 s SF=1.0 8-core run).
-    // Round 5's stage-timed SF=1-vs-SF=2 pairs found the round-4 forced
-    // dimension broadcast WAS the SF sub-linearity: the canonical map
-    // grows with the corpus (798k -> 1.59M entities at SF=1 -> SF=2),
-    // and force-broadcasting it quadrupled the triple-join stage
-    // (2.9 s -> 12.2 s for 2x data; rate ratio 0.87). Plain shuffle
-    // joins measured LINEAR (1.007) at ~8% lower SF=1 throughput — the
-    // honest, 100 TB-shaped config. Library default stays AQE-on: AQE
-    // makes the broadcast-vs-shuffle call per join from runtime sizes.
-    pb.environment().put("SPARK_GRAFT_AQE", "false")
-    pb.environment().put("GRAFT_DIM_BROADCAST", "auto")
-    pb.environment().put("GRAFT_INNER_PROBES", "1")
-    val p = pb.start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream)
-      .getLines().toList
-    p.waitFor()
-    val inner = out.flatMap(l => "\"probe_inner\":([0-9.]+)".r
-      .findFirstMatchIn(l).map(_.group(1).toDouble))
-    val json = out.find(l => l.startsWith("{") && l.contains("\"seconds\""))
-      .getOrElse(throw new IllegalStateException(
-        s"bench child produced no result (cores=$cores sf=$sf)"))
-    val secs = "\"seconds\":([0-9.]+)".r
-      .findFirstMatchIn(json).map(_.group(1).toDouble).getOrElse(-1.0)
-    val trip = "\"triples\":([0-9]+)".r
-      .findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    require(secs > 0 && trip > 0,
-      s"bench child run failed (cores=$cores sf=$sf): $json")
-    (trip, secs, inner)
-  }
-
-  /** Raw-CPU probe: wall seconds for a FIXED amount of sha256 chain
-    * hashing on `threads` threads (zero shared state, zero allocation
-    * churn). On a quiet machine this is constant to a few percent; any
-    * background load (another JVM, the driver's own oracle runs)
-    * inflates it immediately — which is exactly what poisoned the
-    * round-2 4N measurements.
-    *
-    * Noise characterization on this VM (ProbeStats): a single reading at
-    * 12M hashes/thread spreads ~25% around the quiet floor (upper tail
-    * only), min-of-2 back-to-back readings spread ~8-10%; the FIRST
-    * reading in a JVM runs ~30% hot from sha256 JIT warm-up. Hence
-    * [[probePoint]] (min-of-2) and the discarded warm-up read in main. */
-  def cpuProbe(threads: Int = 8, hashesPerThread: Int = 12000000): Double = {
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { t =>
-      val th = new Thread(() => {
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        var buf = Array.fill[Byte](64)(t.toByte)
-        var i = 0
-        while (i < hashesPerThread) { buf = md.digest(buf); i += 1 }
-      })
-      th.start(); th
-    }
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-  }
-
-  /** One probe POINT = min of two back-to-back readings: host steal is
-    * one-sided, and min-of-2 cuts the single-reading ~25% upper-tail
-    * spread to ~8-10% on back-to-back reads; across minutes the point
-    * level itself wanders ~±20% with the machine's frequency state. */
-  def probePoint(): Double = math.min(cpuProbe(), cpuProbe())
 
   /** Deterministic synthetic evidence for the AL-round timing: positive
     * rows read "<name> was born in <year>", negatives "<name> never
@@ -195,612 +32,4 @@ object Bench {
         SegMention(s"$i:$rOff:${rOff + 1}", rOff, rOff + 1, "DATE",
           year, year, false)))
   }
-
-  /** One active-learning round (C7 threshold folds + C4 fit + C5/C6
-    * rank/sort) on 200 labeled / 20k unlabeled evidences; returns
-    * seconds. The labeled set is annotation-scale by construction — the
-    * round's cost is dominated by the 5-fold CV fits and the sample
-    * scoring, which is what this number tracks. */
-  private[graft] def alRoundSecForDev(spark: SparkSession): Double =
-    alRoundSec(spark)
-
-  private def alRoundSec(spark: SparkSession): Double = {
-    import spark.implicits._
-    val labeled = spark.range(200)
-      .map(i => (alEvidence(i, i % 2 == 0), i % 2 == 0))
-      .toDF("e", "label")
-      .select(org.apache.spark.sql.functions.col("e.*"),
-        org.apache.spark.sql.functions.col("label"))
-    val unlabeled = spark.range(200, 20200)
-      .map(i => alEvidence(i, i % 2 == 0)).toDF()
-    labeled.count(); unlabeled.count() // materialize inputs pre-timer
-    val t0 = System.nanoTime()
-    val (_, questions) = ActiveLearningBenchShim.round(spark, labeled,
-      unlabeled)
-    questions.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val pipelineSf = sys.env.get("SPARK_GRAFT_PIPELINE_SF")
-      .map(_.toDouble).getOrElse(0.1)
-
-    // WALL-CLOCK BUDGET: the driver's bench slot is finite; rather than
-    // risk being killed mid-run (losing the whole artifact), the pair
-    // loop and the SF-linearity pair check elapsed time and degrade
-    // gracefully — fewer pairs / skipped SF pair, each explicitly
-    // visible in the artifact — when the budget would be exceeded.
-    val benchStart = System.nanoTime()
-    def elapsedSec(): Double = (System.nanoTime() - benchStart) / 1e9
-    // default sized from measured round-4 wall (~36 min for 3 pairs +
-    // SF pair on a quiet machine): the guard is a catastrophic-slowness
-    // fuse, not a tuning knob — under normal conditions nothing is cut
-    val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
-      .map(_.toDouble).getOrElse(3300.0)
-
-    // probe JIT warm-up (first sha256 reading in a JVM runs ~30% hot),
-    // then the session-start baseline — taken BEFORE any Spark work so
-    // part 1's own executor threads can never inflate it (the round-3
-    // defect: a 2.61 s "quiet baseline" measured while part 1 drained,
-    // above every in-pair reading, made the cleanliness bar vacuous)
-    cpuProbe()
-    val allProbeReadings = ArrayBuffer.empty[Double]
-    def probe(): Double = {
-      val p = probePoint()
-      allProbeReadings += p
-      p
-    }
-    probe()
-
-    // Cleanliness is judged against the SESSION FLOOR: the min over
-    // every probe point taken this run (the start baseline, in-pair
-    // brackets, skip probes). The floor can only tighten, so
-    // measurements are classified RETROACTIVELY at the end — a baseline
-    // that itself was measured under load (the round-3 defect) can no
-    // longer launder a loaded measurement as clean, because any later
-    // quieter reading exposes it.
-    def floor(): Double = allProbeReadings.min
-    // Bar calibration (measured, ProbeStats + dry runs): min-of-2 probe
-    // POINTS on an idle machine still spread ~±20% around the session
-    // min — the 8-thread turbo/frequency state depends on what the
-    // other 24 vcores were doing moments before, so the floor itself
-    // dips below typical-quiet. Genuine contention (another Spark JVM,
-    // the driver's oracle runs) inflates points 50-100%+. 1.4x the
-    // floor separates the two regimes; 1.15x flagged quiet pairs.
-    val CleanBar = 1.4
-    // probe points that gated a launch (headline / pair / SF attempt)
-    // and read loaded — kept as an audit trail in the artifact
-    val skippedProbes = ArrayBuffer.empty[Double]
-
-    // part 1: per-query timings on the driver tables. Cache state is
-    // reset between queries — a leaked persist from one query must not
-    // tax (or subsidize) the next one's number — but the release runs
-    // OUTSIDE the timed window (it is bench bookkeeping, not query cost).
-    //
-    // Round-5 defect fixed here: part 1 had NO probe defense at all —
-    // the driver's run published kg_triples at 37.7 s (isolated re-run:
-    // 4.3 s) with nothing flagging it. Now every query is bracketed by
-    // probe points (the closing point doubles as the next query's
-    // opening one), loaded queries are re-run in up to two retry sweeps,
-    // and the published number is the fastest CLEAN attempt when one
-    // exists, stamped per query in the artifact.
-    final case class QAttempt(secs: Double, pB: Double, pA: Double) {
-      def cleanAt(fl: Double): Boolean =
-        pB <= fl * CleanBar && pA <= fl * CleanBar
-    }
-    val spark1 = session(cpus)
-    val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val qAttempts = scala.collection.mutable.LinkedHashMap(
-      sortedQueries.map { case (n, _) => n -> ArrayBuffer.empty[QAttempt] }: _*)
-    def runQuery(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        pB: Double): Double = {
-      val t0 = System.nanoTime()
-      val secs =
-        try {
-          fn(spark1, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => (System.nanoTime() - t0) / 1e9 }
-      graft.pipeline.Caches.release()
-      spark1.catalog.clearCache()
-      val pA = probe()
-      qAttempts(name) += QAttempt(secs, pB, pA)
-      pA
-    }
-    var pCur = probe()
-    sortedQueries.foreach { case (name, fn) => pCur = runQuery(name, fn, pCur) }
-    // retry sweeps: re-run only the queries with no clean attempt yet
-    // (judged against the interim floor; the published stamp is
-    // re-classified retroactively against the final floor). Two sweeps
-    // bound the cost at ~2x part 1 even under persistent load.
-    var part1Sweeps = 0
-    while (part1Sweeps < 2 &&
-        sortedQueries.exists { case (n, _) =>
-          !qAttempts(n).exists(_.cleanAt(floor())) }) {
-      part1Sweeps += 1
-      Thread.sleep(20000)
-      var p = probe()
-      sortedQueries.foreach { case (name, fn) =>
-        if (!qAttempts(name).exists(_.cleanAt(floor())))
-          p = runQuery(name, fn, p)
-      }
-    }
-    // the AL-round number swung 31.6-71.2 s with host load across
-    // rounds; bracket it so history carries a defended reading
-    val pAlBefore = probe()
-    val alSec = try alRoundSec(spark1) catch { case _: Throwable => -1.0 }
-    val pAlAfter = probe()
-    spark1.stop()
-    // Part-1 stamps are classified against the PART-1-PHASE floor (the
-    // min over probe points taken while spark1 lived), not the session
-    // floor: part 1's points are read inside a JVM that is hosting and
-    // running Spark queries, a measurably warmer regime than the
-    // between-children gaps where the session floor is usually set —
-    // mixing the regimes flagged half of a quiet part 1 as LOADED in
-    // calibration. The phase floor cannot launder a fully-loaded part 1
-    // silently: the artifact publishes both floors plus an explicit
-    // part1_floor_inflated flag when the phase floor itself sits above
-    // the session bar.
-    val part1ProbeCount = allProbeReadings.length
-    def part1Floor(): Double = allProbeReadings.take(part1ProbeCount).min
-
-    // part 2a: headline throughput at full parallelism — probe-bracketed
-    // and retried-on-loaded like the scaling pairs (round-4 defect: the
-    // committed artifact published a 27.7k t/s headline measured under
-    // load — history held 83-88.5k quiet readings — with no flag)
-    val headlineMem = sys.env.getOrElse("SPARK_DRIVER_MEM", "16g")
-    final case class Headline(t: Long, s: Double, pB: Double, pA: Double,
-        inner: Seq[Double]) {
-      def cleanAt(fl: Double): Boolean =
-        (Seq(pB, pA) ++ inner).forall(_ <= fl * CleanBar)
-    }
-    val headlines = ArrayBuffer.empty[Headline]
-    def runHeadline(pb: Double): Unit = {
-      val (t, s, inner) = childRun(32, pipelineSf, timedRuns = 3, headlineMem)
-      allProbeReadings ++= inner
-      headlines += Headline(t, s, pb, probe(), inner)
-    }
-    // Round-5 defect fixed here: `hRetries < 2` with immediate relaunch
-    // exhausted in 40 s of a multi-minute load burst and COMMITTED a
-    // probe-flagged 5,985 t/s as the official number (clean reading 90
-    // min earlier: 39,139). Now the launch itself is probe-gated (a
-    // 30 s wait costs 1/4 of a wasted child run), the attempt/wait
-    // budgets are wide enough to sit out a burst, and cleanliness also
-    // sees the child's intra-leg probe points.
-    var hWaits = 0
-    var hRuns = 0
-    val part2Reserve = 1500.0 // pairs + SF-linearity room (see below)
-    while (!headlines.exists(_.cleanAt(floor())) && hRuns < 4 &&
-        hWaits < 8 && elapsedSec() + part2Reserve < budgetSec) {
-      val pb = probe()
-      if (pb > floor() * CleanBar) {
-        skippedProbes += pb; hWaits += 1; Thread.sleep(30000)
-      } else { hRuns += 1; runHeadline(pb) }
-    }
-    // budgets exhausted with nothing at all: one unconditional run — a
-    // LOADED-stamped number beats a hole in the artifact
-    if (headlines.isEmpty) runHeadline(probe())
-
-    // part 2b: the scaling pair. Why local[2] vs local[8]: a raw-CPU
-    // probe (multiprocess sha256, zero shared state) shows this VM's
-    // hypervisor caps 8->32-worker scaling at ~0.61 efficiency even for
-    // embarrassingly parallel work, while 2->8 sits at ~0.90-0.96 —
-    // 2 and 8 are the honest N/4N pair inside the hardware's linear
-    // region. SF sized so per-core compute dominates the few seconds of
-    // local-mode fixed overhead a real multi-executor run amortizes.
-    // SF=1.0 (not 0.5): the pipeline's serial floor (fixed per-run stage
-    // scheduling, corpus-gen warm paths, the final count) is ~10 s on
-    // this VM regardless of SF; at SF=0.5 that floor alone costs ~0.07
-    // efficiency (Amdahl), and host-steal noise eats the rest of the
-    // 0.8-gate margin. Doubling the parallel work halves the floor's
-    // weight — measured 0.867 at SF=1.0 vs 0.77 at SF=0.5, same code,
-    // same machine, back-to-back. 8g holds SF=1.0 comfortably (48.7k
-    // triples/s at 8 cores — the same per-core rate as SF=0.5).
-    val scalingSf = sys.env.get("SPARK_GRAFT_SCALING_SF")
-      .map(_.toDouble).getOrElse(1.0)
-    val nCores = sys.env.get("SPARK_GRAFT_SCALE_N").map(_.toInt).getOrElse(2)
-    val scaleMem = sys.env.getOrElse("SPARK_GRAFT_SCALE_MEM", "8g")
-    val pairsN = sys.env.get("SPARK_GRAFT_SCALE_PAIRS").map(_.toInt)
-      .getOrElse(3)
-
-    System.gc()
-    Thread.sleep(3000) // let part 2a's child fully exit
-
-    final case class ScalePair(sN: Double, s4N: Double,
-        pBefore: Double, pMid: Double, pAfter: Double,
-        inner: Seq[Double]) {
-      def eff: Double = (sN / s4N) / 4.0
-      def cleanAt(fl: Double): Boolean =
-        (Seq(pBefore, pMid, pAfter) ++ inner).forall(_ <= fl * CleanBar)
-    }
-    val pairs = ArrayBuffer.empty[ScalePair]
-    var scalingTriples = 0L
-    // a probe-skip costs ~25 s, a pair run ~6 min: budget them apart —
-    // at most one extra pair run beyond the target, at most 6 skips
-    var skips = 0
-    var pairRuns = 0
-    var lastPairSec = 0.0
-    // reserve room for the SF-linearity pair (~5 min measured)
-    val sfPairReserve = 300.0
-    def pairFits(): Boolean = {
-      // first pair always runs; later ones only when the budget holds
-      // the estimated cost (last pair's wall +20%) plus the SF reserve
-      pairRuns == 0 ||
-        elapsedSec() + lastPairSec * 1.2 + sfPairReserve < budgetSec
-    }
-    def runPair(pb: Double): Unit = {
-      val t0 = System.nanoTime()
-      pairRuns += 1
-      // run counts per leg follow the measured variance: the N leg's
-      // child-to-child spread is ~6% (min-of-2 suffices), the 4N leg's
-      // was ~40% in round 3 (steal hits the wide leg proportionally
-      // harder) — it gets 4 runs at a quarter the cost per run
-      val (t1, s1, i1) = childRun(nCores, scalingSf, timedRuns = 2, scaleMem)
-      // MID-pair probe: a steal burst confined to one leg's ~2-minute
-      // child is invisible to before/after brackets alone (the round-4
-      // failure mode: a 4N leg inflated 30-45% between two clean-reading
-      // brackets); sampling between the legs halves the blind window,
-      // and the children's own intra-leg points (between their timed
-      // runs) close most of the rest
-      val pm = probe()
-      val (_, s2, i2) = childRun(nCores * 4, scalingSf, timedRuns = 4, scaleMem)
-      val pa = probe()
-      allProbeReadings ++= i1; allProbeReadings ++= i2
-      scalingTriples = t1
-      pairs += ScalePair(s1, s2, pb, pm, pa, i1 ++ i2)
-      lastPairSec = (System.nanoTime() - t0) / 1e9
-    }
-    while (pairRuns < pairsN && skips < 6 && pairFits()) {
-      val pb = probe()
-      if (pb > floor() * CleanBar) {
-        // machine visibly loaded: don't burn a 6-minute pair on it —
-        // note the reading, wait for quiet, try again
-        skippedProbes += pb
-        skips += 1
-        Thread.sleep(20000)
-      } else runPair(pb)
-    }
-    // skip budget exhausted with no pair at all: a loaded number beats
-    // a crash — run one pair unconditionally (the probes around it will
-    // mark it LOADED and the artifact says so)
-    if (pairs.isEmpty) runPair(probe())
-    // one extra attempt if the retroactive classification left fewer
-    // than 2 clean pairs and the budget allows
-    if (pairs.count(_.cleanAt(floor())) < 2 && pairRuns <= pairsN &&
-        pairFits()) {
-      // probe-gated like the main loop: an extra pair launched into
-      // known load would be classified LOADED anyway and could cost the
-      // SF-linearity pair its budget for nothing
-      val pb = probe()
-      if (pb <= floor() * CleanBar) runPair(pb)
-      else { skippedProbes += pb; skips += 1 } // audit trail like the loop
-    }
-
-    // part 2c: SF-linearity pair at local[8]/12g. SF=1 and SF=2 run in
-    // ADJACENT children under the SAME protocol (best-of-2 timed runs,
-    // same heap, same cores), so their rate ratio isolates data-scale
-    // behavior from heap geometry and machine state. Round 3 instead
-    // compared a single sf2 run under load against the min of nine 4N
-    // runs and read a phantom 58%; cross-protocol comparisons also
-    // under-read (best-of-2 vs best-of-12 biases ~15-25% low). 12g, not
-    // 16g: ParallelGC slows as the heap grows — measured 113.8k
-    // triples/s at 12g vs 93.4k at 16g back-to-back — and 12g holds
-    // SF=2's working set comfortably.
-    //
-    // Round-4 defect fixed here: ONE attempt with only outer brackets
-    // published a LOADED 73% (a steal burst inside the ~90 s SF=2 child
-    // is invisible to before/after probes) while clean history readings
-    // contradicted each other. Now: a MID probe between the legs, and
-    // the same skip-the-attempt/retry-until-clean budget the scaling
-    // pairs get, classified retroactively against the final floor.
-    final case class SfAttempt(t1: Long, s1: Double, t2: Long, s2: Double,
-        pB: Double, pM: Double, pA: Double, inner: Seq[Double]) {
-      def linearity: Double = (t2 / s2) / (t1 / s1)
-      def cleanAt(fl: Double): Boolean =
-        (Seq(pB, pM, pA) ++ inner).forall(_ <= fl * CleanBar)
-    }
-    val sfAttempts = ArrayBuffer.empty[SfAttempt]
-    def runSfAttempt(pb: Double): Unit = {
-      val (t1, s1, i1) = childRun(8, 1.0, timedRuns = 2, mem = "12g")
-      val pm = probe()
-      val (t2, s2, i2) = childRun(8, 2.0, timedRuns = 2, mem = "12g")
-      val pa = probe()
-      allProbeReadings ++= i1; allProbeReadings ++= i2
-      sfAttempts += SfAttempt(t1, s1, t2, s2, pb, pm, pa, i1 ++ i2)
-    }
-    if (!sys.env.get("SPARK_GRAFT_SKIP_SF2").contains("1")) {
-      // Round-5 defect fixed here: ONE clean attempt was accepted as
-      // settled, and two "clean" runs of identical code printed 0.981
-      // and 0.634 two hours apart — a single attempt defended only by
-      // 3 outer probe points is not evidence. Now (a) each child emits
-      // intra-leg probe points between its timed runs, so a burst
-      // living inside one ~100 s leg is visible, and (b) the loop keeps
-      // going until TWO attempts are probe-clean (budget allowing);
-      // published legs are per-leg minima over the clean attempts.
-      var attempts = 0
-      var waits = 0
-      while (sfAttempts.count(_.cleanAt(floor())) < 2 &&
-          attempts < 4 && waits < 8 &&
-          elapsedSec() + sfPairReserve < budgetSec) {
-        val pb = probe()
-        if (pb > floor() * CleanBar) {
-          skippedProbes += pb; waits += 1; Thread.sleep(20000)
-        } else {
-          attempts += 1
-          try runSfAttempt(pb)
-          catch { case _: Throwable => () }
-        }
-      }
-      // attempt/wait budgets exhausted with zero attempts: run one
-      // unconditionally, even past the wall budget — a LOADED-stamped
-      // reading beats a silent hole in the artifact (the sf fields
-      // would otherwise publish as 0 with nothing saying why)
-      if (sfAttempts.isEmpty)
-        try runSfAttempt(probe())
-        catch { case _: Throwable => () }
-    }
-
-    val floorFinal = floor()
-    val part1FloorFinal = part1Floor()
-    val part1FloorInflated = part1FloorFinal > floorFinal * CleanBar
-    // retroactive part-1 classification against the part-1-phase floor:
-    // per query, the fastest CLEAN attempt when one exists (else the
-    // fastest attempt, stamped LOADED)
-    val qFinal = sortedQueries.map { case (name, _) =>
-      val as = qAttempts(name).toSeq
-      val clean = as.filter(_.cleanAt(part1FloorFinal))
-      val use = if (clean.nonEmpty) clean else as
-      (name, use.map(_.secs).min, clean.nonEmpty)
-    }
-    val results = qFinal.map { case (n, s, _) => n -> s }
-    // retroactive classification of the bracketed singletons
-    val headlineClean = headlines.exists(_.cleanAt(floorFinal))
-    val hUsable =
-      if (headlineClean) headlines.filter(_.cleanAt(floorFinal))
-      else headlines
-    val hBest = hUsable.minBy(_.s)
-    val nT = hBest.t
-    val sT = hBest.s
-    // AL runs inside spark1 — same regime as part 1, same floor
-    val alClean = alSec > 0 && pAlBefore <= part1FloorFinal * CleanBar &&
-      pAlAfter <= part1FloorFinal * CleanBar
-    val sfCleanAtt = sfAttempts.filter(_.cleanAt(floorFinal)).toSeq
-    val sfUsable = if (sfCleanAtt.nonEmpty) sfCleanAtt else sfAttempts.toSeq
-    val sf2Clean = sfCleanAtt.nonEmpty
-    // per-leg minima over the usable attempts: host steal only ever ADDS
-    // wall time, and both legs of every attempt ran under one protocol
-    val sf1T = sfUsable.headOption.map(_.t1).getOrElse(0L)
-    val sf2T = sfUsable.headOption.map(_.t2).getOrElse(0L)
-    val sf1S = if (sfUsable.nonEmpty) sfUsable.map(_.s1).min else 0.0
-    val sf2S = if (sfUsable.nonEmpty) sfUsable.map(_.s2).min else 0.0
-    val sf1Rate = if (sf1S > 0) sf1T / sf1S else 0.0
-    val sf2Rate = if (sf2S > 0) sf2T / sf2S else 0.0
-    val sfLinearity = if (sf1Rate > 0) sf2Rate / sf1Rate else 0.0
-    val cleanPairs = pairs.filter(_.cleanAt(floorFinal)).toSeq
-    val cleanN = cleanPairs.length
-    // zero clean pairs: publish the all-pair median rather than crash,
-    // but LABELED as undefended (headline line + scaling_defended flag)
-    val usable = if (cleanPairs.nonEmpty) cleanPairs else pairs.toSeq
-    // HEADLINE (gated) estimator: the MEDIAN over probe-defended clean
-    // pairs — each pair runs adjacent in time so slow drift cancels
-    // within it, and the median is robust to one steal burst that
-    // starts and ends inside a child (which brackets cannot see).
-    // Secondary estimators reported alongside: ratio of per-leg minima
-    // over ALL runs (tightest steal-free point estimate, host steal
-    // being one-sided, but not robust to an unlucky quiet-side draw),
-    // best pair, and ratio of per-leg medians.
-    val eff = median(usable.map(_.eff))
-    val sNmin = pairs.map(_.sN).min
-    val s4Nmin = pairs.map(_.s4N).min
-    val effMinRatio = (sNmin / s4Nmin) / 4.0
-    val effBest = pairs.map(_.eff).max
-    val sN = median(usable.map(_.sN))
-    val s4N = median(usable.map(_.s4N))
-    val effFromMedians = (sN / s4N) / 4.0
-    val tputN = scalingTriples / sNmin
-    val tput4N = scalingTriples / s4Nmin
-
-    def arr(xs: Seq[Double]): String =
-      xs.map(x => f"$x%.2f").mkString("[", ",", "]")
-    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val qsClean = qFinal.map { case (k, _, c) => s""""$k":$c""" }
-      .mkString("{", ",", "}")
-    val part1CleanN = qFinal.count(_._3)
-    val total = results.map(_._2).sum
-    val extra =
-      f""""queries_clean":$qsClean,"part1_clean_count":$part1CleanN,"part1_query_count":${qFinal.length},"part1_retry_sweeps":$part1Sweeps,"part1_floor":$part1FloorFinal%.2f,"part1_floor_inflated":$part1FloorInflated,"headline_waits":$hWaits,"sf_clean_attempts":${sfCleanAtt.length},"al_round_sec":$alSec%.2f,"al_round_clean":$alClean,"pipeline_sf":$pipelineSf,"pipeline_triples":$nT,"pipeline_sec":$sT%.2f,"triples_per_sec":${nT / sT}%.1f,"headline_clean":$headlineClean,"headline_attempts":${headlines.length},"headline_secs":${arr(headlines.toSeq.map(_.s))},"scaling_sf":$scalingSf,"scaling_triples":$scalingTriples,"scale_mem":"$scaleMem","n_cores":$nCores,"n4_cores":${nCores * 4},"sec_n_runs":${arr(pairs.toSeq.map(_.sN))},"sec_4n_runs":${arr(pairs.toSeq.map(_.s4N))},"probe_floor":$floorFinal%.2f,"probes_before":${arr(pairs.toSeq.map(_.pBefore))},"probes_mid":${arr(pairs.toSeq.map(_.pMid))},"probes_after":${arr(pairs.toSeq.map(_.pAfter))},"probes_skipped":${arr(skippedProbes.toSeq)},"probes_all":${arr(allProbeReadings.toSeq)},"clean_pairs":$cleanN,"scaling_defended":${cleanN > 0},"sec_n":$sNmin%.2f,"sec_4n":$s4Nmin%.2f,"sec_n_median":$sN%.2f,"sec_4n_median":$s4N%.2f,"triples_per_sec_n":$tputN%.1f,"triples_per_sec_4n":$tput4N%.1f,"eff_pairs":${arr(pairs.toSeq.map(_.eff))},"scaling_efficiency":$eff%.3f,"scaling_efficiency_clean_median":$eff%.3f,"scaling_efficiency_min_ratio":$effMinRatio%.3f,"scaling_efficiency_best":$effBest%.3f,"scaling_efficiency_from_medians":$effFromMedians%.3f,"sf1_8c_triples":$sf1T,"sf1_8c_sec":$sf1S%.2f,"sf1_8c_triples_per_sec":$sf1Rate%.1f,"sf2_triples":$sf2T,"sf2_sec":$sf2S%.2f,"sf2_triples_per_sec":$sf2Rate%.1f,"sf_linearity":$sfLinearity%.3f,"sf2_clean":$sf2Clean,"sf_attempts":${sfAttempts.length},"sf_attempt_linearity":${arr(sfAttempts.toSeq.map(_.linearity))}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$extra,"sf":"$sfDir"}""")
-
-    val pairRows = pairs.zipWithIndex.map { case (p, i) =>
-      f"| ${i + 1} | ${p.sN}%.2f | ${p.s4N}%.2f | ${p.eff}%.3f | ${p.pBefore}%.2f / ${p.pMid}%.2f / ${p.pAfter}%.2f | ${if (p.cleanAt(floorFinal)) "clean" else "LOADED"} |"
-    }.mkString("\n")
-    val md =
-      f"""# BENCH — measured baseline (graft KG pipeline)
-         |
-         |Protocol per BASELINE.md: full pipeline (extract -> link ->
-         |canonicalize -> materialize, incl. golden-corpus generation) on the
-         |deterministic synthetic source-code corpus. Correctness gate
-         |precedes: `sbt -batch test` (P/R = 1.0 vs golden triples) and the
-         |driver's own kg_triples oracle (pipeline output = golden set,
-         |hash-exact).
-         |
-         |## Headline throughput (SF=$pipelineSf%.2f)
-         |
-         |All part-2 numbers below are measured under the BENCH config:
-         |child JVMs with AQE off and plain shuffle joins (no broadcast
-         |hints). Round 5's stage-timed SF pairs showed the previously
-         |forced dimension broadcast was a scale trap: the canonical map
-         |grows with the corpus, and broadcasting it quadrupled the
-         |triple-join stage at SF=2 (rate ratio 0.87 vs 1.007 with
-         |shuffle joins, ~8%% cheaper at SF=1 but sub-linear). The
-         |library DEFAULT stays AQE-on + hint-free — AQE makes the
-         |broadcast call per join from runtime sizes, the right behavior
-         |on a real cluster.
-         |
-         |The headline is probe-bracketed and retried-on-loaded exactly
-         |like the scaling pairs — and since round 6 the launch itself is
-         |probe-gated (wait out load instead of burning a child run into
-         |it; $hWaits wait(s) this run) and the child emits INTRA-LEG
-         |probe points between its timed runs, so a burst confined to the
-         |child is visible too (${headlines.length} attempt(s); the row
-         |below is the fastest CLEAN attempt when one exists).
-         |
-         |Part 1 (the per-query suite feeding BENCH_r{N}.json) is probe
-         |-stamped since round 6 as well: every query is bracketed by
-         |probe points, queries with no clean attempt are re-run in up to
-         |two retry sweeps ($part1Sweeps used), and the artifact carries a
-         |per-query clean flag ($part1CleanN/${qFinal.length} clean this
-         |run) — a loaded reading can no longer pose as a regression (the
-         |round-5 defect: kg_triples published at 37.7 s under host load,
-         |4.3 s isolated, with nothing flagging it). Part-1 stamps
-         |classify against the PART-1-PHASE floor
-         |($part1FloorFinal%.2f s; session floor $floorFinal%.2f s) —
-         |its probes read inside the live in-session JVM, a measurably
-         |warmer regime than the between-children gaps that set the
-         |session floor — with `part1_floor_inflated`
-         |(${part1FloorInflated}) exposing a phase that was itself
-         |loaded.
-         |
-         || config | triples | seconds | triples/sec | status |
-         ||---|---|---|---|---|
-         || local[32], bench config | $nT | $sT%.2f | ${nT / sT}%.1f | ${if (headlineClean) "clean" else "LOADED"} |
-         |
-         |One active-learning round (C7 5-fold threshold + C4 fit + C5/C6
-         |rank, 200 labeled / 20k unlabeled): $alSec%.2f s
-         |(${if (alClean) "clean" else "LOADED"}, probe-bracketed).
-         |
-         |## Scaling N -> 4N (identical input, SF=$scalingSf%.2f)
-         |
-         |Pair = local[$nCores] vs local[${nCores * 4}]; child JVM per
-         |measurement (fresh heap + SparkContext), both levels at the same
-         |$scaleMem heap (conservative: a real 4N-executor cluster brings 4x
-         |aggregate memory), best-of-2 timed runs for the local[$nCores]
-         |child and best-of-4 for the local[${nCores * 4}] child (run
-         |counts follow the measured leg variance: ~6%% vs ~40%%), each
-         |after a warm-up run.
-         |
-         |Probe defense: a probe POINT is the min of two back-to-back
-         |fixed-work sha256 readings (8 threads, 12M hashes each; min-of-2
-         |because single readings spread ~25%% one-sided, min-of-2 ~8-10%%).
-         |The session FLOOR ($floorFinal%.2f s this run) is the min over
-         |every probe point of the whole bench — taken BEFORE any Spark
-         |work, around every pair, on every skip, and around the SF=2 run —
-         |so a start baseline measured under load cannot launder loaded
-         |pairs (the round-3 defect: a 2.61 s "baseline" read while part 1
-         |drained sat above every in-pair probe and the bar rejected
-         |nothing). A pair is CLEAN iff its before/MID/after
-         |points (mid = between the two legs — a burst confined to one
-         |leg's child is invisible to outer brackets alone) are all
-         |within 40%% of the FINAL floor, classified retroactively; probe
-         |points above the bar skip the pair and wait instead of measuring
-         |into load. (Bar calibration: idle-machine points still spread
-         |~±20%% around the session min — 8-thread turbo state depends on
-         |what the other vcores were doing — while genuine contention
-         |inflates points 50-100%%+; 1.4x separates the regimes.) ${skippedProbes.size} attempt(s) skipped as loaded.
-         |
-         || pair | local[$nCores] (s) | local[${nCores * 4}] (s) | efficiency | probes before/mid/after (s) | status |
-         ||---|---|---|---|---|---|
-         |@PAIRS@
-         |
-         |scaling efficiency (HEADLINE, gate >= 0.8) = median over the
-         |${if (cleanN > 0) s"$cleanN clean pair(s)" else
-            s"${pairs.length} pair(s), ALL LOADED — no probe-defended" +
-            " number was obtainable this run; treat as a lower bound"}
-         | = **$eff%.3f** (raw-CPU ceiling for this
-         |pair on this VM ~0.90-0.96; each pair runs adjacent in time so
-         |slow drift cancels inside it, and the median resists a steal
-         |burst that starts and ends inside one child, which brackets
-         |cannot see). Secondary estimators: ratio of per-leg minima over
-         |all runs $effMinRatio%.3f (tightest steal-free point estimate —
-         |host steal only ever ADDS wall time — but not robust to an
-         |unlucky draw), best pair $effBest%.3f, from level medians
-         |$effFromMedians%.3f. Throughput at the per-leg minima:
-         |${tputN}%.0f triples/s at local[$nCores], ${tput4N}%.0f at
-         |local[${nCores * 4}].
-         |
-         |## SF linearity (SF=1 vs SF=2, same protocol)
-         |
-         |Adjacent children at local[8]/12g, best-of-2 timed runs each —
-         |identical protocol on both legs, so the rate ratio isolates
-         |data-scale behavior from heap geometry and machine state. Each
-         |attempt is bracketed before/MID/after (the mid probe sits
-         |between the two legs — a steal burst inside one child is
-         |invisible to outer brackets alone, the round-4 defect that
-         |published a LOADED 73%%) AND each child emits intra-leg probe
-         |points between its timed runs (the round-5 defect: 3 outer
-         |points "defended" a 105 s leg and published 0.634 clean against
-         |0.981 on identical code). The loop retries until TWO attempts
-         |are probe-clean (budget allowing; ${sfCleanAtt.length} clean of
-         |${sfAttempts.length} this run) — one attempt is not evidence —
-         |and the published legs are per-leg minima over the clean
-         |attempts; classification is retroactive against the final
-         |floor.
-         |
-         || attempt | SF=1 (s) | SF=2 (s) | rate ratio | probes b/m/a (s) | status |
-         ||---|---|---|---|---|---|
-         |@SFATTEMPTS@
-         |
-         |Published legs = per-leg minima over the
-         |${if (sf2Clean) s"${sfCleanAtt.length} clean attempt(s)"
-            else s"${sfAttempts.length} attempt(s), ALL LOADED"}:
-         |
-         || config | triples | seconds | triples/sec | status |
-         ||---|---|---|---|---|
-         || SF=1.0, local[8], 12g | $sf1T | $sf1S%.2f | $sf1Rate%.1f | ${if (sf2Clean) "clean" else "LOADED"} |
-         || SF=2.0, local[8], 12g | $sf2T | $sf2S%.2f | $sf2Rate%.1f | ${if (sf2Clean) "clean" else "LOADED"} |
-         |
-         |SF=2 rate / SF=1 rate = **${sfLinearity * 100}%.0f%%** — a ratio
-         |in the ~85-115%% band means the pipeline is linear in data
-         |scale. (12g, not 16g: ParallelGC slows as the heap grows —
-         |113.8k vs 93.4k triples/s measured back-to-back; the round-3
-         |artifact's 58%% came from comparing a single run taken under
-         |load against the min of nine runs from a different protocol.)
-         |""".stripMargin.replace("@PAIRS@", pairRows)
-            .replace("@SFATTEMPTS@",
-              if (sfAttempts.isEmpty) "| - | - | - | - | - | skipped |"
-              else sfAttempts.zipWithIndex.map { case (a, i) =>
-                f"| ${i + 1} | ${a.s1}%.2f | ${a.s2}%.2f | ${a.linearity}%.3f | ${a.pB}%.2f / ${a.pM}%.2f / ${a.pA}%.2f | ${if (a.cleanAt(floorFinal)) "clean" else "LOADED"} |"
-              }.mkString("\n"))
-    // SPARK_GRAFT_BENCH_DRYRUN=1: print the JSON but do NOT touch the
-    // published artifacts (BENCH/BASELINE.md, history.jsonl, PLANS.md) —
-    // plumbing smoke-tests at toy SF would otherwise overwrite the real
-    // measured claims with meaningless numbers
-    if (sys.env.get("SPARK_GRAFT_BENCH_DRYRUN").contains("1")) return
-    try {
-      Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH/BASELINE.md"), md)
-      // append-only run history: successive runs stay visible instead of
-      // each overwriting the last one's story — run-to-run machine drift
-      // (the dominant noise source) is auditable from the history alone
-      val hist =
-        f"""{"ts":${System.currentTimeMillis / 1000},"scaling_efficiency":$eff%.3f,"min_ratio":$effMinRatio%.3f,"best":$effBest%.3f,"from_medians":$effFromMedians%.3f,"clean_pairs":$cleanN,"defended":${cleanN > 0},"eff_pairs":${arr(pairs.toSeq.map(_.eff))},"probe_floor":$floorFinal%.2f,"sec_n":$sNmin%.2f,"sec_4n":$s4Nmin%.2f,"sf_linearity":$sfLinearity%.3f,"sf2_clean":$sf2Clean,"sf_attempts":${sfAttempts.length},"sf_clean_attempts":${sfCleanAtt.length},"headline_tps":${nT / sT}%.1f,"headline_clean":$headlineClean,"part1_clean":"$part1CleanN/${qFinal.length}","al_round_sec":$alSec%.2f,"al_round_clean":$alClean,"dim_join":"auto"}""" + "\n"
-      Files.writeString(Paths.get("BENCH/history.jsonl"), hist,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      BenchHistory.rewrite()
-      // PLANS.md carries the same efficiency number between
-      // <!--EFF--> markers — overwrite it so the repo can never ship
-      // two contradictory scaling claims again
-      val plans = Paths.get("PLANS.md")
-      if (Files.exists(plans)) {
-        val txt = Files.readString(plans)
-        Files.writeString(plans, txt.replaceAll(
-          "<!--EFF-->[^<]*<!--/EFF-->",
-          f"<!--EFF-->$eff%.3f<!--/EFF-->"))
-      }
-    } catch { case _: Throwable => () }
-  }
-}
-
-/** Bridge so Bench can drive one AL round without depending on ml
-  * internals: kept tiny and side-effect-free. */
-private object ActiveLearningBenchShim {
-  def round(spark: SparkSession,
-      labeled: org.apache.spark.sql.DataFrame,
-      unlabeled: org.apache.spark.sql.DataFrame) =
-    graft.ml.ActiveLearning.process(spark, labeled, unlabeled,
-      tradeoff = Some(graft.ml.ActiveLearning.HighPrecisionTradeoff))
 }

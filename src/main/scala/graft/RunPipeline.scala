@@ -7,9 +7,15 @@ import graft.pipeline.Pipeline
 
 /** CLI entry: run the full KG pipeline on the synthetic corpus and report
   * triples + P/R vs the golden set. The spark-submit-shaped way into the
-  * library (also what Bench drives).
+  * library.
   *
-  * Usage: RunPipeline [sf] [cores] [outDir]
+  * Usage: RunPipeline [sf] [cores] [outDir | --bench]
+  *
+  * `--bench` times the pipeline without scoring it: one warm-up run, then
+  * the minimum of three timed runs. Comparing `RunPipeline 1.0 1 --bench`
+  * with `RunPipeline 1.0 4 --bench` gives the N→4N scaling efficiency.
+  * With `GRAFT_CHECKPOINT_DIR` set, the extract is checkpointed per batch
+  * there and a killed run resumes from the committed batches.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -21,67 +27,15 @@ object RunPipeline {
       .master(s"local[$cores]")
       .appName("graft-kg-pipeline")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // bench children run AQE-off (its per-stage re-planning is pure
-      // fixed latency at single-node scale) and instead force the
-      // dimension-side broadcast hints that AQE would have chosen
-      .config("graft.dim.broadcast",
-        sys.env.getOrElse("GRAFT_DIM_BROADCAST", "auto"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val benchOnly = outDir.contains("--bench")
-    // GRAFT_STAGE_TIMING=1: per-stage breakdown for SF-linearity
-    // diagnosis (extract vs link vs triple-join, plus the table sizes
-    // that could grow superlinearly). Forces per-stage actions, so the
-    // total differs from the fused single-job protocol — diagnostic
-    // only, never part of the timed bench numbers.
-    val stageTiming = sys.env.get("GRAFT_STAGE_TIMING").contains("1")
-    def once(runSf: Double): (Long, Double) = {
-      val t0 = System.nanoTime()
-      if (stageTiming) {
-        import spark.implicits._
-        val raw = CorpusGen.rawDocs(spark, runSf)
-        val gaz = CorpusGen.gazette(runSf)
-        val extracted = Pipeline.extract(spark, raw, gaz,
-          keepNegatives = false).persist()
-        val nDocs = extracted.count()
-        val tExtract = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val entities = extracted.flatMap(_.entities)
-          .groupBy($"entity_key")
-          .agg(org.apache.spark.sql.functions.first($"kind").as("kind"),
-            org.apache.spark.sql.functions.min($"alias").as("alias"),
-            org.apache.spark.sql.functions.max($"from_gazette")
-              .as("from_gazette")).persist()
-        val nEnt = entities.count()
-        val canonical = graft.canonical.Canonicalize
-          .components(spark, entities)
-          .withColumnRenamed("entity_key", "k").persist()
-        val nComp = canonical.count()
-        val tLink = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val preds = extracted.flatMap(_.predictions).persist()
-        val nPreds = preds.count()
-        val dim = (df: org.apache.spark.sql.DataFrame) =>
-          graft.textops.TextOps.dimSide(df)
-        val n = preds.toDF().filter($"answer")
-          .join(dim(canonical.withColumnRenamed("canonical", "subj")),
-            $"left_key" === $"k").drop("k")
-          .join(dim(canonical.withColumnRenamed("canonical", "obj")),
-            $"right_key" === $"k").drop("k")
-          .count()
-        val tJoin = (System.nanoTime() - t2) / 1e9
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"""{"stage_timing":true,"sf":$runSf,"docs":$nDocs,"entities":$nEnt,"components":$nComp,"predictions":$nPreds,"triples":$n,"extract_sec":$tExtract%.2f,"link_sec":$tLink%.2f,"join_sec":$tJoin%.2f,"total_sec":$secs%.2f}""")
-        extracted.unpersist(); entities.unpersist()
-        canonical.unpersist(); preds.unpersist()
-        graft.pipeline.Caches.release()
-        (n, secs)
-      } else {
+    if (outDir.contains("--bench")) {
+      def once(runSf: Double): (Long, Double) = {
+        val t0 = System.nanoTime()
         val (t, cl) = Pipeline.runWithCleanup(spark,
           CorpusGen.rawDocs(spark, runSf), CorpusGen.gazette(runSf))
         val n = t.count()
@@ -89,33 +43,13 @@ object RunPipeline {
         cl()
         (n, secs)
       }
-    }
-    if (benchOnly) {
-      // INTRA-LEG probe points (GRAFT_INNER_PROBES=1, set by Bench's
-      // child protocol): a fixed-work sha256 reading emitted between the
-      // child's Spark-idle moments (post-warm-up and after every timed
-      // run). Outer before/after brackets cannot see a steal burst that
-      // starts and ends inside a ~100 s child — the round-5 defect that
-      // published an SF linearity of 0.634 with "clean" outer probes
-      // against 0.981 on identical code. Emitted between runs (Spark
-      // idle), so they measure HOST load, not the child's own executors,
-      // and never sit inside a timed window.
-      val innerProbes = sys.env.get("GRAFT_INNER_PROBES").contains("1")
-      if (innerProbes) Bench.cpuProbe() // discard: first JVM reading runs ~30% hot (JIT)
-      def emitProbe(): Unit = if (innerProbes)
-        println(f"""{"probe_inner":${Bench.probePoint()}%.2f}""")
       // warm-up at a fraction of the target SF: the plan shape (and so
       // the generated codegen classes + JIT profile) is SF-independent,
       // so a small warm run buys full steady-state at a fraction of the
-      // cost; then MIN over timed runs — the sandbox VM shows +-30%
+      // cost; then MIN over timed runs — a shared host shows +-30%
       // wall-time noise; min isolates code cost from interference
       once(math.max(0.01, sf * 0.2))
-      val nTimed = sys.env.getOrElse("GRAFT_TIMED_RUNS", "3").toInt
-      val timed = (1 to nTimed).map { _ =>
-        emitProbe()
-        once(sf)
-      }
-      emitProbe()
+      val timed = (1 to 3).map(_ => once(sf))
       val nTriples = timed.head._1
       val secs = timed.map(_._2).min
       println(f"""{"sf":$sf,"cores":"$cores","docs":${CorpusGen.numDocs(sf)},"triples":$nTriples,"seconds":$secs%.2f,"triples_per_sec":${nTriples / secs}%.1f}""")

@@ -15,13 +15,18 @@ import graft.schema.Mention
   *
   *  2. [[Canonicalize.components]] — the cross-document canonicalization of
   *     the north star: connected components over alias/surface-form
-  *     similarity edges, as iterative DataFrame joins propagating
-  *     `min(component)` to fixpoint. The per-iteration aggregations are
-  *     algebraic (`min`), so Spark's partial aggregation (map-side combine)
-  *     absorbs alias-frequency skew before the shuffle; each iteration is
-  *     checkpointed to keep lineage flat at 10^12-file scale.
+  *     similarity edges. The [[Canonicalize.normalForms]] contract makes
+  *     every component exactly one (kind, folded-form) group, so the
+  *     components are one algebraic `min` aggregation on that hub key —
+  *     Spark's partial aggregation (map-side combine) absorbs
+  *     alias-frequency skew before the shuffle — plus one join back to
+  *     the entities.
   */
 object Canonicalize {
+
+  /** The case/separator fold: lowercase, then drop runs of `-`, `_` and
+    * whitespace. */
+  private val FoldPattern = "[-_\\s]+"
 
   /** Normalized surface forms of an alias; two entities sharing any form
     * are merged (same kind only). Forms: exact, lowercase, and a
@@ -29,21 +34,25 @@ object Canonicalize {
     * identifiers — the code-corpus analog of IEPy's surface-form identity
     * (`stanford_preprocess.py:285-304`).
     *
-    * HARD CONTRACT for [[components]]' fixed iteration count: every form
-    * here must be a refinement chain ENDING in the most-folded form —
-    * i.e. two aliases sharing ANY form also share the folded form (exact
-    * equality => lower equality => folded equality). That makes every
-    * component a star through its folded-form hub (diameter <= 2 entity
-    * hops), which 2 min-propagation rounds provably converge. Adding a
-    * normalizer that can CHAIN (edit-distance buckets, token-prefix
-    * families, embedding buckets) breaks the star shape: raise
-    * `iterations` AND run with `verifyConverged = true` in tests, or
-    * components silently under-merge. */
+    * HARD CONTRACT for [[components]]' hub reduction: every form here
+    * must be a refinement chain ENDING in the most-folded form — i.e. two
+    * aliases sharing ANY form also share the folded form (exact equality
+    * => lower equality => folded equality). That makes every component
+    * exactly one (kind, folded-form) group. A normalizer that can CHAIN
+    * (edit-distance buckets, token-prefix families, embedding buckets)
+    * breaks this: components silently under-merge, which
+    * `verifyConverged = true` (on in tests) catches. Such a normalizer
+    * needs iterative min-propagation reintroduced into [[components]];
+    * no parameter restores it. */
   def normalForms(alias: String): Seq[String] = {
     val lower = alias.toLowerCase
-    val folded = lower.replaceAll("[-_\\s]+", "")
+    val folded = lower.replaceAll(FoldPattern, "")
     Seq(alias, lower, folded).distinct
   }
+
+  /** The most-folded form of the `alias` column, as in [[normalForms]]. */
+  private def foldedExpr: org.apache.spark.sql.Column =
+    regexp_replace(lower(col("alias")), FoldPattern, "")
 
   /** [[normalForms]] as a pure Catalyst expression over an `alias`
     * column (codegen-friendly, no UDF) — the ONE definition both
@@ -51,9 +60,7 @@ object Canonicalize {
     * linker's touch detection use; if they ever diverged, the
     * incremental path would silently under-merge. */
   private[graft] def formsExpr: org.apache.spark.sql.Column =
-    array_distinct(array(
-      col("alias"), lower(col("alias")),
-      regexp_replace(lower(col("alias")), "[-_\\s]+", "")))
+    array_distinct(array(col("alias"), lower(col("alias")), foldedExpr))
 
   /** (entity_key, form) rows for an entity table — form keys include the
     * kind (never merge across kinds), exactly as [[components]] builds
@@ -75,23 +82,14 @@ object Canonicalize {
     * fold(exact) = fold(lower) = fold(folded) = the entity's folded
     * form) makes "shares a form with" TRANSITIVE through the folded
     * form: if a~b and b~c then fold(a) = fold(b) = fold(c). A component
-    * is therefore exactly a (kind, folded-form) group, and iterative
+    * is therefore exactly a (kind, folded-form) group, and
     * min-propagation collapses to ONE algebraic min aggregation on the
     * hub plus one dimension join to map entities to their hub's winner —
     * one shuffle of (hub, init) pairs with map-side combine (hot-alias
-    * skew is absorbed exactly as before: CanonicalizeSkewSpec), instead
-    * of two aggregation shuffles and up to two joins per propagation
-    * round. `verifyConverged = true` proves the reduction on the actual
-    * data: one full min-propagation round over ALL (entity, form) edges
-    * must be a fixpoint — a normalizer that chains beyond its folded
-    * form (edit-distance buckets, token prefixes) breaks the contract
-    * and trips the guard, same as it always did.
-    *
-    * `iterations == 0` keeps the generic un-propagated initial
-    * components (the guard's negative-case seam, used by PipelineSpec to
-    * prove the guard fires). */
+    * skew is absorbed: CanonicalizeSkewSpec). `verifyConverged = true`
+    * proves the reduction on the actual data with [[verifyFixpoint]]. */
   def components(spark: SparkSession, entities: DataFrame,
-      iterations: Int = 2, verifyConverged: Boolean = false): DataFrame = {
+      verifyConverged: Boolean = false): DataFrame = {
     import spark.implicits._
     // The component id IS the canonical pick: aggregate the minimum of
     // struct(gaz_rank, entity_key), so gazette-born readable keys win the
@@ -102,48 +100,40 @@ object Canonicalize {
       else lit(0)
     // kind is part of the hub key: never merge across kinds (reference
     // `stanford_preprocess.py:366-374`). concat_ws skips a null folded
-    // form, exactly as the old edge derivation's concat_ws did for a
-    // null alias's single null form.
-    val hub = concat_ws(" ", $"kind",
-      regexp_replace(lower($"alias"), "[-_\\s]+", ""))
-
-    val comp: DataFrame =
-      if (iterations >= 1) {
-        val keyed = entities.select($"entity_key", hub.as("hub"),
-          struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
-        // byHub is component-count-sized — far below the entity table.
-        // dimSide: AQE broadcasts it when measured small (default); the
-        // bench children run AQE-off and force the hint
-        // (graft.dim.broadcast).
-        val byHub = keyed.groupBy($"hub").agg(min($"init").as("component"))
-        keyed.join(graft.textops.TextOps.dimSide(byHub), "hub")
-          .select($"entity_key", $"component")
-      } else {
-        entities.select($"entity_key",
-          struct(gazRank.as("r"), $"entity_key".as("k")).as("component"))
-      }
-
-    if (verifyConverged) {
-      // one full min-propagation round over ALL (entity, form) edges must
-      // be a fixpoint — the guard for the refinement-chain contract at
-      // normalForms (costs one action; test/debug only)
-      val edges = entities
-        .select($"entity_key", $"kind", explode(formsExpr).as("f"))
-        .select($"entity_key", concat_ws(" ", $"kind", $"f").as("form"))
-      val frozen = comp.persist()
-      val byForm = edges.join(frozen, "entity_key")
-        .groupBy($"form").agg(min($"component").as("fcomp"))
-      val changed = edges.join(byForm, "form")
-        .groupBy($"entity_key").agg(min($"fcomp").as("next"))
-        .join(frozen, "entity_key")
-        .where($"next" =!= $"component").count()
-      require(changed == 0,
-        s"CC not converged after $iterations rounds: $changed components " +
-          "still moving — a normalizer violates the refinement-chain " +
-          "contract (see normalForms)")
-      frozen.unpersist()
-    }
+    // form, so a null alias hubs on its kind alone — the same key
+    // entityForms gives its single null form.
+    val keyed = entities.select($"entity_key",
+      concat_ws(" ", $"kind", foldedExpr).as("hub"),
+      struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
+    // byHub is component-count-sized — far below the entity table; AQE
+    // broadcasts it when measured small
+    val byHub = keyed.groupBy($"hub").agg(min($"init").as("component"))
+    val comp = keyed.join(byHub, "hub").select($"entity_key", $"component")
+    if (verifyConverged) verifyFixpoint(entities, comp)
     comp.select($"entity_key", $"component.k".as("canonical"))
+  }
+
+  /** The guard for the refinement-chain contract at [[normalForms]]:
+    * one full min-propagation round over ALL (entity, form) edges of
+    * `entities` must leave `comp` [entity_key, component] unchanged, i.e.
+    * every two entities sharing a form carry the same component. Any
+    * orderable `component` column works. Throws IllegalArgumentException
+    * otherwise. Costs one action; test/debug only. */
+  private[graft] def verifyFixpoint(entities: DataFrame,
+      comp: DataFrame): Unit = {
+    val edges = entityForms(entities)
+    val frozen = comp.persist()
+    val byForm = edges.join(frozen, "entity_key")
+      .groupBy(col("form")).agg(min(col("component")).as("fcomp"))
+    val changed = edges.join(byForm, "form")
+      .groupBy(col("entity_key")).agg(min(col("fcomp")).as("next"))
+      .join(frozen, "entity_key")
+      .where(col("next") =!= col("component")).count()
+    frozen.unpersist()
+    require(changed == 0,
+      s"CC not converged: $changed components still moving — a " +
+        "normalizer violates the refinement-chain contract " +
+        "(see normalForms)")
   }
 }
 

@@ -11,7 +11,9 @@ import org.apache.spark.sql.types._
 /** Index of the first position where two equal-length long arrays hold
   * the same value; -1 when no position matches. Value-identical to
   * `array_position(zip_with(a, b, _ === _), true) - 1` (under the
-  * equal-length, no-null preconditions the LSH band tables establish).
+  * equal-length precondition the LSH band tables establish). Arrays that
+  * may hold null elements (`containsNull = true`) are rejected at
+  * analysis: the compare loop reads elements without null checks.
   *
   * Why a custom Expression: the composed higher-order form
   * (`slice`/`zip_with`/`filter`) is CodegenFallback — interpreted
@@ -25,11 +27,11 @@ case class FirstEqualIndex(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"first_equal_index expects two array<bigint>, got " +
-          s"${l.catalogString}, ${r.catalogString}")
+        "first_equal_index expects two array<bigint> without null " +
+          s"elements (containsNull = false), got $l, $r")
     }
 
   override def dataType: DataType = IntegerType

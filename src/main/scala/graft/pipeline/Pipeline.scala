@@ -124,41 +124,6 @@ object Pipeline {
     DocBundle(doc, merged.toArray, segments.toArray)
   }
 
-  def preprocess(spark: SparkSession, raw: Dataset[RawDoc],
-      gazette: Seq[(String, String)]): Dataset[DocBundle] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(gazette)
-    raw.mapPartitions { it =>
-      val ner = cachedNer(bc)
-      it.map(preprocessDoc(_, ner))
-    }
-  }
-
-  /** Candidate generation + rule matching, fused per partition: the
-    * compiled rule NFAs are built once per partition (broadcast-equivalent
-    * of the reference's lru-cached compile, `rules_core.py:37-39`). */
-  def predict(spark: SparkSession, bundles: Dataset[DocBundle]): Dataset[Prediction] = {
-    import spark.implicits._
-    val relations = CodeRules.relations
-    bundles.mapPartitions { it =>
-      // compile each relation's NFA once per partition (the distributed
-      // analog of the reference's lru-cached compile, rules_core.py:37-39)
-      val cores = relations.map { case (rel, rules) =>
-        (rel, new Rules.RuleCore(rules, rel.leftKind, rel.rightKind))
-      }
-      it.flatMap { b =>
-        b.segments.iterator.flatMap { seg =>
-          cores.iterator.flatMap { case (rel, core) =>
-            Candidates.evidencesOf(seg, rel).iterator.map { ev =>
-              Prediction(ev.evidence_id, rel.name, ev.left_key, ev.right_key,
-                core.predict(Candidates.tokensToMatch(ev)))
-            }
-          }
-        }
-      }
-    }
-  }
-
   /** One doc's extraction output — only what downstream stages need.
     * Token arrays and segments stay inside the fused map and are never
     * cached or shuffled (at 100 TB the doc text never leaves the scan
@@ -272,17 +237,15 @@ object Pipeline {
 
   /** Canonical-key joins: positive predictions x canonical map ->
     * [subj, pred, obj, evidence_id]. The canonical map is
-    * distinct-entity-sized: dimSide leaves the join choice to AQE by
-    * default (broadcast when measured small, shuffle join at true
-    * scale) and lets AQE-off callers force the hint. */
+    * distinct-entity-sized and carries no hint: AQE picks the join
+    * (broadcast when measured small, shuffle join at true scale). */
   private[graft] def triplesOf(positivePreds: DataFrame,
       canonical: DataFrame): DataFrame = {
-    val dim = (df: DataFrame) => graft.textops.TextOps.dimSide(df)
     val cn = canonical.withColumnRenamed("entity_key", "k")
     positivePreds
-      .join(dim(cn.withColumnRenamed("canonical", "subj")),
+      .join(cn.withColumnRenamed("canonical", "subj"),
         col("left_key") === col("k")).drop("k")
-      .join(dim(cn.withColumnRenamed("canonical", "obj")),
+      .join(cn.withColumnRenamed("canonical", "obj"),
         col("right_key") === col("k")).drop("k")
       .select(col("subj"), col("relation").as("pred"), col("obj"),
         col("evidence_id"))

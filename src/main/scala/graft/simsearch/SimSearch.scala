@@ -172,16 +172,14 @@ object SimSearch {
     // broadcast hint (an explicit hint is mandatory for Spark — AQE will
     // not degrade it — so a corpus-sized embedding table would OOM): AQE
     // broadcasts while the side fits and falls back to a shuffle join on
-    // id at scale. See TextOps.dimSide.
+    // id at scale.
     val cand = a.join(b, Seq("band_idx", "bucket"))
       .where(col("a") < col("b") && firstMatchingBand)
       .select(col("a"), col("b"))
     val e = corpus.select(col("id"), col("embedding"))
     cand
-      .join(graft.textops.TextOps.dimSide(e.select(col("id").as("a"),
-        col("embedding").as("ea"))), "a")
-      .join(graft.textops.TextOps.dimSide(e.select(col("id").as("b"),
-        col("embedding").as("eb"))), "b")
+      .join(e.select(col("id").as("a"), col("embedding").as("ea")), "a")
+      .join(e.select(col("id").as("b"), col("embedding").as("eb")), "b")
       .select(col("a"), col("b"),
         round(cosine(col("ea"), col("eb")), 6).as("cos"))
       .where(col("cos") >= threshold)
@@ -255,10 +253,10 @@ object SimSearch {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
     val scored = cand
-      .join(graft.textops.TextOps.dimSide(queries.select(
-        col("id").as("query_id"), col("embedding").as("qe"))), "query_id")
-      .join(graft.textops.TextOps.dimSide(corpus.select(
-        col("id").as("neighbor_id"), col("embedding").as("ce"))),
+      .join(queries.select(
+        col("id").as("query_id"), col("embedding").as("qe")), "query_id")
+      .join(corpus.select(
+        col("id").as("neighbor_id"), col("embedding").as("ce")),
         "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qe"), col("ce")), 6).as("cos"))
@@ -285,10 +283,10 @@ object SimSearch {
       .where(col("query_id") =!= col("neighbor_id") && firstMatchingBand)
       .select(col("query_id"), col("neighbor_id"))
     val scored = cand
-      .join(graft.textops.TextOps.dimSide(queries.select(
-        col("id").as("query_id"), col("embedding").as("qe"))), "query_id")
-      .join(graft.textops.TextOps.dimSide(corpus.select(
-        col("id").as("neighbor_id"), col("embedding").as("ce"))),
+      .join(queries.select(
+        col("id").as("query_id"), col("embedding").as("qe")), "query_id")
+      .join(corpus.select(
+        col("id").as("neighbor_id"), col("embedding").as("ce")),
         "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qe"), col("ce")), 6).as("cos"))

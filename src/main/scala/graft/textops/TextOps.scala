@@ -17,22 +17,16 @@ import org.apache.spark.sql.functions._
   *    docs sharing a band key meet in one shuffle; candidate pairs are
   *    verified with exact Jaccard. Band keys are tiny strings, so the
   *    shuffle is O(docs * bands), not O(docs^2).
+  *  - dimension-side joins carry NO broadcast hint: AQE broadcasts a
+  *    side it measures under `spark.sql.adaptive.autoBroadcastJoinThreshold`
+  *    at runtime and falls back to a shuffle join otherwise, which is
+  *    the behavior a 100 TB corpus needs (an explicit broadcast() hint
+  *    is mandatory: AQE will NOT degrade it, so a corpus-sized
+  *    "dimension" OOMs the driver).
   */
 object TextOps {
 
   private def tokens(text: Column): Column = split(text, " ")
-
-  /** Dimension-side join hint. Default: NO hint — AQE broadcasts a side
-    * it measures under `spark.sql.adaptive.autoBroadcastJoinThreshold`
-    * at runtime and falls back to a shuffle join otherwise, which is the
-    * behavior a 100 TB corpus needs (an explicit broadcast() hint is
-    * mandatory: AQE will NOT degrade it, so a corpus-sized "dimension"
-    * OOMs the driver). `graft.dim.broadcast=force` restores the hint for
-    * callers that know the table is dimension-sized. */
-  private[graft] def dimSide(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.dim.broadcast")
-        .contains("force")) broadcast(df)
-    else df
 
   /** Scale-adaptive scan parallelism for compute-heavy narrow
     * operators: when the input's plan yields fewer partitions than the
@@ -209,7 +203,7 @@ object TextOps {
     *
     * Join shape: the token-set table is the dimension side (one row per
     * doc, vs O(near-dups) candidate pairs on the fact side). No explicit
-    * broadcast hint (see [[dimSide]]): AQE broadcasts it while it fits
+    * broadcast hint (see the object notes): AQE broadcasts it while it fits
     * and degrades to a shuffle join keyed on doc id on a corpus whose
     * distinct-doc table outgrows executor memory; the pair side then
     * still shuffles only (a, b, jaccard)-width rows, never two token
@@ -236,10 +230,10 @@ object TextOps {
           t => xxhash64(t))).as("toks"))
         .withColumn("n", size(col("toks"))))
     pairs
-      .join(dimSide(docTok.select(col("doc_id").as("a"),
-        col("toks").as("ta"), col("n").as("na"))), "a")
-      .join(dimSide(docTok.select(col("doc_id").as("b"),
-        col("toks").as("tb"), col("n").as("nb"))), "b")
+      .join(docTok.select(col("doc_id").as("a"),
+        col("toks").as("ta"), col("n").as("na")), "a")
+      .join(docTok.select(col("doc_id").as("b"),
+        col("toks").as("tb"), col("n").as("nb")), "b")
       .withColumn("ni",
         graft.functions.IntersectCountSorted.count(col("ta"), col("tb")))
       .select(col("a"), col("b"),
@@ -252,7 +246,7 @@ object TextOps {
     * [[jaccardOfPairs]] but over the set of w-token shingles instead of
     * unigrams — order-sensitive, so reshuffled near-dups score lower
     * than bag-of-words Jaccard. Same join shape: shingle sets pre-hashed
-    * to longs, dimension side AQE-decided (see [[dimSide]]), |union|
+    * to longs, dimension side AQE-decided (see the object notes), |union|
     * from sizes. */
   def ngramJaccardOfPairs(documents: DataFrame, pairs: DataFrame,
       w: Int = 3): DataFrame = {
@@ -269,10 +263,10 @@ object TextOps {
       spread(documents).select(col("doc_id").cast("long").as("doc_id"),
         shingles.as("sh")).withColumn("n", size(col("sh"))))
     pairs
-      .join(dimSide(docSh.select(col("doc_id").as("a"),
-        col("sh").as("sa"), col("n").as("na"))), "a")
-      .join(dimSide(docSh.select(col("doc_id").as("b"),
-        col("sh").as("sb"), col("n").as("nb"))), "b")
+      .join(docSh.select(col("doc_id").as("a"),
+        col("sh").as("sa"), col("n").as("na")), "a")
+      .join(docSh.select(col("doc_id").as("b"),
+        col("sh").as("sb"), col("n").as("nb")), "b")
       .withColumn("ni",
         graft.functions.IntersectCountSorted.count(col("sa"), col("sb")))
       .select(col("a"), col("b"),
@@ -290,7 +284,7 @@ object TextOps {
     * table carries both hashed sets per doc (derived in one scan,
     * persisted once) and the pair side shuffles once. Same join shape
     * as the single-measure passes: dimension side AQE-decided
-    * (see [[dimSide]]), |union| from sizes, pair rows id-width. */
+    * (see the object notes), |union| from sizes, pair rows id-width. */
   def jaccardBothOfPairs(documents: DataFrame, pairs: DataFrame,
       w: Int = 3): DataFrame = {
     val toks = tokens(col("text"))
@@ -306,12 +300,12 @@ object TextOps {
         .withColumn("nt", size(col("toks")))
         .withColumn("ns", size(col("sh"))))
     pairs
-      .join(dimSide(dims.select(col("doc_id").as("a"),
+      .join(dims.select(col("doc_id").as("a"),
         col("toks").as("ta"), col("sh").as("sa"),
-        col("nt").as("nta"), col("ns").as("nsa"))), "a")
-      .join(dimSide(dims.select(col("doc_id").as("b"),
+        col("nt").as("nta"), col("ns").as("nsa")), "a")
+      .join(dims.select(col("doc_id").as("b"),
         col("toks").as("tb"), col("sh").as("sb"),
-        col("nt").as("ntb"), col("ns").as("nsb"))), "b")
+        col("nt").as("ntb"), col("ns").as("nsb")), "b")
       .withColumn("nit",
         graft.functions.IntersectCountSorted.count(col("ta"), col("tb")))
       .withColumn("nis",

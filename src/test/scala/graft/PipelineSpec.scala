@@ -43,7 +43,7 @@ class PipelineSpec extends SparkSpec {
     assert(comp("x_1") != comp("x_1#m"))
   }
 
-  test("CC convergence guard: 2 rounds are a fixpoint; 0 rounds are caught") {
+  test("CC convergence guard: hub components are a fixpoint; singletons are caught") {
     import spark.implicits._
     val entities = Seq(
       ("a", "FUNCTION", "Foo_Bar", false),
@@ -57,10 +57,11 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(comp("a") == comp("b") && comp("b") == comp("c"))
     assert(comp("d") != comp("a"))
-    // and the guard actually fires when rounds < diameter
+    // and the guard actually fires on un-merged input: every entity its
+    // own (un-propagated) component
     val e = intercept[IllegalArgumentException] {
-      Canonicalize.components(spark, entities, iterations = 0,
-        verifyConverged = true).collect()
+      Canonicalize.verifyFixpoint(entities,
+        entities.select($"entity_key", $"entity_key".as("component")))
     }
     assert(e.getMessage.contains("not converged"))
   }

@@ -113,6 +113,15 @@ class SimSearchSpec extends SparkSpec {
         lit(0L)).cast("int") - 1).as("ref"))
       .as[(Int, Int)].collect()
     got.foreach { case (i, ref) => assert(i == ref, s"got $i want $ref") }
+    // a null element would read as 0 in the compare loop: arrays that may
+    // hold nulls fail analysis instead
+    val withNull = Seq((Seq(Some(1L), None), Seq(Some(1L), Some(2L))))
+      .toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      withNull.select(graft.functions.FirstEqualIndex.index($"a", $"b"))
+        .collect()
+    }
+    assert(e.getMessage.contains("first_equal_index"))
   }
 
   test("first-matching-band candidate dedup == banded-union DISTINCT") {
