@@ -41,15 +41,17 @@ object ActiveLearning {
       tradeoff: Option[(Double, Double)] = None,
       classifier: String = "svc",
       seed: Long = 42L): (State, DataFrame) = {
-    val classes =
-      labeled.select(countDistinct(col("label"))).head.getLong(0)
+    val stats = labeled
+      .agg(countDistinct(col("label")), count(lit(1))).head()
+    val classes = stats.getLong(0)
+    val nLabeled = stats.getLong(1)
     if (classes < 2)
       return (State(None, None, None), unlabeled.limit(0))
 
     // threshold CV and the final fit are independent — run them
     // concurrently (Spark schedules jobs from multiple driver threads
-    // freely; per-iteration job latency, not compute, dominates these
-    // tiny fits, so overlap nearly halves the round's wall time)
+    // freely): one call's few Spark jobs and driver-side LinearSVC
+    // optimizer steps overlap the other's
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -69,7 +71,6 @@ object ActiveLearning {
     // the fraction carries a +4*sigma cushion so limit(n) trims overshoot
     // and an undershoot below n is vanishingly rare (and harmless: the
     // reference only needs SOME random bounded subset to rank).
-    val nLabeled = labeled.count()
     val nUnlabeled = unlabeled.count()
     // n stays Long end-to-end: 10 * |labeled| can exceed Int.MaxValue
     // late in a campaign, and a .toInt wrap would turn the fraction
@@ -134,36 +135,36 @@ object ActiveLearning {
     // annotation-bounded, and leaving it on the session's default 32
     // shuffle partitions makes every one of the CV's many tiny jobs pay
     // 32 task launches for a handful of rows each.
-    val nRows = labeled.count()
+    val nRows = perClass.sum
     val parts = math.max(1L, math.min(nRows / 20000 + 1, 64L)).toInt
     val w = Window.partitionBy(col("label")).orderBy(col("evidence_id"))
     // eager localCheckpoint, not persist + count: the five fold fits
-    // issue hundreds of actions over this table, and each action
+    // and scorings issue ~80 actions over this table, and each action
     // re-analyzes the logical plan — a persist leaves the 13-column
     // feature expression tree in every downstream plan (cache
     // substitution happens at physical planning), while the checkpoint
-    // truncates it to a leaf. Labeled-set-sized by contract.
+    // truncates it to a leaf. Labeled-set-sized by contract; freed once
+    // the pooled margins are collected.
     val folded = graft.features.Features.withDefaultFeatures(labeled)
       .withColumn("fold", (row_number().over(w) - 1) % 5)
       .coalesce(parts)
-      .localCheckpoint()
-    // folds evaluated concurrently — Spark happily runs independent
-    // actions from multiple threads, and each fold's fit is tiny
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val pooled: Seq[(Double, Int)] = Await.result(
-      Future.sequence((0 until 5).map { k =>
-        Future {
-          val train = folded.filter(col("fold") =!= k)
-          val test = folded.filter(col("fold") === k)
-          val m = RelationClassifier.fit(train, classifier)
-          m.transform(test).select(col("margin"), col("label").cast("int"))
-            .collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq
-        }
-      }), Duration.Inf).flatten
-    // folded's checkpointed blocks are reclaimed by the ContextCleaner
-    // once unreferenced (annotation-scale table)
+    val pooled = graft.pipeline.Caches.checkpointed(folded) { folded =>
+      // folds evaluated concurrently — Spark happily runs independent
+      // actions from multiple threads, and each fold's fit is tiny
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      Await.result(
+        Future.sequence((0 until 5).map { k =>
+          Future {
+            val train = folded.filter(col("fold") =!= k)
+            val test = folded.filter(col("fold") === k)
+            val m = RelationClassifier.fit(train, classifier)
+            m.transform(test).select(col("margin"), col("label").cast("int"))
+              .collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq
+          }
+        }), Duration.Inf).flatten
+    }
     prCurveThreshold(pooled, tradeoff)
   }
 

@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.Transformer
-import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier, LinearSVC, LinearSVCModel, LogisticRegression, LogisticRegressionModel, RandomForestClassificationModel, RandomForestClassifier}
+import org.apache.spark.ml.classification.{DriverLinearSVC, GBTClassificationModel, GBTClassifier, LinearSVCModel, LogisticRegression, LogisticRegressionModel, RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StandardScaler, StandardScalerModel, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
@@ -23,10 +23,14 @@ import graft.features.Features
   * (`relation_extraction_classifier.py:12-18`; unknown names fail fast
   * the way its `_valid_classifiers[...]` KeyError does). Spark mapping:
   *
-  *  - svc        -> LinearSVC (hinge, the "svc" default of `iepy/defaults.py:7`)
-  *  - sgd        -> LinearSVC with SGDClassifier's regularization
-  *                  (hinge + alpha=1e-4, no feature re-standardization —
-  *                  inputs are already scaled)
+  *  - svc        -> LinearSVC (hinge, the "svc" default of `iepy/defaults.py:7`),
+  *                  trained in the driver by [[DriverLinearSVC]]: Spark's
+  *                  own hinge loss and OWLQN over the collected
+  *                  (annotation-bounded) labeled set, bit-identical to
+  *                  `LinearSVC.fit` on it, without a job per optimizer step
+  *  - sgd        -> the same driver-trained LinearSVC with SGDClassifier's
+  *                  regularization (hinge + alpha=1e-4, no feature
+  *                  re-standardization — inputs are already scaled)
   *  - lr         -> LogisticRegression (extension; the north star names LR)
   *  - randomforest -> RandomForestClassifier, margin = P(pos) - 0.5
   *  - adaboost   -> GBTClassifier (Spark's native boosted ensemble;
@@ -171,81 +175,94 @@ object RelationClassifier {
     require(classes == 2,
       s"Can't train classifier with $classes classes; need 2")
     // Right-size TRAINING partitioning to the data: the labeled set is
-    // human-annotation-bounded, while the iterative optimizers schedule
-    // one job per L-BFGS step — at the session's default parallelism a
-    // 200-row fit measured 5x slower than single-partition (50-150 tiny
-    // jobs x 8 near-empty tasks of pure scheduling overhead). ~20k rows
-    // per training partition keeps big label sets parallel; scoring
-    // (transform) keeps the caller's partitioning untouched.
+    // human-annotation-bounded. ~20k rows per training partition keeps
+    // big label sets parallel for the stages Spark trains (vectorizers,
+    // scaler, and the lr/randomforest/adaboost final stages, whose
+    // optimizers schedule one job per step: at the session's default
+    // parallelism each of those jobs paid 8 near-empty tasks). Below the
+    // cut the table is one partition, which the driver-side LinearSVCs
+    // fit bit-identically to Spark's. Scoring (transform) keeps the
+    // caller's partitioning untouched.
     val trainParts = math.max(1L, math.min(nRows / 20000 + 1, 64L)).toInt
-    var df = featurized(labeled.coalesce(trainParts))
+    val input = featurized(labeled.coalesce(trainParts))
       .withColumn("y", col("label").cast("double"))
     // TRUNCATE the logical plan (eager localCheckpoint), don't just
-    // cache it: a fit issues ~60 actions (4 CountVectorizer fits, one
-    // L-BFGS job per SVC iteration, scaler, final stage), and EVERY
-    // action re-analyzes/re-optimizes the logical plan — persist()
-    // substitutes the cache only at physical planning, so the 13-column
-    // feature expression tree still dominated each action's driver-side
-    // cost. The checkpointed table is labeled-set-sized by contract;
-    // lost-executor recompute safety is irrelevant at that size (the
-    // fit simply fails and is retried by its caller).
-    df = df.localCheckpoint()
-    // vocab cap: a memory guard, not a semantic knob — annotation-bounded
-    // label sets sit far below it; a corpus-sized vocabulary would blow
-    // the driver-held CountVectorizerModel otherwise.
-    // The four vocabulary fits are independent single-job actions over
-    // the checkpointed table — run them concurrently (guide §2.6:
-    // overlap independent jobs); each fit's vocabulary and ordering is
-    // computed exactly as before.
-    val vectorizers = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val dfRef = df
-      Await.result(Future.sequence(bagCols.map { c =>
-        Future {
-          new CountVectorizer().setInputCol(c).setOutputCol(c + "_vec")
-            .setBinary(true).setVocabSize(1 << 16).fit(dfRef)
-        }
-      }), Duration.Inf)
+    // cache it: the vectorizer fits and the training-row collects each
+    // re-analyze/re-optimize the logical plan — persist() substitutes
+    // the cache only at physical planning, so the 13-column feature
+    // expression tree would stay in every action's driver-side cost.
+    // Both checkpoints are labeled-set-sized by contract and freed
+    // before fit returns; lost-executor recompute safety is irrelevant
+    // at that size (the fit simply fails and is retried by its caller).
+    graft.pipeline.Caches.checkpointed(input) { checkpointed =>
+      var df = checkpointed
+      // vocab cap: a memory guard, not a semantic knob — annotation-bounded
+      // label sets sit far below it; a corpus-sized vocabulary would blow
+      // the driver-held CountVectorizerModel otherwise.
+      // The four vocabulary fits are independent single-job actions over
+      // the checkpointed table — run them concurrently (guide §2.6:
+      // overlap independent jobs); each fit's vocabulary and ordering is
+      // computed exactly as before.
+      val vectorizers = {
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.duration.Duration
+        Await.result(Future.sequence(bagCols.map { c =>
+          Future {
+            new CountVectorizer().setInputCol(c).setOutputCol(c + "_vec")
+              .setBinary(true).setVocabSize(1 << 16).fit(checkpointed)
+          }
+        }), Duration.Inf)
+      }
+      vectorizers.foreach(v => df = v.transform(df))
+      df = new VectorAssembler()
+        .setInputCols(bagCols.map(_ + "_vec").toArray)
+        .setOutputCol("sparse_features").transform(df)
+      // tol 1e-3 mirrors the reference's own optimizer defaults (sklearn
+      // SGDClassifier tol=1e-3 for the inner ClassifierAsFeature, SVC
+      // tol=1e-3 for the final stage); Spark's 1e-6 default is stricter
+      // than the semantics being mirrored and costs ~2x the OWLQN
+      // iterations for margins identical to 3+ decimals on
+      // annotation-scale data
+      val innerSvc = new DriverLinearSVC().setFeaturesCol("sparse_features")
+        .setLabelCol("y").setPredictionCol("svcPrediction")
+        .setRawPredictionCol("svcRaw")
+        .setMaxIter(50).setRegParam(0.01).setTol(1e-3).fit(df)
+      df = innerSvc.transform(df)
+        .withColumn("inner_margin",
+          vector_to_array(col("svcRaw")).getItem(1))
+        .drop("svcRaw", "svcPrediction")
+      df = new VectorAssembler()
+        .setInputCols((denseCols :+ "inner_margin").toArray)
+        .setOutputCol("dense_features").transform(df)
+      // second truncation point: the scaler fit and the final-stage fit
+      // both action over this subtree, whose plan now carries the four
+      // vectorizer transforms + the inner-SVC scoring
+      graft.pipeline.Caches.checkpointed(df) { dense =>
+        val scaler = new StandardScaler().setInputCol("dense_features")
+          .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
+          .fit(dense)
+        Model(vectorizers, innerSvc, scaler, classifier,
+          finalStage(scaler.transform(dense), classifier))
+      }
     }
-    vectorizers.foreach(v => df = v.transform(df))
-    df = new VectorAssembler()
-      .setInputCols(bagCols.map(_ + "_vec").toArray)
-      .setOutputCol("sparse_features").transform(df)
-    // tol 1e-3 mirrors the reference's own optimizer defaults (sklearn
-    // SGDClassifier tol=1e-3 for the inner ClassifierAsFeature, SVC
-    // tol=1e-3 for the final stage); Spark's 1e-6 default is stricter
-    // than the semantics being mirrored and costs ~2x the L-BFGS
-    // iterations — each a scheduled job — for margins identical to 3+
-    // decimals on annotation-scale data
-    val innerSvc = new LinearSVC().setFeaturesCol("sparse_features")
-      .setLabelCol("y").setPredictionCol("svcPrediction")
-      .setRawPredictionCol("svcRaw")
-      .setMaxIter(50).setRegParam(0.01).setTol(1e-3).fit(df)
-    df = innerSvc.transform(df)
-      .withColumn("inner_margin",
-        vector_to_array(col("svcRaw")).getItem(1))
-      .drop("svcRaw", "svcPrediction")
-    df = new VectorAssembler()
-      .setInputCols((denseCols :+ "inner_margin").toArray)
-      .setOutputCol("dense_features").transform(df)
-    // second truncation point: the scaler fit and the final-stage fit
-    // both action over this subtree, whose plan now carries the four
-    // vectorizer transforms + the inner-SVC scoring
-    df = df.localCheckpoint()
-    val scaler = new StandardScaler().setInputCol("dense_features")
-      .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
-      .fit(df)
-    df = scaler.transform(df)
-    val finalStage: FinalStage = classifier match {
+  }
+
+  /** Fits the final decision stage on the scaled training table. The
+    * LinearSVCs train in the driver over the collected table
+    * ([[DriverLinearSVC]]), bounded like the knn stage by the annotation
+    * budget. The Spark-trained lr/randomforest models keep Spark's
+    * training summary, a lazy plan over the freed checkpoint that
+    * nothing here reads. */
+  private def finalStage(df: DataFrame, classifier: String): FinalStage =
+    classifier match {
       case "lr" =>
         MlStage(new LogisticRegression().setFeaturesCol("scaled_features")
           .setLabelCol("y").setPredictionCol("finalPred")
           .setRawPredictionCol("finalRaw").setProbabilityCol("finalProb")
           .setMaxIter(100).fit(df), fromProbability = false)
       case "sgd" =>
-        MlStage(new LinearSVC().setFeaturesCol("scaled_features")
+        MlStage(new DriverLinearSVC().setFeaturesCol("scaled_features")
           .setLabelCol("y").setPredictionCol("finalPred")
           .setRawPredictionCol("finalRaw")
           .setMaxIter(100).setRegParam(1e-4).setStandardization(false)
@@ -270,16 +287,12 @@ object RelationClassifier {
           .map(r => (r.getAs[Vector](0), r.getDouble(1)))
         KnnStage(train, k = 5)
       case _ =>
-        MlStage(new LinearSVC().setFeaturesCol("scaled_features")
+        MlStage(new DriverLinearSVC().setFeaturesCol("scaled_features")
           .setLabelCol("y").setPredictionCol("finalPred")
           .setRawPredictionCol("finalRaw")
           .setMaxIter(100).setRegParam(0.01).setTol(1e-3).fit(df),
           fromProbability = false)
     }
-    // the checkpointed RDD blocks are unreferenced once fit returns —
-    // the ContextCleaner reclaims them (annotation-scale tables)
-    Model(vectorizers, innerSvc, scaler, classifier, finalStage)
-  }
 
   /** S7 classifier persistence (refuse-overwrite semantics,
     * `active_learning_core.py:60-75`). */

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for operator-internal persisted intermediates.
   *
@@ -30,5 +31,23 @@ object Caches {
   def release(): Unit = {
     var df = registered.poll()
     while (df != null) { df.unpersist(false); df = registered.poll() }
+  }
+
+  /** Runs `body` over an eager `localCheckpoint()` of `df` and frees the
+    * checkpoint's blocks when `body` returns or throws. For a table that
+    * many actions read within one call (the checkpoint truncates the
+    * logical plan each action re-analyzes). `body`'s result must not be
+    * a lazy plan over the checkpoint: once freed, the blocks cannot be
+    * recomputed. */
+  def checkpointed[T](df: DataFrame)(body: DataFrame => T): T = {
+    val cp = df.localCheckpoint()
+    try body(cp)
+    finally cp match {
+      case d: classic.Dataset[_] => d.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+      case _ => ()
+    }
   }
 }

@@ -2,29 +2,22 @@ package graft
 
 import graft.ml.{ActiveLearning, RelationClassifier}
 import graft.schema.Evidence
+import org.apache.spark.graftbridge.JobCounter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Classifier (C1/C2), threshold estimation (C7) and the active-learning
   * round (C3-C9) — behavior mirrored from
   * `/root/reference/iepy/extraction/active_learning_core.py` and
   * `relation_extraction_classifier.py`. */
 class MlSpec extends SparkSpec {
+  import MlSpec.{negEv, posEv}
 
-  private val people = Seq("John", "Mary", "Carl", "Anna", "Peter", "Rosa",
-    "Tim", "Vera", "Hugo", "Lena", "Omar", "Ruth")
+  private def labeledDf(n: Int) = MlSpec.labeledDf(spark, n)
 
-  private def posEv(i: Int): Evidence = MarkupDsl.evidence(
-    s"{${people(i)}|person**} was born in {1${900 + i}|date*} in town")
-  private def negEv(i: Int): Evidence = MarkupDsl.evidence(
-    s"{${people(i)}|person**} never visited friends in {1${900 + i}|date*} sadly")
-
-  private def labeledDf(n: Int) = {
-    import spark.implicits._
-    val rows = (0 until n).map(i => (posEv(i), true)) ++
-      (0 until n).map(i => (negEv(i), false))
-    rows.map { case (e, l) => (e, l) }.toDF("e", "label")
-      .select(org.apache.spark.sql.functions.col("e.*"),
-        org.apache.spark.sql.functions.col("label"))
-  }
+  // Measured on labeledDf(8): 16 jobs per fit and 89 per threshold CV;
+  // Spark-trained LinearSVCs took 676 and 3,061.
+  private val MaxFitJobs = 40
+  private val MaxCvJobs = 200
 
   test("classifier fit/transform separates train data (C1/C2)") {
     val df = labeledDf(8)
@@ -98,8 +91,31 @@ class MlSpec extends SparkSpec {
   test("threshold estimation needs >= 5 per class (C7/C10)") {
     assert(ActiveLearning.estimateThreshold(spark, labeledDf(4),
       ActiveLearning.HighPrecisionTradeoff).isEmpty)
+    // the fit's and the CV's checkpointed tables are freed on return
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    RelationClassifier.fit(labeledDf(8))
     assert(ActiveLearning.estimateThreshold(spark, labeledDf(8),
       ActiveLearning.HighPrecisionTradeoff).isDefined)
+    assert(spark.sparkContext.getPersistentRDDs.size <= persisted)
+  }
+
+  test("fit and threshold CV schedule a bounded number of Spark jobs") {
+    // The LinearSVC optimizers run in the driver: a fit is a dozen-odd
+    // jobs (stats, checkpoints, vocabularies, scaler, training-row
+    // collects) and the CV five fits plus their scorings. Spark's own
+    // LinearSVC schedules one job per loss evaluation, so a change that
+    // puts an optimizer step back on Spark fails this by far.
+    val df = labeledDf(8)
+    val (_, fitJobs) = JobCounter.count(spark.sparkContext) {
+      RelationClassifier.fit(df)
+    }
+    val (_, cvJobs) = JobCounter.count(spark.sparkContext) {
+      ActiveLearning.estimateThreshold(spark, df,
+        ActiveLearning.HighPrecisionTradeoff)
+    }
+    info(s"fit: $fitJobs jobs, threshold CV: $cvJobs jobs")
+    assert(fitJobs <= MaxFitJobs, s"fit ran $fitJobs jobs")
+    assert(cvJobs <= MaxCvJobs, s"threshold CV ran $cvJobs jobs")
   }
 
   test("process round: questions sorted by |margin| (C5/C6)") {
@@ -146,5 +162,27 @@ class MlSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(a.keys == b.keys)
     a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-9) }
+  }
+}
+
+/** Labeled evidences: "<name> was born in <year>" positives and
+  * "<name> never visited friends in <year>" negatives. */
+object MlSpec {
+  private val people = Seq("John", "Mary", "Carl", "Anna", "Peter", "Rosa",
+    "Tim", "Vera", "Hugo", "Lena", "Omar", "Ruth")
+
+  def posEv(i: Int): Evidence = MarkupDsl.evidence(
+    s"{${people(i)}|person**} was born in {1${900 + i}|date*} in town")
+  def negEv(i: Int): Evidence = MarkupDsl.evidence(
+    s"{${people(i)}|person**} never visited friends in {1${900 + i}|date*} sadly")
+
+  /** n positives then n negatives, with a boolean `label`. */
+  def labeledDf(spark: SparkSession, n: Int): DataFrame = {
+    import spark.implicits._
+    val rows = (0 until n).map(i => (posEv(i), true)) ++
+      (0 until n).map(i => (negEv(i), false))
+    rows.map { case (e, l) => (e, l) }.toDF("e", "label")
+      .select(org.apache.spark.sql.functions.col("e.*"),
+        org.apache.spark.sql.functions.col("label"))
   }
 }
