@@ -143,23 +143,32 @@ object RelationClassifier {
     else Features.withDefaultFeatures(evidence)
   }
 
-  /** Shared featurization: bags -> vectors -> inner margin -> dense
-    * assembly -> scaling. */
-  private def scaledFeatures(m: Model, evidence: DataFrame): DataFrame = {
-    var df = featurized(evidence)
-    m.vectorizers.foreach(v => df = v.transform(df))
-    df = new VectorAssembler()
+  /** Featurization step 1, shared by [[fit]] and scoring: bags ->
+    * binary vectors -> `sparse_features`. */
+  private def sparseFeatures(vectorizers: Seq[CountVectorizerModel],
+      df: DataFrame): DataFrame =
+    new VectorAssembler()
       .setInputCols(bagCols.map(_ + "_vec").toArray)
-      .setOutputCol("sparse_features").transform(df)
-    df = m.innerSvc.transform(df)
-      .withColumn("inner_margin",
-        vector_to_array(col("svcRaw")).getItem(1))
-      .drop("svcRaw", "svcPrediction")
-    df = new VectorAssembler()
+      .setOutputCol("sparse_features")
+      .transform(vectorizers.foldLeft(df)((d, v) => v.transform(d)))
+
+  /** Featurization step 2, shared by [[fit]] and scoring: the inner SVC's
+    * margin (`inner_margin`) assembled with the dense features ->
+    * `dense_features`. */
+  private def denseFeatures(innerSvc: LinearSVCModel,
+      df: DataFrame): DataFrame =
+    new VectorAssembler()
       .setInputCols((denseCols :+ "inner_margin").toArray)
-      .setOutputCol("dense_features").transform(df)
-    m.scaler.transform(df)
-  }
+      .setOutputCol("dense_features")
+      .transform(innerSvc.transform(df)
+        .withColumn("inner_margin",
+          vector_to_array(col("svcRaw")).getItem(1))
+        .drop("svcRaw", "svcPrediction"))
+
+  /** Scoring featurization: both steps, then scaling. */
+  private def scaledFeatures(m: Model, evidence: DataFrame): DataFrame =
+    m.scaler.transform(denseFeatures(m.innerSvc,
+      sparseFeatures(m.vectorizers, featurized(evidence))))
 
   /** Fit on labeled evidence (boolean `label` column); requires both
     * classes present (reference `active_learning_core.py:127-134`). */
@@ -195,7 +204,6 @@ object RelationClassifier {
     // before fit returns; lost-executor recompute safety is irrelevant
     // at that size (the fit simply fails and is retried by its caller).
     graft.pipeline.Caches.checkpointed(input) { checkpointed =>
-      var df = checkpointed
       // vocab cap: a memory guard, not a semantic knob — annotation-bounded
       // label sets sit far below it; a corpus-sized vocabulary would blow
       // the driver-held CountVectorizerModel otherwise.
@@ -214,10 +222,7 @@ object RelationClassifier {
           }
         }), Duration.Inf)
       }
-      vectorizers.foreach(v => df = v.transform(df))
-      df = new VectorAssembler()
-        .setInputCols(bagCols.map(_ + "_vec").toArray)
-        .setOutputCol("sparse_features").transform(df)
+      val sparse = sparseFeatures(vectorizers, checkpointed)
       // tol 1e-3 mirrors the reference's own optimizer defaults (sklearn
       // SGDClassifier tol=1e-3 for the inner ClassifierAsFeature, SVC
       // tol=1e-3 for the final stage); Spark's 1e-6 default is stricter
@@ -227,18 +232,12 @@ object RelationClassifier {
       val innerSvc = new DriverLinearSVC().setFeaturesCol("sparse_features")
         .setLabelCol("y").setPredictionCol("svcPrediction")
         .setRawPredictionCol("svcRaw")
-        .setMaxIter(50).setRegParam(0.01).setTol(1e-3).fit(df)
-      df = innerSvc.transform(df)
-        .withColumn("inner_margin",
-          vector_to_array(col("svcRaw")).getItem(1))
-        .drop("svcRaw", "svcPrediction")
-      df = new VectorAssembler()
-        .setInputCols((denseCols :+ "inner_margin").toArray)
-        .setOutputCol("dense_features").transform(df)
+        .setMaxIter(50).setRegParam(0.01).setTol(1e-3).fit(sparse)
       // second truncation point: the scaler fit and the final-stage fit
       // both action over this subtree, whose plan now carries the four
       // vectorizer transforms + the inner-SVC scoring
-      graft.pipeline.Caches.checkpointed(df) { dense =>
+      graft.pipeline.Caches.checkpointed(
+          denseFeatures(innerSvc, sparse)) { dense =>
         val scaler = new StandardScaler().setInputCol("dense_features")
           .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
           .fit(dense)

@@ -220,10 +220,6 @@ object Pipeline {
       () => { extracted.unpersist(); cleanup() }, trunc)
   }
 
-  /** Link + canonicalize + triple assembly over extraction output —
-    * shared by the in-memory ([[runWithMetrics]]), checkpointed
-    * ([[runCheckpointed]]) and streaming (foreachBatch re-link over the
-    * accumulated extract table) paths. */
   /** Global entity dedupe (one row per entity_key) — THE aggregation
     * semantics for entity tables; the streaming incremental linker
     * merges state + batch with the same aggregate, so any accumulation
@@ -251,6 +247,12 @@ object Pipeline {
         col("evidence_id"))
   }
 
+  /** Link + canonicalize + triple assembly over extraction output —
+    * shared by the in-memory ([[runWithMetrics]]) and checkpointed
+    * ([[runCheckpointed]]) paths. The streaming path assembles its
+    * triples from the same pieces ([[dedupeEntities]], [[triplesOf]],
+    * `Canonicalize`) directly, since it merges them with carried
+    * state. */
   private[graft] def assembleTriples(spark: SparkSession,
       extracted: Dataset[DocExtract]): (DataFrame, () => Unit) = {
     import spark.implicits._

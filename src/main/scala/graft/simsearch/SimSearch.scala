@@ -11,12 +11,18 @@ import graft.textops.TextOps.spread
   *   baseline. All arithmetic in double with left-to-right accumulation
   *   (`aggregate` over zip_with), so results are bit-deterministic and
   *   reproducible cross-engine.
-  * - [[lshBuckets]] / [[lshTopK]]: random-hyperplane LSH — the scale
-  *   path. Bucket key = sign bits against `nPlanes` fixed pseudo-random
-  *   hyperplanes (seeded, generated arithmetically so executors need no
-  *   broadcast). Candidates meet in one shuffle on the bucket key; exact
-  *   cosine re-ranks within buckets. At 100 TB this turns O(n^2) into
-  *   O(n * bucket_size).
+  * - [[lshTopK]] / [[lshNearDupPairs]]: OR-banded random-hyperplane
+  *   LSH, a scale path. A band's bucket key = sign bits against
+  *   `planesPerBand` fixed pseudo-random hyperplanes (generated
+  *   arithmetically, so executors need no broadcast). Candidates meet in
+  *   one equi-join on (band, bucket), and each pair is kept only at its
+  *   first matching band, so no dedup shuffle follows; exact cosine
+  *   re-ranks. At 100 TB this turns O(n^2) into O(n * bucket_size).
+  * - [[ivfTopK]]: inverted-file ANN, the other scale path: one cell per
+  *   corpus vector, `nprobe` cells per query, one equi-join on the cell.
+  *
+  * Every score is `round(cosine, 6)`, the cross-engine convention, and
+  * every top-k orders by (cos desc, neighbor_id asc).
   */
 object SimSearch {
 
@@ -46,10 +52,18 @@ object SimSearch {
       col("embedding").as("qe"))
     val c = corpus.select(col("id").as("neighbor_id"),
       col("embedding").as("ce"))
-    val scored = q.crossJoin(c)
+    topK(q.crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qe"), col("ce")), 6).as("cos"))
+        cos6(col("qe"), col("ce")).as("cos")), k)
+  }
+
+  /** Cosine rounded to 6 places: the cross-engine score convention. */
+  private def cos6(a: Column, b: Column): Column = round(cosine(a, b), 6)
+
+  /** The `k` best rows per `query_id` by (cos desc, neighbor_id asc),
+    * numbered by `rank`. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -79,10 +93,6 @@ object SimSearch {
       when(proj >= 0, lit(1L << j)).otherwise(0L)
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  def lshBuckets(corpus: DataFrame, nPlanes: Int = 8): DataFrame =
-    corpus.select(col("id"), col("embedding"),
-      bucketKey(col("embedding"), nPlanes).as("bucket"))
-
   /** OR-banded buckets: `bands` independent sign-bit buckets of
     * `planesPerBand` hyperplanes each (band b uses planes
     * [b*planesPerBand, (b+1)*planesPerBand)). One exploded row per
@@ -98,38 +108,54 @@ object SimSearch {
     // bands*planesPerBand projections (the composed per-plane
     // aggregate(zip_with(...)) form walks the array 128 times);
     // bit-identical outputs — SimSearchSpec proves it against bucketKey.
-    // Embeddings deliberately NOT carried: the band join + pair dedup
-    // shuffle (id, band, bucket) rows only; embeddings re-attach from
-    // the dimension side afterwards.
+    // Embeddings deliberately NOT carried: the band join moves
+    // (id, band, bucket) rows only; embeddings re-attach from the
+    // dimension side afterwards.
     corpus.select(col("id"),
       posexplode(graft.functions.HyperplaneBuckets.buckets(
         col("embedding"), bands, planesPerBand)))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "bucket")
 
-  /** [[bandBuckets]] plus the full per-id bucket array (`bkts`) carried
-    * on every exploded row — the payload the first-matching-band dedup
-    * in [[lshNearDupPairs]] / [[lshTopK]] needs to decide, per candidate
-    * row, whether an EARLIER band already matched (without a post-join
-    * distinct exchange). */
-  private def bucketsWithArray(corpus: DataFrame, bands: Int,
-      planesPerBand: Int): DataFrame =
-    corpus.select(col("id"),
-      graft.functions.HyperplaneBuckets.buckets(
-        col("embedding"), bands, planesPerBand).as("bkts"))
-      .select(col("id"), col("bkts"), posexplode(col("bkts")))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "bucket")
+  /** Candidate pairs [l, r] of `left` x `right` ids that share an
+    * OR-band bucket and pass `keep`, each emitted from its FIRST matching
+    * band only. Every exploded (id, band, bucket) row carries the id's
+    * whole bucket array, so a joined row can tell whether an earlier band
+    * already matched (`FirstEqualIndex`, a codegen'd allocation-free
+    * compare loop; the composed slice/zip_with/filter form is
+    * CodegenFallback and measured 3x the whole query). Each pair thus
+    * comes out of exactly one band, the set the banded-union DISTINCT
+    * yields (SimSearchSpec checks it), and the near-quadratic candidate
+    * stream is never shuffled into a dedup exchange. The join sides carry
+    * `bands` extra longs per exploded row (O(n * bands^2) bytes) against
+    * the O(candidate pairs) exchange removed; candidates stay bare id
+    * pairs, embeddings re-attach in [[scoredPairs]]. */
+  private def bandCandidates(left: DataFrame, right: DataFrame, l: String,
+      r: String, keep: Column, bands: Int, planesPerBand: Int): DataFrame = {
+    def side(df: DataFrame, id: String, bkts: String): DataFrame =
+      df.select(col("id"), graft.functions.HyperplaneBuckets.buckets(
+          col("embedding"), bands, planesPerBand).as("bkts"))
+        .select(col("id"), col("bkts"), posexplode(col("bkts")))
+        .select(col("id").as(id), col("bkts").as(bkts),
+          col("pos").as("band_idx"), col("col").as("bucket"))
+    side(left, l, "ba").join(side(right, r, "bb"), Seq("band_idx", "bucket"))
+      .where(keep && graft.functions.FirstEqualIndex.index(
+        col("ba"), col("bb")) === col("band_idx"))
+      .select(col(l), col(r))
+  }
 
-  /** Predicate over a joined candidate row carrying `ba`/`bb` bucket
-    * arrays and the matched `band_idx`: true iff no band BEFORE
-    * band_idx also matched — i.e. this row is the pair's first matching
-    * band. Codegen'd allocation-free compare loop (the composed
-    * slice/zip_with/filter form is CodegenFallback and measured 3x the
-    * whole query when evaluated per candidate-probe match). */
-  private def firstMatchingBand: Column =
-    graft.functions.FirstEqualIndex.index(col("ba"), col("bb")) ===
-      col("band_idx")
+  /** Re-attaches the embeddings of `left` (ids `l`) and `right` (ids
+    * `r`) to id pairs and scores them: [l, r, cos]. No explicit
+    * broadcast hint (an explicit hint is mandatory for Spark, AQE will
+    * not degrade it, so a corpus-sized embedding table would OOM): AQE
+    * broadcasts while a side fits and falls back to a shuffle join on
+    * id at scale. */
+  private def scoredPairs(pairs: DataFrame, left: DataFrame,
+      right: DataFrame, l: String, r: String): DataFrame =
+    pairs
+      .join(left.select(col("id").as(l), col("embedding").as("ea")), l)
+      .join(right.select(col("id").as(r), col("embedding").as("eb")), r)
+      .select(col(l), col(r), cos6(col("ea"), col("eb")).as("cos"))
 
   /** Embedding-cosine near-duplicate pairs: all (a < b) pairs with
     * cosine >= threshold. Exact (cross-join) form — the correctness
@@ -141,8 +167,7 @@ object SimSearch {
     val a = spread(corpus).select(col("id").as("a"), col("embedding").as("ea"))
     val b = corpus.select(col("id").as("b"), col("embedding").as("eb"))
     a.crossJoin(b).where(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(cosine(col("ea"), col("eb")), 6).as("cos"))
+      .select(col("a"), col("b"), cos6(col("ea"), col("eb")).as("cos"))
       .where(col("cos") >= threshold)
   }
 
@@ -153,35 +178,9 @@ object SimSearch {
     * O(n * bands), never O(n^2). */
   def lshNearDupPairs(corpus: DataFrame, threshold: Double,
       bands: Int = 16, planesPerBand: Int = 8): DataFrame = {
-    val bkt = bucketsWithArray(corpus, bands, planesPerBand)
-    val a = bkt.select(col("id").as("a"), col("bkts").as("ba"),
-      col("band_idx"), col("bucket"))
-    val b = bkt.select(col("id").as("b"), col("bkts").as("bb"),
-      col("band_idx"), col("bucket"))
-    // FIRST-MATCHING-BAND dedup (the same construction as
-    // TextOps.lshCandidatePairs, via the carried bucket array instead of
-    // 16 per-band joins): a pair is emitted only from the first band the
-    // two ids agree on, so each candidate comes out of exactly one band
-    // — the same set the banded-union DISTINCT yielded, without the
-    // post-join dedup exchange of the near-quadratic candidate stream.
-    // The join sides carry `bands` extra longs per exploded row
-    // (O(n * bands^2) bytes total) while the removed exchange was
-    // O(candidate pairs) — the right trade as soon as buckets produce
-    // more than ~1 candidate per row, and candidates stay bare id pairs:
-    // embeddings re-attach from the dimension side. No explicit
-    // broadcast hint (an explicit hint is mandatory for Spark — AQE will
-    // not degrade it — so a corpus-sized embedding table would OOM): AQE
-    // broadcasts while the side fits and falls back to a shuffle join on
-    // id at scale.
-    val cand = a.join(b, Seq("band_idx", "bucket"))
-      .where(col("a") < col("b") && firstMatchingBand)
-      .select(col("a"), col("b"))
-    val e = corpus.select(col("id"), col("embedding"))
-    cand
-      .join(e.select(col("id").as("a"), col("embedding").as("ea")), "a")
-      .join(e.select(col("id").as("b"), col("embedding").as("eb")), "b")
-      .select(col("a"), col("b"),
-        round(cosine(col("ea"), col("eb")), 6).as("cos"))
+    val cand = bandCandidates(corpus, corpus, "a", "b",
+      col("a") < col("b"), bands, planesPerBand)
+    scoredPairs(cand, corpus, corpus, "a", "b")
       .where(col("cos") >= threshold)
   }
 
@@ -195,13 +194,8 @@ object SimSearch {
     * Shape: broadcast nested-loop fan-out (k rows per vector, narrow)
     * then a map-side-combinable argmax groupBy — the only shuffle
     * carries (id, cell) id-width rows. Returns [id, cell]. */
-  def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val c = broadcast(centroids.select(col("centroid_id").cast("long")
-      .as("centroid_id"), col("embedding").as("cemb")))
-    vectors.select(col("id"), col("embedding")).crossJoin(c)
-      .select(col("id"),
-        round(cosine(col("embedding"), col("cemb")), 6).as("ccos"),
-        col("centroid_id"))
+  def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    centroidScores(vectors, centroids)
       .groupBy(col("id"))
       // argmax as an algebraic max over (cos, -centroid_id): highest
       // cosine wins, ties to the smallest centroid id — deterministic
@@ -209,6 +203,17 @@ object SimSearch {
       .agg(max(struct(col("ccos").as("c"),
         (-col("centroid_id")).as("nid"))).as("m"))
       .select(col("id"), (-col("m.nid")).as("cell"))
+
+  /** Every (vector, centroid) pair: [id, ccos, centroid_id]. The
+    * centroid table is quantizer-sized (k cells, never corpus-sized), so
+    * the explicit broadcast is safe by contract. */
+  private def centroidScores(vectors: DataFrame,
+      centroids: DataFrame): DataFrame = {
+    val c = broadcast(centroids.select(col("centroid_id").cast("long")
+      .as("centroid_id"), col("embedding").as("cemb")))
+    vectors.select(col("id"), col("embedding")).crossJoin(c)
+      .select(col("id"), cos6(col("embedding"), col("cemb")).as("ccos"),
+        col("centroid_id"))
   }
 
   /** The query side of IVF: each query's `nprobe` nearest cells
@@ -216,32 +221,26 @@ object SimSearch {
     * [id, cell], `nprobe` rows per query. */
   def ivfProbes(queries: DataFrame, centroids: DataFrame,
       nprobe: Int): DataFrame = {
-    val c = broadcast(centroids.select(col("centroid_id").cast("long")
-      .as("centroid_id"), col("embedding").as("cemb")))
-    val scored = queries.select(col("id"), col("embedding")).crossJoin(c)
-      .select(col("id"),
-        round(cosine(col("embedding"), col("cemb")), 6).as("ccos"),
-        col("centroid_id"))
     val w = Window.partitionBy(col("id"))
       .orderBy(col("ccos").desc, col("centroid_id").asc)
-    scored.withColumn("rn", row_number().over(w))
+    centroidScores(queries, centroids).withColumn("rn", row_number().over(w))
       .where(col("rn") <= nprobe)
       .select(col("id"), col("centroid_id").as("cell"))
   }
 
   /** IVF (inverted-file) ANN top-k — the second scale path beside the
-    * OR-banded LSH. Corpus vectors live in exactly ONE cell each (so
-    * candidate pairs are unique by construction — no cross-band dedup
-    * shuffle, the structural advantage over [[lshTopK]]); queries probe
-    * their `nprobe` nearest cells; exact cosine re-ranks. Candidates
-    * meet in ONE equi-join on the cell id — with balanced cells the
-    * pair count is O(|corpus| * nprobe / k_cells), never O(n^2) — and
-    * the join carries id-width rows; embeddings re-attach from the
-    * dimension side (AQE-decided, see [[lshNearDupPairs]]). At corpus
-    * scale the assignment is the partition layout: persist
-    * [id, cell] bucketed by cell and the probe join prunes to the
-    * touched cells only. Recall gate (clustered vectors) in
-    * SimSearchSpec; cross-engine exactness via the `e5_ivf_topk`
+    * OR-banded LSH. Corpus vectors live in exactly ONE cell each, so
+    * candidate pairs are unique by construction and the join needs no
+    * first-matching-band predicate or bucket arrays on its rows, unlike
+    * [[lshTopK]]; queries probe their `nprobe` nearest cells; exact
+    * cosine re-ranks. Candidates meet in ONE equi-join on the cell id —
+    * with balanced cells the pair count is O(|corpus| * nprobe /
+    * k_cells), never O(n^2) — and the join carries id-width rows;
+    * embeddings re-attach from the dimension side (AQE-decided, see
+    * [[scoredPairs]]). At corpus scale the assignment is the partition
+    * layout: persist [id, cell] bucketed by cell and the probe join
+    * prunes to the touched cells only. Recall gate (clustered vectors)
+    * in SimSearchSpec; cross-engine exactness via the `e5_ivf_topk`
     * DuckDB oracle. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       centroids: DataFrame, nprobe: Int, k: Int): DataFrame = {
@@ -252,47 +251,16 @@ object SimSearch {
     val cand = qProbes.join(cAssign, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
-    val scored = cand
-      .join(queries.select(
-        col("id").as("query_id"), col("embedding").as("qe")), "query_id")
-      .join(corpus.select(
-        col("id").as("neighbor_id"), col("embedding").as("ce")),
-        "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topK(scoredPairs(cand, queries, corpus, "query_id", "neighbor_id"), k)
   }
 
   /** Approximate top-k: candidates restricted to the query's OR-band
-    * buckets, deduped across bands, re-ranked by exact cosine. */
+    * buckets (each pair from its first shared band), re-ranked by exact
+    * cosine. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       bands: Int = 16, planesPerBand: Int = 8): DataFrame = {
-    val q = bucketsWithArray(queries, bands, planesPerBand)
-      .select(col("id").as("query_id"), col("bkts").as("ba"),
-        col("band_idx"), col("bucket"))
-    val c = bucketsWithArray(corpus, bands, planesPerBand)
-      .select(col("id").as("neighbor_id"), col("bkts").as("bb"),
-        col("band_idx"), col("bucket"))
-    // first-matching-band dedup instead of a candidate DISTINCT — see
-    // [[lshNearDupPairs]]; each (query, neighbor) flows out of exactly
-    // one band, so the near-quadratic candidate stream is never shuffled
-    val cand = q.join(c, Seq("band_idx", "bucket"))
-      .where(col("query_id") =!= col("neighbor_id") && firstMatchingBand)
-      .select(col("query_id"), col("neighbor_id"))
-    val scored = cand
-      .join(queries.select(
-        col("id").as("query_id"), col("embedding").as("qe")), "query_id")
-      .join(corpus.select(
-        col("id").as("neighbor_id"), col("embedding").as("ce")),
-        "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val cand = bandCandidates(queries, corpus, "query_id", "neighbor_id",
+      col("query_id") =!= col("neighbor_id"), bands, planesPerBand)
+    topK(scoredPairs(cand, queries, corpus, "query_id", "neighbor_id"), k)
   }
 }

@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   *    (digest, doc_id) pairs only, never the text itself.
   *  - MinHash: per-doc signature computed map-side from the token set
   *    (k independent hash slots via salted digests), then LSH banding:
-  *    docs sharing a band key meet in one shuffle; candidate pairs are
-  *    verified with exact Jaccard. Band keys are tiny strings, so the
-  *    shuffle is O(docs * bands), not O(docs^2).
+  *    one self-join of the band-key table per band, each pair kept only
+  *    at its first matching band, so no dedup shuffle follows
+  *    ([[firstMatchingBandPairs]], shared with SimHash). Candidate pairs
+  *    are verified with exact set Jaccard ([[setJaccardOfPairs]]). Band
+  *    keys are tiny strings, so the join sides are O(docs * bands), not
+  *    O(docs^2).
   *  - dimension-side joins carry NO broadcast hint: AQE broadcasts a
   *    side it measures under `spark.sql.adaptive.autoBroadcastJoinThreshold`
   *    at runtime and falls back to a shuffle join otherwise, which is
@@ -135,7 +138,7 @@ object TextOps {
     * J ~ (1/b)^(1/r) (~0.71 for 4x4) instead of the near-all-pairs
     * 1-(1-J)^k that width-1 bands degrade to. At 100 TB this is the
     * difference between O(n * near_dups) and O(n^2): band keys are tiny
-    * strings, one self-join on (band_idx, key), map-side distinct.
+    * strings, one self-join per band ([[firstMatchingBandPairs]]).
     *
     * Default 4 bands x 4 rows (k=16) targets the 0.7-Jaccard near-dup
     * regime; the construction is mirrored 1:1 in the DuckDB oracle. */
@@ -166,114 +169,118 @@ object TextOps {
     val sig = graft.pipeline.Caches.tracked(
       mh.select(col("doc_id") +: bandKeys: _*)
         .repartition(documents.sparkSession.sparkContext.defaultParallelism))
-    // FIRST-MATCHING-BAND dedup instead of a candidate DISTINCT: band
-    // b's join emits a pair only when the docs agree on band b AND
-    // disagree on every band j < b, so each candidate pair is produced
-    // by exactly one band — the same set the banded-union DISTINCT
-    // yields, without it. The old shape (explode to (doc, band, key),
-    // one self-join, distinct) re-emitted every pair once per shared
-    // band and then shuffled the whole near-quadratic candidate stream
-    // into a two-phase dedup exchange; measured at SF=0.1 that stream
-    // is 13.28M pre-distinct rows for 6.74M pairs — the dedup exchange
-    // dominated d6/d7/d12/d14. Now pairs flow straight from the
-    // per-band join probes (narrow; zero post-join exchange) and the
-    // quadratic stream is never shuffled at any scale. Cost shape:
-    // `bands` equi-joins of the key table with itself (AQE
-    // broadcast-or-shuffle decided) instead of one — key-table rows are
-    // id + `bands` keys wide, so the extra join-side bytes are
-    // O(docs * bands), while the removed dedup exchange was
-    // O(candidate pairs): strictly the right trade once buckets
-    // produce more than ~1 candidate per doc.
-    val perBand = (0 until bands).map { b =>
-      val l = sig.select(col("doc_id").as("a") +:
-        (0 to b).map(j => col(s"bk_$j").as(s"ka_$j")): _*)
-      val r = sig.select(col("doc_id").as("b") +:
-        (0 to b).map(j => col(s"bk_$j").as(s"kb_$j")): _*)
-      val firstMatchHere = (0 until b)
-        .map(j => col(s"ka_$j") =!= col(s"kb_$j"))
+    firstMatchingBandPairs(sig, bands, j => s"bk_$j", (_, k) => k)
+  }
+
+  /** Candidate pairs [a, b, extra...] (a < b) of the docs in `sig`
+    * [doc_id, ...] that agree on at least one of `bands` bands, each pair
+    * emitted exactly once. Band j's key is `bandOf(j, c)` of column
+    * c = `keyCol(j)` of `sig`; on the join sides that column is named
+    * with an `_a` / `_b` suffix, which is how `extra` refers to it.
+    *
+    * FIRST-MATCHING-BAND dedup instead of a candidate DISTINCT: band j's
+    * self-join keeps a pair only when the docs agree on band j AND
+    * disagree on every band before it, so each pair comes out of exactly
+    * one band: the set the banded-union DISTINCT yields (TextOpsSpec
+    * checks it), without the dedup exchange that shuffled the whole
+    * near-quadratic candidate stream (measured at SF=0.1: 13.28M
+    * pre-distinct rows for 6.74M pairs, the dominant d6/d7/d12/d14
+    * cost). Pairs flow straight out of the per-band join probes. Cost
+    * shape: `bands` equi-joins of the signature table with itself (AQE
+    * broadcast-or-shuffle decided) adding O(docs * bands) join-side
+    * bytes, against the O(candidate pairs) exchange removed; the earlier
+    * bands' predicates read columns the join already carries. */
+  private def firstMatchingBandPairs(sig: DataFrame, bands: Int,
+      keyCol: Int => String, bandOf: (Int, Column) => Column,
+      extra: Column*): DataFrame =
+    (0 until bands).map { i =>
+      // each side carries only the key columns bands 0..i read
+      val carried = (0 to i).map(keyCol).distinct
+      def side(id: String): DataFrame = sig.select(col("doc_id").as(id) +:
+        carried.map(c => col(c).as(s"${c}_$id")): _*)
+      def key(j: Int, id: String): Column =
+        bandOf(j, col(s"${keyCol(j)}_$id"))
+      val firstMatchHere = (0 until i)
+        .map(j => key(j, "a") =!= key(j, "b"))
         .foldLeft(col("a") < col("b"))(_ && _)
-      l.join(r, col(s"ka_$b") === col(s"kb_$b") && firstMatchHere)
-        .select(col("a"), col("b"))
+      side("a").join(side("b"), key(i, "a") === key(i, "b") && firstMatchHere)
+        .select(col("a") +: col("b") +: extra: _*)
+    }.reduce(_ unionByName _)
+
+  /** Sorted hashed token set: the unigram input of the set-Jaccard
+    * verify. Tokens are pre-hashed to longs so the per-pair intersect
+    * compares 8-byte values instead of re-hashing strings (measured ~5x
+    * on the verify stage). xxhash64 collisions would need two distinct
+    * tokens of one PAIR to collide (~600 values in a 2^64 space,
+    * ~1e-14/pair), far below the corpus-level md5-dedup noise floor, and
+    * the oracle stays string-exact. */
+  private def hashedTokens(toks: Column): Column =
+    sort_array(transform(array_distinct(toks), t => xxhash64(t)))
+
+  /** Sorted hashed set of the w-token shingles (same hashing as
+    * [[hashedTokens]]); a doc shorter than w is one shingle. */
+  private def hashedShingles(toks: Column, w: Int): Column =
+    sort_array(array_distinct(transform(
+      sequence(lit(0), greatest(size(toks) - w, lit(0))),
+      i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(w)))))))
+
+  /** Set-Jaccard verify of candidate pairs [a, b]: one output column per
+    * `sets` entry (name -> per-doc sorted hashed set over `docs`), each
+    * |a n b| / (|a| + |b| - |a n b|) rounded to 4 places.
+    *
+    * Join shape: the per-doc set table is the dimension side (one row per
+    * doc, vs O(near-dups) candidate pairs on the fact side). No explicit
+    * broadcast hint (see the object notes): AQE broadcasts it while it
+    * fits and degrades to a shuffle join keyed on doc id on a corpus
+    * whose doc table outgrows executor memory; the pair side still
+    * shuffles only id-width rows, never two sets per pair twice. The set
+    * table is derived once but joined TWICE (a and b sides): persisted,
+    * since without it each side recomputes the text scan + tokenize +
+    * hash (measured ~2x on the verify stage); Caches.release()
+    * unpersists it. Sets arrive sorted so the intersect is an
+    * allocation-free merge count (IntersectCountSorted): the sort is paid
+    * once per doc, the merge once per pair, and |union| comes from the
+    * sizes without a second array walk. */
+  private def setJaccardOfPairs(docs: DataFrame, pairs: DataFrame,
+      sets: Seq[(String, Column)]): DataFrame = {
+    val ix = sets.indices
+    val dims = graft.pipeline.Caches.tracked(ix.foldLeft(
+      docs.select(col("doc_id").cast("long").as("doc_id") +:
+        ix.map(i => sets(i)._2.as(s"s$i")): _*)) { (df, i) =>
+      df.withColumn(s"n$i", size(col(s"s$i")))
+    })
+    def side(id: String): DataFrame = dims.select(col("doc_id").as(id) +:
+      (ix.map(i => col(s"s$i").as(s"s${i}_$id")) ++
+        ix.map(i => col(s"n$i").as(s"n${i}_$id"))): _*)
+    val counted = ix.foldLeft(
+      pairs.join(side("a"), "a").join(side("b"), "b")) { (df, i) =>
+      df.withColumn(s"i$i", graft.functions.IntersectCountSorted.count(
+        col(s"s${i}_a"), col(s"s${i}_b")))
     }
-    perBand.reduce(_ unionByName _)
+    counted.select(col("a") +: col("b") +: ix.map { i =>
+      round(col(s"i$i").cast("double") /
+        (col(s"n${i}_a") + col(s"n${i}_b") - col(s"i$i")).cast("double"), 4)
+        .as(sets(i)._1)
+    }: _*)
   }
 
   /** Exact token-set Jaccard for candidate pairs (verification stage of
-    * near-dup detection).
-    *
-    * Join shape: the token-set table is the dimension side (one row per
-    * doc, vs O(near-dups) candidate pairs on the fact side). No explicit
-    * broadcast hint (see the object notes): AQE broadcasts it while it fits
-    * and degrades to a shuffle join keyed on doc id on a corpus whose
-    * distinct-doc table outgrows executor memory; the pair side then
-    * still shuffles only (a, b, jaccard)-width rows, never two token
-    * arrays per pair twice. */
-  def jaccardOfPairs(documents: DataFrame, pairs: DataFrame): DataFrame = {
-    // token sets pre-hashed to longs: the per-pair intersect compares
-    // 8-byte values instead of re-hashing strings (measured ~5x on the
-    // verify stage); |union| = |a| + |b| - |intersect| drops the second
-    // array walk. xxhash64 collisions would need two distinct tokens of
-    // one PAIR to collide (~600 values in a 2^64 space, ~1e-14/pair) —
-    // far below the corpus-level md5-dedup noise floor, and the oracle
-    // stays string-exact.
-    // the hashed-token table is derived once but joined TWICE (a and b
-    // sides) — without a persist each side recomputes the full text scan
-    // + tokenize + hash (measured ~2x on the verify stage). Tracked like
-    // the band table in lshCandidatePairs; Caches.release() unpersists.
-    // sorted ascending so the per-pair intersect is an allocation-free
-    // merge count (IntersectCountSorted) instead of a per-pair hash set
-    // + result array — the sort is paid once per doc, the merge once
-    // per candidate pair
-    val docTok = graft.pipeline.Caches.tracked(
-      documents.select(col("doc_id").cast("long").as("doc_id"),
-        sort_array(transform(array_distinct(tokens(col("text"))),
-          t => xxhash64(t))).as("toks"))
-        .withColumn("n", size(col("toks"))))
-    pairs
-      .join(docTok.select(col("doc_id").as("a"),
-        col("toks").as("ta"), col("n").as("na")), "a")
-      .join(docTok.select(col("doc_id").as("b"),
-        col("toks").as("tb"), col("n").as("nb")), "b")
-      .withColumn("ni",
-        graft.functions.IntersectCountSorted.count(col("ta"), col("tb")))
-      .select(col("a"), col("b"),
-        round(col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")).cast("double"), 4)
-          .as("jaccard"))
-  }
+    * near-dup detection), via [[setJaccardOfPairs]]. Unlike the two
+    * shingle passes it does not [[spread]] its input. */
+  def jaccardOfPairs(documents: DataFrame, pairs: DataFrame): DataFrame =
+    setJaccardOfPairs(documents, pairs,
+      Seq("jaccard" -> hashedTokens(tokens(col("text")))))
 
   /** n-gram (shingle) Jaccard for candidate pairs: like
     * [[jaccardOfPairs]] but over the set of w-token shingles instead of
     * unigrams — order-sensitive, so reshuffled near-dups score lower
-    * than bag-of-words Jaccard. Same join shape: shingle sets pre-hashed
-    * to longs, dimension side AQE-decided (see the object notes), |union|
-    * from sizes. */
+    * than bag-of-words Jaccard. The input is [[spread]] first: shingling
+    * (w slices + hash per token position) is the most expensive
+    * dimension derivation in the suite. */
   def ngramJaccardOfPairs(documents: DataFrame, pairs: DataFrame,
-      w: Int = 3): DataFrame = {
-    val toks = tokens(col("text"))
-    val n = size(toks)
-    val shingles = sort_array(array_distinct(transform(
-      sequence(lit(0), greatest(n - w, lit(0))),
-      i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(w)))))))
-    // persisted for the same reason as docTok in [[jaccardOfPairs]]:
-    // shingling (w slices + hash per token position) is the most
-    // expensive dimension derivation in the suite and feeds both sides;
-    // sorted for the same merge-count reason
-    val docSh = graft.pipeline.Caches.tracked(
-      spread(documents).select(col("doc_id").cast("long").as("doc_id"),
-        shingles.as("sh")).withColumn("n", size(col("sh"))))
-    pairs
-      .join(docSh.select(col("doc_id").as("a"),
-        col("sh").as("sa"), col("n").as("na")), "a")
-      .join(docSh.select(col("doc_id").as("b"),
-        col("sh").as("sb"), col("n").as("nb")), "b")
-      .withColumn("ni",
-        graft.functions.IntersectCountSorted.count(col("sa"), col("sb")))
-      .select(col("a"), col("b"),
-        round(col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")).cast("double"), 4)
-          .as("ngram_jaccard"))
-  }
+      w: Int = 3): DataFrame =
+    setJaccardOfPairs(spread(documents), pairs,
+      Seq("ngram_jaccard" -> hashedShingles(tokens(col("text")), w)))
 
   /** Combined verify pass: unigram Jaccard AND w-token shingle Jaccard
     * for the same candidate pairs in ONE pair join. Pipelines that want
@@ -282,41 +289,13 @@ object TextOps {
     * [[jaccardOfPairs]] + [[ngramJaccardOfPairs]] — two pair joins, two
     * dimension derivations over the same text scan. Here the dimension
     * table carries both hashed sets per doc (derived in one scan,
-    * persisted once) and the pair side shuffles once. Same join shape
-    * as the single-measure passes: dimension side AQE-decided
-    * (see the object notes), |union| from sizes, pair rows id-width. */
+    * persisted once) and the pair side shuffles once. */
   def jaccardBothOfPairs(documents: DataFrame, pairs: DataFrame,
       w: Int = 3): DataFrame = {
     val toks = tokens(col("text"))
-    val n = size(toks)
-    val shingles = sort_array(array_distinct(transform(
-      sequence(lit(0), greatest(n - w, lit(0))),
-      i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(w)))))))
-    val dims = graft.pipeline.Caches.tracked(
-      spread(documents).select(col("doc_id").cast("long").as("doc_id"),
-        sort_array(transform(array_distinct(toks), t => xxhash64(t)))
-          .as("toks"),
-        shingles.as("sh"))
-        .withColumn("nt", size(col("toks")))
-        .withColumn("ns", size(col("sh"))))
-    pairs
-      .join(dims.select(col("doc_id").as("a"),
-        col("toks").as("ta"), col("sh").as("sa"),
-        col("nt").as("nta"), col("ns").as("nsa")), "a")
-      .join(dims.select(col("doc_id").as("b"),
-        col("toks").as("tb"), col("sh").as("sb"),
-        col("nt").as("ntb"), col("ns").as("nsb")), "b")
-      .withColumn("nit",
-        graft.functions.IntersectCountSorted.count(col("ta"), col("tb")))
-      .withColumn("nis",
-        graft.functions.IntersectCountSorted.count(col("sa"), col("sb")))
-      .select(col("a"), col("b"),
-        round(col("nit").cast("double") /
-          (col("nta") + col("ntb") - col("nit")).cast("double"), 4)
-          .as("jaccard"),
-        round(col("nis").cast("double") /
-          (col("nsa") + col("nsb") - col("nis")).cast("double"), 4)
-          .as("ngram_jaccard"))
+    setJaccardOfPairs(spread(documents), pairs, Seq(
+      "jaccard" -> hashedTokens(toks),
+      "ngram_jaccard" -> hashedShingles(toks, w)))
   }
 
   /** SimHash-64 over tokens: per bit, sign of sum over tokens of
@@ -355,29 +334,14 @@ object TextOps {
     // [[spread]] inside [[simhash]] keeps the cached signature table —
     // the left side of every band join — at >= cores partitions
     val sig = graft.pipeline.Caches.tracked(simhash(documents))
-    def band(i: Int, c: Column): Column =
-      shiftright(c, i * 16).bitwiseAND(0xffffL)
-    // FIRST-MATCHING-BAND dedup, same construction as
-    // [[lshCandidatePairs]]: band i emits a pair only when its 16-bit
-    // slices agree and every earlier band's differ — each (a, b) comes
-    // out of exactly one band, replacing the union-then-DISTINCT whose
-    // dedup exchange shuffled the whole near-quadratic candidate
-    // stream. The earlier-band predicates are bitwise slices of the
-    // sa/sb columns the join already carries, so the extra filter costs
-    // no width. The Hamming cut then applies per-row on the narrow
-    // stream (it commutes with the dedup: hamming is a function of the
-    // pair).
-    val bands = (0 until 4).map { i =>
-      val l = sig.select(col("doc_id").as("a"), col("simhash").as("sa"))
-      val r = sig.select(col("doc_id").as("b"), col("simhash").as("sb"))
-      val firstMatchHere = (0 until i)
-        .map(j => band(j, col("sa")) =!= band(j, col("sb")))
-        .foldLeft(col("a") < col("b"))(_ && _)
-      l.join(r, band(i, col("sa")) === band(i, col("sb")) && firstMatchHere)
-        .select(col("a"), col("b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
-    }
-    bands.reduce(_ unionByName _).where(col("hamming") <= maxHamming)
+    // band j = the j-th 16-bit slice of the signature; the Hamming cut
+    // applies per row on the deduped stream (it commutes with the
+    // dedup: hamming is a function of the pair)
+    firstMatchingBandPairs(sig, 4, _ => "simhash",
+        (j, h) => shiftright(h, j * 16).bitwiseAND(0xffffL),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b")))
+          .as("hamming"))
+      .where(col("hamming") <= maxHamming)
   }
 
   /** TF-IDF top-k terms per document: tf = in-doc term count, idf =

@@ -137,6 +137,50 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
+  test("first-matching-band pairs == banded-union DISTINCT (minhash LSH, simhash)") {
+    // lshCandidatePairs and simhashNearDupPairs emit each pair from the
+    // first band it agrees on, with no distinct exchange; both must give
+    // exactly the pair set of one self-join per band, unioned, distinct.
+    // Close families (3/40 tokens mutated) share most bands; loose ones
+    // (12/40) share a band only sometimes, so pairs first agree on
+    // different bands.
+    val docs = (familyDocs(5, 4, 40, 3) ++
+      familyDocs(3, 6, 40, 12).map { case (id, t) =>
+        (id + 1000L, t.split(" ").map("m" + _).mkString(" "))
+      }).toDF("doc_id", "text")
+    def bandedUnion(sig: org.apache.spark.sql.DataFrame,
+        bandKeys: Seq[org.apache.spark.sql.Column]): Set[(Long, Long)] = {
+      val perBand = bandKeys.map { key =>
+        val keyed = sig.select(col("doc_id"), key.as("k"))
+        keyed.select(col("doc_id").as("a"), col("k"))
+          .join(keyed.select(col("doc_id").as("b"), col("k")), "k")
+          .where(col("a") < col("b")).select(col("a"), col("b"))
+      }
+      val all = perBand.reduce(_ unionByName _)
+      // guard against a vacuous check: some pair must agree on 2+ bands
+      assert(all.count() > all.distinct().count(), "no multi-band pair")
+      all.distinct().as[(Long, Long)].collect().toSet
+    }
+
+    val mh = TextOps.minhash(docs, 16)
+    val lshRef = bandedUnion(mh, (0 until 4).map { b =>
+      md5(concat_ws("|", (0 until 4).map(r => col(s"mh_${b * 4 + r}")): _*))
+    })
+    val lsh = TextOps.lshCandidatePairs(docs).as[(Long, Long)].collect()
+    assert(lsh.length == lsh.toSet.size, "a candidate pair came out twice")
+    assert(lsh.toSet == lshRef)
+
+    // simhash: compared before the Hamming cut (64 keeps every pair)
+    val sh = TextOps.simhash(docs)
+    val shRef = bandedUnion(sh, (0 until 4).map(i =>
+      shiftright(col("simhash"), i * 16).bitwiseAND(0xffffL)))
+    val simPairs = TextOps.simhashNearDupPairs(docs, maxHamming = 64)
+      .select(col("a"), col("b")).as[(Long, Long)].collect()
+    assert(simPairs.length == simPairs.toSet.size,
+      "a simhash pair came out twice")
+    assert(simPairs.toSet == shRef)
+  }
+
   test("IntersectCountSorted == size(array_intersect) on sorted distinct longs") {
     // the merge-count expression replaces size(array_intersect) on the
     // verify path; prove equality on deterministic pseudo-random sorted
