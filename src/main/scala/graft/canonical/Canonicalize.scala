@@ -15,7 +15,7 @@ import graft.schema.Mention
   *
   *  2. [[Canonicalize.components]] — the cross-document canonicalization of
   *     the north star: connected components over alias/surface-form
-  *     similarity edges. The [[Canonicalize.normalForms]] contract makes
+  *     similarity edges. The [[Canonicalize.formsExpr]] contract makes
   *     every component exactly one (kind, folded-form) group, so the
   *     components are one algebraic `min` aggregation on that hub key —
   *     Spark's partial aggregation (map-side combine) absorbs
@@ -28,11 +28,19 @@ object Canonicalize {
     * whitespace. */
   private val FoldPattern = "[-_\\s]+"
 
-  /** Normalized surface forms of an alias; two entities sharing any form
-    * are merged (same kind only). Forms: exact, lowercase, and a
-    * case/underscore fold that unifies snake_case / camelCase / kebab-case
-    * identifiers — the code-corpus analog of IEPy's surface-form identity
-    * (`stanford_preprocess.py:285-304`).
+  /** The most-folded form of the `alias` column. */
+  private def foldedExpr: org.apache.spark.sql.Column =
+    regexp_replace(lower(col("alias")), FoldPattern, "")
+
+  /** Normalized surface forms of an `alias` column, as a pure Catalyst
+    * expression (codegen-friendly, no UDF); two entities sharing any
+    * form are merged (same kind only). Forms: exact, lowercase, and a
+    * case/underscore fold that unifies snake_case / camelCase /
+    * kebab-case identifiers — the code-corpus analog of IEPy's
+    * surface-form identity (`stanford_preprocess.py:285-304`). The ONE
+    * definition both [[components]]' edge derivation and the streaming
+    * incremental linker's touch detection use; if they ever diverged,
+    * the incremental path would silently under-merge.
     *
     * HARD CONTRACT for [[components]]' hub reduction: every form here
     * must be a refinement chain ENDING in the most-folded form — i.e. two
@@ -44,21 +52,6 @@ object Canonicalize {
     * `verifyConverged = true` (on in tests) catches. Such a normalizer
     * needs iterative min-propagation reintroduced into [[components]];
     * no parameter restores it. */
-  def normalForms(alias: String): Seq[String] = {
-    val lower = alias.toLowerCase
-    val folded = lower.replaceAll(FoldPattern, "")
-    Seq(alias, lower, folded).distinct
-  }
-
-  /** The most-folded form of the `alias` column, as in [[normalForms]]. */
-  private def foldedExpr: org.apache.spark.sql.Column =
-    regexp_replace(lower(col("alias")), FoldPattern, "")
-
-  /** [[normalForms]] as a pure Catalyst expression over an `alias`
-    * column (codegen-friendly, no UDF) — the ONE definition both
-    * [[components]]' edge derivation and the streaming incremental
-    * linker's touch detection use; if they ever diverged, the
-    * incremental path would silently under-merge. */
   private[graft] def formsExpr: org.apache.spark.sql.Column =
     array_distinct(array(col("alias"), lower(col("alias")), foldedExpr))
 
@@ -77,7 +70,7 @@ object Canonicalize {
     * Output: DataFrame [entity_key, canonical] where canonical is the
     * component representative's entity_key.
     *
-    * THE HUB REDUCTION: the refinement-chain contract at [[normalForms]]
+    * THE HUB REDUCTION: the refinement-chain contract at [[formsExpr]]
     * (two aliases sharing ANY form also share the most-folded form —
     * fold(exact) = fold(lower) = fold(folded) = the entity's folded
     * form) makes "shares a form with" TRANSITIVE through the folded
@@ -113,7 +106,7 @@ object Canonicalize {
     comp.select($"entity_key", $"component.k".as("canonical"))
   }
 
-  /** The guard for the refinement-chain contract at [[normalForms]]:
+  /** The guard for the refinement-chain contract at [[formsExpr]]:
     * one full min-propagation round over ALL (entity, form) edges of
     * `entities` must leave `comp` [entity_key, component] unchanged, i.e.
     * every two entities sharing a form carry the same component. Any
@@ -133,7 +126,7 @@ object Canonicalize {
     require(changed == 0,
       s"CC not converged: $changed components still moving — a " +
         "normalizer violates the refinement-chain contract " +
-        "(see normalForms)")
+        "(see formsExpr)")
   }
 }
 

@@ -9,7 +9,7 @@ import graft.schema.Mention
   *
   *  1. surface-identity chains: mentions of one document whose
   *     case/separator-folded alias matches (the same normalizer family
-  *     as the cross-document CC, [[Canonicalize.normalForms]]) form one
+  *     as the cross-document CC, [[Canonicalize.formsExpr]]) form one
   *     chain, first occurrence first — the in-document precursor of the
   *     cross-doc merge;
   *  2. anaphora chains: configurable pronoun tokens resolved to the

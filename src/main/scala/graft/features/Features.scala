@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Classifier feature functions F1-F19 as pure Catalyst column
@@ -117,23 +117,10 @@ object Features {
 
   def bagOfIobChains(postags: Column): Column = iobChainsUdf(postags)
 
-  /** All default features of `iepy/defaults.py:6-25` as named columns;
+  /** All default features of `iepy/defaults.py:6-25` as named columns:
+    * [[FeatureConfig.defaultSparse]], then [[FeatureConfig.defaultDense]];
     * `df` must carry the evidence schema. */
-  def withDefaultFeatures(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val t = col("tokens"); val p = col("postags"); val m = col("mentions")
-    df.withColumn("ib", inBetweenCol)
-      .withColumn("f_bag_of_words", bagOfWords(t))
-      .withColumn("f_bag_of_pos", bagOfPos(p))
-      .withColumn("f_bag_of_words_in_between", bagOfWordsInBetween(t, col("ib")))
-      .withColumn("f_bag_of_pos_in_between", bagOfPosInBetween(p, col("ib")))
-      .withColumn("f_entity_order", entityOrder(col("left_offset"), col("right_offset")))
-      .withColumn("f_entity_distance", entityDistance(col("ib")))
-      .withColumn("f_other_entities_in_between", otherEntitiesInBetween(m, col("ib")))
-      .withColumn("f_total_number_of_entities", totalNumberOfEntities(m))
-      .withColumn("f_verbs_count_in_between", verbsCountInBetween(p, col("ib")))
-      .withColumn("f_verbs_count", verbsCount(p))
-      .withColumn("f_in_same_sentence", inSameSentence(col("ib")))
-      .withColumn("f_symbols_in_between", symbolsInBetween(t, col("ib")))
-      .withColumn("f_number_of_tokens", numberOfTokens(t))
-  }
+  def withDefaultFeatures(df: DataFrame): DataFrame =
+    FeatureConfig.applyConfig(df,
+      FeatureConfig.defaultSparse ++ FeatureConfig.defaultDense)
 }

@@ -135,8 +135,6 @@ object ActiveLearning {
     // annotation-bounded, and leaving it on the session's default 32
     // shuffle partitions makes every one of the CV's many tiny jobs pay
     // 32 task launches for a handful of rows each.
-    val nRows = perClass.sum
-    val parts = math.max(1L, math.min(nRows / 20000 + 1, 64L)).toInt
     val w = Window.partitionBy(col("label")).orderBy(col("evidence_id"))
     // eager localCheckpoint, not persist + count: the five fold fits
     // and scorings issue ~80 actions over this table, and each action
@@ -147,7 +145,7 @@ object ActiveLearning {
     // the pooled margins are collected.
     val folded = graft.features.Features.withDefaultFeatures(labeled)
       .withColumn("fold", (row_number().over(w) - 1) % 5)
-      .coalesce(parts)
+      .coalesce(RelationClassifier.trainPartitions(perClass.sum))
     val pooled = graft.pipeline.Caches.checkpointed(folded) { folded =>
       // folds evaluated concurrently — Spark happily runs independent
       // actions from multiple threads, and each fold's fit is tiny

@@ -1,13 +1,15 @@
 package graft.ml
 
-import org.apache.spark.ml.Transformer
+import org.apache.spark.ml.{Estimator, Transformer}
 import org.apache.spark.ml.classification.{DriverLinearSVC, GBTClassificationModel, GBTClassifier, LinearSVCModel, LogisticRegression, LogisticRegressionModel, RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StandardScaler, StandardScalerModel, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.param.{ParamMap, Params}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.features.Features
+import graft.features.FeatureConfig.{columnOf, defaultDense, defaultSparse}
 
 /** The relation-extraction classifier (C1/C2), re-expressed as Spark ML.
   *
@@ -52,18 +54,11 @@ import graft.features.Features
   */
 object RelationClassifier {
 
-  val validClassifiers: Seq[String] =
-    Seq("sgd", "knn", "svc", "randomforest", "adaboost", "lr")
-
-  val bagCols: Seq[String] = Seq(
-    "f_bag_of_words", "f_bag_of_pos",
-    "f_bag_of_words_in_between", "f_bag_of_pos_in_between")
-
-  val denseCols: Seq[String] = Seq(
-    "f_entity_order", "f_entity_distance", "f_other_entities_in_between",
-    "f_total_number_of_entities", "f_verbs_count_in_between",
-    "f_verbs_count", "f_in_same_sentence", "f_symbols_in_between",
-    "f_number_of_tokens")
+  /** The default feature columns the classifier reads: the bags it
+    * vectorizes and the dense numerics; [[graft.features.FeatureConfig]]
+    * owns both lists. */
+  val bagCols: Seq[String] = defaultSparse.map(columnOf)
+  val denseCols: Seq[String] = defaultDense.map(columnOf)
 
   /** The final decision stage: adds a `margin` column (>= 0 -> positive)
     * over the scaled feature vector. */
@@ -173,10 +168,7 @@ object RelationClassifier {
   /** Fit on labeled evidence (boolean `label` column); requires both
     * classes present (reference `active_learning_core.py:127-134`). */
   def fit(labeled: DataFrame, classifier: String = "svc"): Model = {
-    require(validClassifiers.contains(classifier),
-      s"Unknown classifier '$classifier'; valid: " +
-        validClassifiers.mkString(", ") +
-        " (reference relation_extraction_classifier.py:12-18)")
+    val stage = zooEntry(classifier)
     val stats = labeled
       .agg(countDistinct(col("label")), count(lit(1))).head()
     val classes = stats.getLong(0)
@@ -192,8 +184,7 @@ object RelationClassifier {
     // cut the table is one partition, which the driver-side LinearSVCs
     // fit bit-identically to Spark's. Scoring (transform) keeps the
     // caller's partitioning untouched.
-    val trainParts = math.max(1L, math.min(nRows / 20000 + 1, 64L)).toInt
-    val input = featurized(labeled.coalesce(trainParts))
+    val input = featurized(labeled.coalesce(trainPartitions(nRows)))
       .withColumn("y", col("label").cast("double"))
     // TRUNCATE the logical plan (eager localCheckpoint), don't just
     // cache it: the vectorizer fits and the training-row collects each
@@ -242,56 +233,81 @@ object RelationClassifier {
           .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
           .fit(dense)
         Model(vectorizers, innerSvc, scaler, classifier,
-          finalStage(scaler.transform(dense), classifier))
+          stage.fit(scaler.transform(dense)))
       }
     }
   }
 
-  /** Fits the final decision stage on the scaled training table. The
-    * LinearSVCs train in the driver over the collected table
-    * ([[DriverLinearSVC]]), bounded like the knn stage by the annotation
-    * budget. The Spark-trained lr/randomforest models keep Spark's
-    * training summary, a lazy plan over the freed checkpoint that
+  /** Training partitions for `nRows` labeled rows: ~20k rows each, at
+    * most 64 (see [[fit]]); the threshold CV partitions the same way. */
+  private[ml] def trainPartitions(nRows: Long): Int =
+    math.max(1L, math.min(nRows / 20000 + 1, 64L)).toInt
+
+  /** One final stage of the zoo: how to fit it on the scaled training
+    * table, and how to load it from a saved bundle's `final` dir. */
+  private final case class ZooEntry(
+      fit: DataFrame => FinalStage, load: String => FinalStage)
+
+  /** The output columns every Spark final stage writes (LinearSVC has no
+    * probability column). */
+  private def finalCols(est: Params): ParamMap = ParamMap(Seq(
+    "featuresCol" -> "scaled_features", "labelCol" -> "y",
+    "predictionCol" -> "finalPred", "rawPredictionCol" -> "finalRaw",
+    "probabilityCol" -> "finalProb").collect {
+      case (name, v) if est.hasParam(name) => est.getParam(name) -> v
+    }: _*)
+
+  /** A Spark ML final stage; its margin comes from P(pos) when
+    * `fromProbability`, else from the raw score. */
+  private def mlEntry(est: => Estimator[_ <: Transformer],
+      load: String => Transformer, fromProbability: Boolean): ZooEntry =
+    ZooEntry(
+      df => { val e = est; MlStage(e.fit(df, finalCols(e)), fromProbability) },
+      dir => MlStage(load(dir), fromProbability))
+
+  /** A knn stage over the collected (features, y) `rows`: the labeled
+    * set is human-annotation-bounded (same justification as the C7
+    * threshold pooling collect). */
+  private def knnStage(rows: DataFrame): FinalStage =
+    KnnStage(rows.collect().map(r => (r.getAs[Vector](0), r.getDouble(1))),
+      k = 5)
+
+  /** The final-classifier zoo (see the header), in the reference's order
+    * plus `lr`. The LinearSVCs train in the driver over the collected
+    * table ([[DriverLinearSVC]]), bounded like the knn stage by the
+    * annotation budget. The Spark-trained lr/randomforest models keep
+    * Spark's training summary, a lazy plan over the freed checkpoint that
     * nothing here reads. */
-  private def finalStage(df: DataFrame, classifier: String): FinalStage =
-    classifier match {
-      case "lr" =>
-        MlStage(new LogisticRegression().setFeaturesCol("scaled_features")
-          .setLabelCol("y").setPredictionCol("finalPred")
-          .setRawPredictionCol("finalRaw").setProbabilityCol("finalProb")
-          .setMaxIter(100).fit(df), fromProbability = false)
-      case "sgd" =>
-        MlStage(new DriverLinearSVC().setFeaturesCol("scaled_features")
-          .setLabelCol("y").setPredictionCol("finalPred")
-          .setRawPredictionCol("finalRaw")
-          .setMaxIter(100).setRegParam(1e-4).setStandardization(false)
-          .setTol(1e-3) // sklearn SGDClassifier default tol
-          .fit(df), fromProbability = false)
-      case "randomforest" =>
-        MlStage(new RandomForestClassifier()
-          .setFeaturesCol("scaled_features")
-          .setLabelCol("y").setPredictionCol("finalPred")
-          .setRawPredictionCol("finalRaw").setProbabilityCol("finalProb")
-          .setNumTrees(100).setSeed(42L).fit(df), fromProbability = true)
-      case "adaboost" =>
-        MlStage(new GBTClassifier().setFeaturesCol("scaled_features")
-          .setLabelCol("y").setPredictionCol("finalPred")
-          .setRawPredictionCol("finalRaw").setProbabilityCol("finalProb")
-          .setMaxIter(50).setSeed(42L).fit(df), fromProbability = false)
-      case "knn" =>
-        // the labeled set is human-annotation-bounded (same justification
-        // as the C7 threshold pooling collect)
-        val train = df.select(col("scaled_features"), col("y"))
-          .collect()
-          .map(r => (r.getAs[Vector](0), r.getDouble(1)))
-        KnnStage(train, k = 5)
-      case _ =>
-        MlStage(new DriverLinearSVC().setFeaturesCol("scaled_features")
-          .setLabelCol("y").setPredictionCol("finalPred")
-          .setRawPredictionCol("finalRaw")
-          .setMaxIter(100).setRegParam(0.01).setTol(1e-3).fit(df),
-          fromProbability = false)
-    }
+  private val zoo: Seq[(String, ZooEntry)] = Seq(
+    "sgd" -> mlEntry(new DriverLinearSVC().setMaxIter(100).setRegParam(1e-4)
+      .setStandardization(false)
+      .setTol(1e-3), // sklearn SGDClassifier default tol
+      LinearSVCModel.load, fromProbability = false),
+    "knn" -> ZooEntry(
+      df => knnStage(df.select(col("scaled_features"), col("y"))),
+      dir => knnStage(SparkSession.active.read.parquet(dir))),
+    "svc" -> mlEntry(
+      new DriverLinearSVC().setMaxIter(100).setRegParam(0.01).setTol(1e-3),
+      LinearSVCModel.load, fromProbability = false),
+    "randomforest" -> mlEntry(
+      new RandomForestClassifier().setNumTrees(100).setSeed(42L),
+      RandomForestClassificationModel.load, fromProbability = true),
+    "adaboost" -> mlEntry(new GBTClassifier().setMaxIter(50).setSeed(42L),
+      GBTClassificationModel.load, fromProbability = false),
+    "lr" -> mlEntry(new LogisticRegression().setMaxIter(100),
+      LogisticRegressionModel.load, fromProbability = false))
+
+  val validClassifiers: Seq[String] = zoo.map(_._1)
+
+  /** The zoo entry of `classifier`; unknown names fail fast with the
+    * valid set, as the reference's `_valid_classifiers[...]` does. */
+  private def zooEntry(classifier: String): ZooEntry = {
+    require(validClassifiers.contains(classifier),
+      s"Unknown classifier '$classifier'; valid: " +
+        validClassifiers.mkString(", ") +
+        " (reference relation_extraction_classifier.py:12-18)")
+    zoo.toMap.apply(classifier)
+  }
 
   /** S7 classifier persistence (refuse-overwrite semantics,
     * `active_learning_core.py:60-75`). */
@@ -310,7 +326,7 @@ object RelationClassifier {
       case MlStage(w: org.apache.spark.ml.util.MLWritable, _) =>
         w.write.save(s"$dir/final")
       case KnnStage(train, _) =>
-        val spark = org.apache.spark.sql.SparkSession.active
+        val spark = SparkSession.active
         import spark.implicits._
         spark.createDataFrame(train.toSeq).toDF("features", "y")
           .write.parquet(s"$dir/final")
@@ -320,33 +336,17 @@ object RelationClassifier {
       s"""{"classifier":"${m.classifier}"}""")
   }
 
+  /** Loads a [[save]]d bundle; a bundle naming no known classifier fails
+    * like [[fit]] does. */
   def load(dir: String): Model = {
     val meta = graft.pipeline.Fs.readString(s"$dir/meta.json")
-    val cls = "\"classifier\":\"([a-z]+)\"".r
-      .findFirstMatchIn(meta).map(_.group(1)).getOrElse("svc")
-    val finalStage: FinalStage = cls match {
-      case "lr" =>
-        MlStage(LogisticRegressionModel.load(s"$dir/final"),
-          fromProbability = false)
-      case "randomforest" =>
-        MlStage(RandomForestClassificationModel.load(s"$dir/final"),
-          fromProbability = true)
-      case "adaboost" =>
-        MlStage(GBTClassificationModel.load(s"$dir/final"),
-          fromProbability = false)
-      case "knn" =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val train = spark.read.parquet(s"$dir/final")
-          .collect().map(r => (r.getAs[Vector](0), r.getDouble(1)))
-        KnnStage(train, k = 5)
-      case _ => // svc, sgd
-        MlStage(LinearSVCModel.load(s"$dir/final"),
-          fromProbability = false)
-    }
+    val cls = "\"classifier\":\"([^\"]*)\"".r
+      .findFirstMatchIn(meta).fold("")(_.group(1))
+    val stage = zooEntry(cls)
     Model(
       bagCols.indices.map(i => CountVectorizerModel.load(s"$dir/vec_$i")),
       LinearSVCModel.load(s"$dir/inner_svc"),
       StandardScalerModel.load(s"$dir/scaler"),
-      cls, finalStage)
+      cls, stage.load(s"$dir/final"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.output
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Evaluation operators (M1/M2).
@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/iepy/utils.py:62-89`: precision=1.0 when nothing
   * predicted, recall=1.0 when gold empty).
   *
-  * M2 `resultDict` — tp/fp/tn/fn + accuracy/precision/recall/F1 from
-  * boolean predictions (`/root/reference/iepy/metrics.py:6-48`).
+  * M2 `confusion` — tp/fp/tn/fn + accuracy/precision/recall/F1 from
+  * boolean predictions (reference `iepy/metrics.py:6-48`), global
+  * (`resultDict`) or per group (the rules verifier's per-rule report).
   */
 object Metrics {
 
@@ -24,21 +25,22 @@ object Metrics {
     val keys = Seq("subj", "pred", "obj")
     val p = predicted.select(keys.map(col): _*).distinct().persist()
     val g = gold.select(keys.map(col): _*).distinct().persist()
-    val nP = p.count(); val nG = g.count()
-    val correct = p.join(g, keys, "left_semi").count()
-    p.unpersist(); g.unpersist()
-    val prec = if (nP == 0) 1.0 else correct.toDouble / nP
-    val rec = if (nG == 0) 1.0 else correct.toDouble / nG
-    val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
-    PRF1(correct, nP, nG, prec, rec, f1)
+    try {
+      val nP = p.count(); val nG = g.count()
+      val correct = p.join(g, keys, "left_semi").count()
+      val prec = if (nP == 0) 1.0 else correct.toDouble / nP
+      val rec = if (nG == 0) 1.0 else correct.toDouble / nG
+      val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
+      PRF1(correct, nP, nG, prec, rec, f1)
+    } finally { p.unpersist(); g.unpersist() }
   }
 
-  /** Confusion counts in ONE aggregation pass (no per-cell scans). */
-  def resultDict(spark: SparkSession, df: DataFrame,
-      predictedCol: String = "predicted_label",
-      realCol: String = "real_label"): DataFrame = {
-    val p = col(predictedCol); val r = col(realCol)
-    df.agg(
+  /** Confusion counts of boolean prediction `p` vs truth `r` plus
+    * accuracy/precision/recall/F1, one row per `keys` group (one global
+    * row without keys), in ONE aggregation pass (no per-cell scans). */
+  def confusion(df: DataFrame, p: Column, r: Column,
+      keys: Column*): DataFrame =
+    df.groupBy(keys: _*).agg(
       sum(when(p && r, 1).otherwise(0)).as("tp"),
       sum(when(p && !r, 1).otherwise(0)).as("fp"),
       sum(when(!p && !r, 1).otherwise(0)).as("tn"),
@@ -56,5 +58,10 @@ object Metrics {
         when(col("precision") + col("recall") === 0, lit(0.0))
           .otherwise(lit(2) * col("precision") * col("recall") /
             (col("precision") + col("recall"))))
-  }
+
+  /** M2 over the whole table: [[confusion]] with no keys. */
+  def resultDict(spark: SparkSession, df: DataFrame,
+      predictedCol: String = "predicted_label",
+      realCol: String = "real_label"): DataFrame =
+    confusion(df, col(predictedCol), col(realCol))
 }

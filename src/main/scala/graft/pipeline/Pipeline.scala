@@ -160,7 +160,7 @@ object Pipeline {
     raw.mapPartitions { it =>
       val ner = cachedNer(bc)
       val cores = relations.map { case (rel, rules) =>
-        (rel, new Rules.RuleCore(rules, rel.leftKind, rel.rightKind))
+        (rel, new Rules.RuleCore(rules, rel))
       }
       it.map { rawDoc =>
         val b = preprocessDoc(rawDoc, ner, withParses = false)

@@ -3,6 +3,7 @@ package graft.rules
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.candidates.Candidates
+import graft.output.Metrics
 import graft.schema.{Evidence, Relation}
 
 /** R9 rules verifier (reference
@@ -25,10 +26,8 @@ object RuleVerifier {
       relation: Relation): DataFrame = {
     import spark.implicits._
     val matches = labeled.mapPartitions { it =>
-      val compiled = rules.map(r => (r.name, r.answer,
-        new Rules.Matcher(Rules.prefixed(r.build(
-          Rules.subjectPat(relation.leftKind),
-          Rules.objectPat(relation.rightKind))))))
+      val compiled =
+        rules.map(r => (r.name, r.answer, Rules.compile(r, relation)))
       it.flatMap { case (ev, label) =>
         val toks = Candidates.tokensToMatch(ev)
         compiled.map { case (name, answer, m) =>
@@ -43,22 +42,7 @@ object RuleVerifier {
 
     val predicted = when(col("matched"), col("answer"))
       .otherwise(!col("answer"))
-    matches
-      .withColumn("p", predicted)
-      .groupBy(col("rule"))
-      .agg(
-        sum(when(col("p") && col("label"), 1).otherwise(0)).as("tp"),
-        sum(when(col("p") && !col("label"), 1).otherwise(0)).as("fp"),
-        sum(when(!col("p") && !col("label"), 1).otherwise(0)).as("tn"),
-        sum(when(!col("p") && col("label"), 1).otherwise(0)).as("fn"))
-      .withColumn("accuracy", (col("tp") + col("tn")) /
-        (col("tp") + col("tn") + col("fp") + col("fn")))
-      .withColumn("precision", when(col("tp") + col("fp") === 0, 1.0)
-        .otherwise(col("tp") / (col("tp") + col("fp"))))
-      .withColumn("recall", when(col("tp") + col("fn") === 0, 1.0)
-        .otherwise(col("tp") / (col("tp") + col("fn"))))
-      .withColumn("f1", when(col("precision") + col("recall") === 0, 0.0)
-        .otherwise(lit(2) * col("precision") * col("recall") /
-          (col("precision") + col("recall"))))
+    Metrics.confusion(matches.withColumn("p", predicted),
+      col("p"), col("label"), col("rule"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.rules
 
 import scala.collection.mutable
+import graft.schema.Relation
 
 /** Token-regex rule engine.
   *
@@ -18,8 +19,8 @@ import scala.collection.mutable
   *    `examples/birthdate/was_born_rules_sample.py:57-62`, but e.g.
   *    `was_born_and_mentions_place` does not and still matches sentences
   *    with trailing clauses). [[Matcher]] itself is full-sequence;
-  *    every rule-application site compiles through [[prefixed]], which
-  *    appends the implicit `Star(Any)`.
+  *    every rule-application site compiles through [[compile]], whose
+  *    [[prefixed]] appends the implicit `Star(Any)`.
   *  - `Token("was born")` = concatenation of consecutive single-token
   *    predicates (`rules.py:52-64`)
   *  - rules sorted by priority desc, first match wins, no match -> False
@@ -90,6 +91,12 @@ object Rules {
       answer: Boolean,
       priority: Int,
       build: (Pat, Pat) => Pat)
+
+  /** `rule` over `relation`'s subject/object kinds, with refo.match
+    * prefix semantics: the one way a rule is compiled for matching. */
+  def compile(rule: Rule, relation: Relation): Matcher =
+    new Matcher(prefixed(rule.build(subjectPat(relation.leftKind),
+      objectPat(relation.rightKind))))
 
   // --- Thompson NFA ------------------------------------------------------
   /** Compiled matcher: epsilon-free state machine, O(states * tokens). */
@@ -182,14 +189,10 @@ object Rules {
 
   /** Compiled rule set for one relation; rules by priority desc (stable),
     * first match wins (reference `rules_core.py:25,71-77`). */
-  final class RuleCore(
-      rules: Seq[Rule], leftKind: String, rightKind: String)
+  final class RuleCore(rules: Seq[Rule], relation: Relation)
       extends Serializable {
-    private val compiled: Seq[(Matcher, Boolean)] = {
-      val s = subjectPat(leftKind); val o = objectPat(rightKind)
-      rules.sortBy(r => -r.priority).map(r =>
-        (new Matcher(prefixed(r.build(s, o))), r.answer))
-    }
+    private val compiled: Seq[(Matcher, Boolean)] =
+      rules.sortBy(r => -r.priority).map(r => (compile(r, relation), r.answer))
     /** None if no rule matched (caller maps to False,
       * `rules_core.py:50-52`). */
     def matchEvidence(tokens: IndexedSeq[TokenToMatch]): Option[Boolean] =

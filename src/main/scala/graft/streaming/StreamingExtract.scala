@@ -33,7 +33,7 @@ import graft.schema.RawDoc
   *      joined against the accumulated entity-form table — entity-vocab
   *      bounded, never corpus bounded);
   *   2. re-runs CC on touched-component entities + batch entities ONLY
-  *      (the star-shape contract in [[Canonicalize.normalForms]] makes
+  *      (the star-shape contract in [[Canonicalize.formsExpr]] makes
   *      one component-hop closure sufficient: every merge chain passes
   *      through a batch entity, whose direct form-neighbors all lie in
   *      touched components);
@@ -248,154 +248,157 @@ object StreamingExtract {
       persisted += df.persist(); df
     }
 
-    val batchExtract = spark.read.parquet(s"$extractDir/$curName")
-      .as[Pipeline.DocExtract]
-    val batchEnts = cached(Pipeline.dedupeEntities(
-      batchExtract.flatMap(_.entities).toDF()))
-    val batchPreds = batchExtract.flatMap(_.predictions).toDF()
-      .filter($"answer")
+    try {
+      val batchExtract = spark.read.parquet(s"$extractDir/$curName")
+        .as[Pipeline.DocExtract]
+      val batchEnts = cached(Pipeline.dedupeEntities(
+        batchExtract.flatMap(_.entities).toDF()))
+      val batchPreds = batchExtract.flatMap(_.predictions).toDF()
+        .filter($"answer")
 
-    val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev, delta) =
-      prevDir match {
-        case None =>
-          val canon = cached(Canonicalize.components(spark, batchEnts))
-          (batchEnts, canon, Pipeline.triplesOf(batchPreds, canon),
-            batchEnts.count(), 0L, 0L,
-            None: Option[(DataFrame, DataFrame)])
-        case Some(p) =>
-          val prevEnts = cached(spark.read.parquet(s"$p/entities"))
-          val prevCanon = cached(spark.read.parquet(s"$p/canonical"))
-          val prevTriples = spark.read.parquet(s"$p/triples")
-          // 1. touched components: prior entities sharing ANY
-          //    (kind, form) with a batch entity, lifted to their
-          //    component. Both sides entity-vocab bounded.
-          val batchForms = Canonicalize.entityForms(batchEnts)
-            .select($"form").distinct()
-          // touched = prior entities sharing a (kind, form) with the
-          // batch, PLUS prior entities whose entity_key itself recurs
-          // in the batch. The second leg is NOT redundant: coref
-          // repointing can attach a form-disjoint, lexicographically
-          // smaller alias to an existing key (e.g. a created anaphora
-          // mention on a gazette canonical), and dedupeEntities'
-          // min(alias) then REPLACES the key's form set — without the
-          // key-identity leg the key's prior component reads as
-          // untouched, newCanon holds the key twice (sub-CC + untouched
-          // remainder) and the alias-min's split/re-merge never applies,
-          // breaking the bit-identical-to-full-re-link guarantee.
-          val touchedKeys0 = Canonicalize.entityForms(prevEnts)
-            .join(batchForms, "form").select($"entity_key")
-            .unionByName(prevEnts
-              .join(batchEnts.select($"entity_key"),
-                Seq("entity_key"), "leftsemi")
-              .select($"entity_key"))
-            .distinct()
-          val touchedComps = cached(prevCanon.join(touchedKeys0, "entity_key")
-            .select($"canonical").distinct())
-          // every entity of a touched component (the CC re-run needs the
-          // full component, or the representative election would forget
-          // members)
-          val touchedEnts = prevEnts.join(prevCanon, "entity_key")
-            .join(touchedComps, Seq("canonical"), "leftsemi")
-            .drop("canonical")
-          // 2. CC over touched + batch only
-          val ccInput = cached(Pipeline.dedupeEntities(
-            touchedEnts.unionByName(batchEnts)))
-          val subCanon = Canonicalize.components(spark, ccInput)
-          // 3. untouched remainder keeps its canonical verbatim
-          val untouched = prevCanon
-            .join(touchedComps, Seq("canonical"), "left_anti")
-          val newCanon = cached(subCanon.unionByName(
-            untouched.select($"entity_key", $"canonical")))
-          // 4. triples: keep rows of untouched components; rebuild rows
-          //    whose subject or object component was touched, from their
-          //    source predictions (id-width columnar scan of the
-          //    accumulated extract — text never lives there)
-          val keep = prevTriples
-            .join(touchedComps.withColumnRenamed("canonical", "subj"),
-              Seq("subj"), "left_anti")
-            .join(touchedComps.withColumnRenamed("canonical", "obj"),
-              Seq("obj"), "left_anti")
-          val touchedAllKeys = cached(prevCanon
-            .join(touchedComps, Seq("canonical"), "leftsemi")
-            .select($"entity_key"))
-          val oldDirs = extractDirsBefore(extractDir, curName)
-          val touchedOldPreds =
-            if (oldDirs.isEmpty) batchPreds.limit(0)
-            else {
-              val oldPreds = spark.read.parquet(oldDirs: _*)
-                .as[Pipeline.DocExtract]
-                .flatMap(_.predictions).toDF().filter($"answer")
-              // OR-semi-join (left OR right key touched): two semi
-              // joins + distinct — prediction rows are value-identical
-              // duplicates when both sides match, so distinct is exact
-              oldPreds.join(touchedAllKeys
-                  .withColumnRenamed("entity_key", "left_key"),
-                  Seq("left_key"), "leftsemi")
-                .unionByName(oldPreds.join(touchedAllKeys
-                  .withColumnRenamed("entity_key", "right_key"),
-                  Seq("right_key"), "leftsemi"))
-                .distinct()
-            }
-          val rebuilt = Pipeline.triplesOf(
-            batchPreds.unionByName(touchedOldPreds), newCanon)
-          val allEnts = Pipeline.dedupeEntities(
-            prevEnts.unionByName(batchEnts))
-          (allEnts, newCanon, keep.unionByName(rebuilt),
-            ccInput.count(), touchedComps.count(), 1L,
-            Some((touchedComps, rebuilt)): Option[(DataFrame, DataFrame)])
-      }
-
-    // write state (overwrite: a replayed batch rewrites identical
-    // content), then the _COMMIT marker LAST — a crash mid-write leaves
-    // an uncommitted dir the next attempt ignores
-    allEnts.write.mode("overwrite").parquet(s"$cur/entities")
-    newCanon.write.mode("overwrite").parquet(s"$cur/canonical")
-    val persistedTriples = cached(triples)
-    persistedTriples.write.mode("overwrite").parquet(s"$cur/triples")
-    val totalEnts = spark.read.parquet(s"$cur/entities").count()
-    Fs.writeString(s"$cur/metrics.json",
-      s"""{"batch_id":$batchId,"cc_input_entities":$ccInputN,""" +
-        s""""touched_components":$touchedN,"total_entities":$totalEnts,""" +
-        s""""incremental":$keptPrev}""")
-    Fs.writeString(s"$cur/_COMMIT", "")
-    // visible table: swap a copy in, so readers never see a torn dir and
-    // the immutable state copy stays pristine for the next batch/replay
-    val triplesDir = s"$workDir/triples"
-    val tmp = triplesDir + "_tmp"
-    persistedTriples.write.mode("overwrite").parquet(tmp)
-    Fs.swapInto(tmp, triplesDir)
-    // optional Iceberg twin of the visible table: first batch = full
-    // snapshot write; later batches = touched-component DELETE + APPEND
-    // (NOT createOrReplace — replacing the whole table per micro-batch
-    // would make the incremental link pointless on the catalog path).
-    // Guarded by the runtime probe so the same code is a no-op here
-    // (no Iceberg jars in this sandbox) and live on a real cluster.
-    icebergTable
-      .filter(_ => graft.sources.IcebergTripleSink.available)
-      .foreach { tbl =>
-        val sink = new graft.sources.IcebergTripleSink
-        delta match {
+      val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev, delta) =
+        prevDir match {
           case None =>
-            sink.write(spark, persistedTriples, tbl, buckets = 32,
-              metrics = Map("batch_id" -> batchId))
-          case Some((touched, rebuilt)) =>
-            sink.writeIncremental(spark, rebuilt, touched, tbl)
+            val canon = cached(Canonicalize.components(spark, batchEnts))
+            (batchEnts, canon, Pipeline.triplesOf(batchPreds, canon),
+              batchEnts.count(), 0L, 0L,
+              None: Option[(DataFrame, DataFrame)])
+          case Some(p) =>
+            val prevEnts = cached(spark.read.parquet(s"$p/entities"))
+            val prevCanon = cached(spark.read.parquet(s"$p/canonical"))
+            val prevTriples = spark.read.parquet(s"$p/triples")
+            // 1. touched components: prior entities sharing ANY
+            //    (kind, form) with a batch entity, lifted to their
+            //    component. Both sides entity-vocab bounded.
+            val batchForms = Canonicalize.entityForms(batchEnts)
+              .select($"form").distinct()
+            // touched = prior entities sharing a (kind, form) with the
+            // batch, PLUS prior entities whose entity_key itself recurs
+            // in the batch. The second leg is NOT redundant: coref
+            // repointing can attach a form-disjoint, lexicographically
+            // smaller alias to an existing key (e.g. a created anaphora
+            // mention on a gazette canonical), and dedupeEntities'
+            // min(alias) then REPLACES the key's form set — without the
+            // key-identity leg the key's prior component reads as
+            // untouched, newCanon holds the key twice (sub-CC + untouched
+            // remainder) and the alias-min's split/re-merge never applies,
+            // breaking the bit-identical-to-full-re-link guarantee.
+            val touchedKeys0 = Canonicalize.entityForms(prevEnts)
+              .join(batchForms, "form").select($"entity_key")
+              .unionByName(prevEnts
+                .join(batchEnts.select($"entity_key"),
+                  Seq("entity_key"), "leftsemi")
+                .select($"entity_key"))
+              .distinct()
+            val touchedComps = cached(prevCanon.join(touchedKeys0, "entity_key")
+              .select($"canonical").distinct())
+            // every entity of a touched component (the CC re-run needs the
+            // full component, or the representative election would forget
+            // members)
+            val touchedEnts = prevEnts.join(prevCanon, "entity_key")
+              .join(touchedComps, Seq("canonical"), "leftsemi")
+              .drop("canonical")
+            // 2. CC over touched + batch only
+            val ccInput = cached(Pipeline.dedupeEntities(
+              touchedEnts.unionByName(batchEnts)))
+            val subCanon = Canonicalize.components(spark, ccInput)
+            // 3. untouched remainder keeps its canonical verbatim
+            val untouched = prevCanon
+              .join(touchedComps, Seq("canonical"), "left_anti")
+            val newCanon = cached(subCanon.unionByName(
+              untouched.select($"entity_key", $"canonical")))
+            // 4. triples: keep rows of untouched components; rebuild rows
+            //    whose subject or object component was touched, from their
+            //    source predictions (id-width columnar scan of the
+            //    accumulated extract — text never lives there)
+            val keep = prevTriples
+              .join(touchedComps.withColumnRenamed("canonical", "subj"),
+                Seq("subj"), "left_anti")
+              .join(touchedComps.withColumnRenamed("canonical", "obj"),
+                Seq("obj"), "left_anti")
+            val touchedAllKeys = cached(prevCanon
+              .join(touchedComps, Seq("canonical"), "leftsemi")
+              .select($"entity_key"))
+            val oldDirs = extractDirsBefore(extractDir, curName)
+            val touchedOldPreds =
+              if (oldDirs.isEmpty) batchPreds.limit(0)
+              else {
+                val oldPreds = spark.read.parquet(oldDirs: _*)
+                  .as[Pipeline.DocExtract]
+                  .flatMap(_.predictions).toDF().filter($"answer")
+                // OR-semi-join (left OR right key touched): two semi
+                // joins + distinct — prediction rows are value-identical
+                // duplicates when both sides match, so distinct is exact
+                oldPreds.join(touchedAllKeys
+                    .withColumnRenamed("entity_key", "left_key"),
+                    Seq("left_key"), "leftsemi")
+                  .unionByName(oldPreds.join(touchedAllKeys
+                    .withColumnRenamed("entity_key", "right_key"),
+                    Seq("right_key"), "leftsemi"))
+                  .distinct()
+              }
+            val rebuilt = Pipeline.triplesOf(
+              batchPreds.unionByName(touchedOldPreds), newCanon)
+            val allEnts = Pipeline.dedupeEntities(
+              prevEnts.unionByName(batchEnts))
+            (allEnts, newCanon, keep.unionByName(rebuilt),
+              ccInput.count(), touchedComps.count(), 1L,
+              Some((touchedComps, rebuilt)): Option[(DataFrame, DataFrame)])
         }
+
+      // write state (overwrite: a replayed batch rewrites identical
+      // content), then the _COMMIT marker LAST — a crash mid-write leaves
+      // an uncommitted dir the next attempt ignores
+      allEnts.write.mode("overwrite").parquet(s"$cur/entities")
+      newCanon.write.mode("overwrite").parquet(s"$cur/canonical")
+      val persistedTriples = cached(triples)
+      persistedTriples.write.mode("overwrite").parquet(s"$cur/triples")
+      val totalEnts = spark.read.parquet(s"$cur/entities").count()
+      Fs.writeString(s"$cur/metrics.json",
+        s"""{"batch_id":$batchId,"cc_input_entities":$ccInputN,""" +
+          s""""touched_components":$touchedN,"total_entities":$totalEnts,""" +
+          s""""incremental":$keptPrev}""")
+      Fs.writeString(s"$cur/_COMMIT", "")
+      // visible table: swap a copy in, so readers never see a torn dir and
+      // the immutable state copy stays pristine for the next batch/replay
+      val triplesDir = s"$workDir/triples"
+      val tmp = triplesDir + "_tmp"
+      persistedTriples.write.mode("overwrite").parquet(tmp)
+      Fs.swapInto(tmp, triplesDir)
+      // optional Iceberg twin of the visible table: first batch = full
+      // snapshot write; later batches = touched-component DELETE + APPEND
+      // (NOT createOrReplace — replacing the whole table per micro-batch
+      // would make the incremental link pointless on the catalog path).
+      // Guarded by the runtime probe so the same code is a no-op without
+      // the Iceberg jars on the classpath and live on a real cluster.
+      icebergTable
+        .filter(_ => graft.sources.IcebergTripleSink.available)
+        .foreach { tbl =>
+          val sink = new graft.sources.IcebergTripleSink
+          delta match {
+            case None =>
+              sink.write(spark, persistedTriples, tbl, buckets = 32,
+                metrics = Map("batch_id" -> batchId))
+            case Some((touched, rebuilt)) =>
+              sink.writeIncremental(spark, rebuilt, touched, tbl)
+          }
+        }
+      // prune states older than the one a replay of THIS batch would need
+      prevDir.foreach { p =>
+        val prevName = p.split('/').last
+        Fs.listDirs(stateRoot, "batch_")
+          .filter(d => d.split('/').last < prevName)
+          .foreach(Fs.deleteRecursive)
       }
-    // prune states older than the one a replay of THIS batch would need
-    prevDir.foreach { p =>
-      val prevName = p.split('/').last
-      Fs.listDirs(stateRoot, "batch_")
-        .filter(d => d.split('/').last < prevName)
-        .foreach(Fs.deleteRecursive)
+      // keep the extract layout bounded: fold accumulated batch dirs into
+      // one compacted dir every `compactEvery` batches (a replay of THIS
+      // batch is untouched — only strictly-earlier dirs compact)
+      maybeCompactExtract(spark, extractDir, curName, compactEvery)
+    } finally { // a failing step must not leave its caches behind either
+      persisted.foreach(_.unpersist())
+      // release any operator-internal tracked caches — the same release
+      // the batch run handle performs post-materialize
+      graft.pipeline.Caches.release()
     }
-    // keep the extract layout bounded: fold accumulated batch dirs into
-    // one compacted dir every `compactEvery` batches (a replay of THIS
-    // batch is untouched — only strictly-earlier dirs compact)
-    maybeCompactExtract(spark, extractDir, curName, compactEvery)
-    persisted.foreach(_.unpersist())
-    // release any operator-internal tracked caches — the same release
-    // the batch run handle performs post-materialize
-    graft.pipeline.Caches.release()
   }
 }

@@ -156,19 +156,17 @@ object TextOps {
       val slots = (0 until rows).map(r => col(s"mh_${b * rows + r}"))
       md5(concat_ws("|", slots: _*)).as(s"bk_$b")
     }
-    // round-robin repartition before caching: the key table is the
-    // LEFT side of every band join below, and with the post-join
-    // exchange gone its partitioning IS the parallelism of the whole
-    // candidate/verify stream. A small parquet input scans as one
-    // partition, which would serialize the quadratic probe work onto
-    // one task; repartitioning AFTER the key derivation exchanges only
-    // id+keys rows (O(docs * bands) bytes), the cheapest point to buy
-    // the parallelism (measured: spreading the text before the
-    // derivation instead costs one more AQE stage than it saves at
-    // this derivation's per-row weight).
+    // [[spread]] before caching: the key table is the LEFT side of
+    // every band join below, and with the post-join exchange gone its
+    // partitioning IS the parallelism of the whole candidate/verify
+    // stream. A small parquet input scans as one partition, which would
+    // serialize the quadratic probe work onto one task; spreading AFTER
+    // the key derivation exchanges only id+keys rows (O(docs * bands)
+    // bytes), the cheapest point to buy the parallelism (measured:
+    // spreading the text before the derivation instead costs one more
+    // AQE stage than it saves at this derivation's per-row weight).
     val sig = graft.pipeline.Caches.tracked(
-      mh.select(col("doc_id") +: bandKeys: _*)
-        .repartition(documents.sparkSession.sparkContext.defaultParallelism))
+      spread(mh.select(col("doc_id") +: bandKeys: _*)))
     firstMatchingBandPairs(sig, bands, j => s"bk_$j", (_, k) => k)
   }
 

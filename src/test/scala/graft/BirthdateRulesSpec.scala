@@ -23,8 +23,7 @@ class BirthdateRulesSpec extends AnyFunSuite {
     Candidates.evidencesOf(seg, rel).head
   }
 
-  private val core = new Rules.RuleCore(BirthdateRules.rules,
-    rel.leftKind, rel.rightKind)
+  private val core = new Rules.RuleCore(BirthdateRules.rules, rel)
 
   test("was_born_explicit_mention matches") {
     // Shamsher Chowdhury was born in 1950 .

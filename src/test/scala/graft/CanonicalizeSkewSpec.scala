@@ -14,7 +14,7 @@ class CanonicalizeSkewSpec extends SparkSpec {
 
   private def entities(n: Int, hotEvery: Int) = {
     import spark.implicits._
-    // lowercase snake aliases: normalForms collapses to 2 forms/entity
+    // lowercase snake aliases: formsExpr collapses to 2 forms/entity
     spark.range(n.toLong).select(
       format_string("e%07d", $"id").as("entity_key"),
       lit("FUNCTION").as("kind"),

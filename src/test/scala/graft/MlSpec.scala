@@ -163,6 +163,22 @@ class MlSpec extends SparkSpec {
     assert(a.keys == b.keys)
     a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-9) }
   }
+
+  test("load rejects a bundle naming an unknown or no classifier (C1 contract)") {
+    val dir = java.nio.file.Files.createTempDirectory("clf").toString + "/m"
+    RelationClassifier.save(RelationClassifier.fit(labeledDf(4)), dir)
+    graft.pipeline.Fs.writeString(s"$dir/meta.json",
+      """{"classifier":"perceptron"}""")
+    val e = intercept[IllegalArgumentException] {
+      RelationClassifier.load(dir)
+    }
+    assert(e.getMessage.contains("perceptron") &&
+      e.getMessage.contains("adaboost"))
+    graft.pipeline.Fs.writeString(s"$dir/meta.json", "{}")
+    assertThrows[IllegalArgumentException] {
+      RelationClassifier.load(dir)
+    }
+  }
 }
 
 /** Labeled evidences: "<name> was born in <year>" positives and

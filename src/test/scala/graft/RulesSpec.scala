@@ -30,8 +30,7 @@ class RulesSpec extends AnyFunSuite {
     Candidates.tokensToMatch(evs.head)
   }
 
-  private def core(rules: Rule*) =
-    new RuleCore(rules, rel.leftKind, rel.rightKind)
+  private def core(rules: Rule*) = new RuleCore(rules, rel)
 
   private val anything = Star(AnyTok)
 
