@@ -36,11 +36,11 @@ object RunPipeline {
     if (outDir.contains("--bench")) {
       def once(runSf: Double): (Long, Double) = {
         val t0 = System.nanoTime()
-        val (t, cl) = Pipeline.runWithCleanup(spark,
+        val h = Pipeline.runWithMetrics(spark,
           CorpusGen.rawDocs(spark, runSf), CorpusGen.gazette(runSf))
-        val n = t.count()
+        val n = h.triples.count()
         val secs = (System.nanoTime() - t0) / 1e9
-        cl()
+        h.cleanup()
         (n, secs)
       }
       // warm-up at a fraction of the target SF: the plan shape (and so
@@ -58,19 +58,12 @@ object RunPipeline {
     }
     val t0 = System.nanoTime()
     val raw = CorpusGen.rawDocs(spark, sf)
+    val gazette = CorpusGen.gazette(sf)
     // opt-in per-doc checkpointed extract: a killed run resumes from the
     // committed batches instead of starting over
-    sys.env.get("GRAFT_CHECKPOINT_DIR").foreach { ckptDir =>
-      val r = Pipeline.runCheckpointed(spark, raw,
-        CorpusGen.gazette(sf), ckptDir)
-      val n = r.triples.count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"""{"sf":$sf,"cores":"$cores","docs":${CorpusGen.numDocs(sf)},"triples":$n,"seconds":$secs%.2f,"checkpoint_dir":"$ckptDir","new_extract_batch":${r.newExtractBatch.map(b => s""""$b"""").getOrElse("null")}}""")
-      r.cleanup()
-      spark.stop()
-      return
-    }
-    val run = Pipeline.runWithMetrics(spark, raw, CorpusGen.gazette(sf))
+    val ckptDir = sys.env.get("GRAFT_CHECKPOINT_DIR")
+    val run = ckptDir.fold(Pipeline.runWithMetrics(spark, raw, gazette))(
+      Pipeline.runCheckpointed(spark, raw, gazette, _))
     val triples = run.triples
     val nTriples = triples.count()
     val secs = (System.nanoTime() - t0) / 1e9
@@ -78,7 +71,9 @@ object RunPipeline {
     val truncated = run.truncatedSegments.value
     outDir.foreach(d => Pipeline.materialize(spark, triples, d,
       metrics = Map("truncated_segments" -> truncated.longValue)))
-    println(f"""{"sf":$sf,"cores":"$cores","docs":${CorpusGen.numDocs(sf)},"triples":$nTriples,"seconds":$secs%.2f,"triples_per_sec":${nTriples / secs}%.1f,"precision":${prf.precision}%.4f,"recall":${prf.recall}%.4f,"f1":${prf.f1}%.4f,"truncated_segments":$truncated}""")
+    val ckpt = ckptDir.fold("")(d => s""","checkpoint_dir":"$d",""" +
+      s""""new_extract_batch":${run.newExtractBatch.fold("null")(b => s""""$b"""")}""")
+    println(f"""{"sf":$sf,"cores":"$cores","docs":${CorpusGen.numDocs(sf)},"triples":$nTriples,"seconds":$secs%.2f,"triples_per_sec":${nTriples / secs}%.1f,"precision":${prf.precision}%.4f,"recall":${prf.recall}%.4f,"f1":${prf.f1}%.4f,"truncated_segments":$truncated$ckpt}""")
     run.cleanup()
     spark.stop()
   }

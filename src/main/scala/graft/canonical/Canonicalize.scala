@@ -3,6 +3,7 @@ package graft.canonical
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import graft.pipeline.Caches
 import graft.schema.Mention
 
 /** Entity canonicalization.
@@ -37,10 +38,10 @@ object Canonicalize {
     * form are merged (same kind only). Forms: exact, lowercase, and a
     * case/underscore fold that unifies snake_case / camelCase /
     * kebab-case identifiers — the code-corpus analog of IEPy's
-    * surface-form identity (`stanford_preprocess.py:285-304`). The ONE
-    * definition both [[components]]' edge derivation and the streaming
-    * incremental linker's touch detection use; if they ever diverged,
-    * the incremental path would silently under-merge.
+    * surface-form identity (`stanford_preprocess.py:285-304`). Only
+    * [[verifyFixpoint]] explodes these edges; [[components]] and the
+    * streaming linker's touch detection key on [[hubExpr]], which the
+    * contract below makes equivalent.
     *
     * HARD CONTRACT for [[components]]' hub reduction: every form here
     * must be a refinement chain ENDING in the most-folded form — i.e. two
@@ -55,14 +56,11 @@ object Canonicalize {
   private[graft] def formsExpr: org.apache.spark.sql.Column =
     array_distinct(array(col("alias"), lower(col("alias")), foldedExpr))
 
-  /** (entity_key, form) rows for an entity table — form keys include the
-    * kind (never merge across kinds), exactly as [[components]] builds
-    * its edges. Entity-vocab bounded. */
-  def entityForms(entities: DataFrame): DataFrame =
-    entities
-      .select(col("entity_key"), col("kind"), explode(formsExpr).as("f"))
-      .select(col("entity_key"),
-        concat_ws(" ", col("kind"), col("f")).as("form"))
+  /** The CC hub key: kind plus most-folded form. By the [[formsExpr]]
+    * contract two entities share a form iff they share this key (a null
+    * alias keys on its kind alone, as its single null form does). */
+  private[graft] def hubExpr: org.apache.spark.sql.Column =
+    concat_ws(" ", col("kind"), foldedExpr)
 
   /** Connected components over a bipartite (vertex, form) edge list.
     *
@@ -92,11 +90,8 @@ object Canonicalize {
         when(col("from_gazette"), 0).otherwise(1)
       else lit(0)
     // kind is part of the hub key: never merge across kinds (reference
-    // `stanford_preprocess.py:366-374`). concat_ws skips a null folded
-    // form, so a null alias hubs on its kind alone — the same key
-    // entityForms gives its single null form.
-    val keyed = entities.select($"entity_key",
-      concat_ws(" ", $"kind", foldedExpr).as("hub"),
+    // `stanford_preprocess.py:366-374`)
+    val keyed = entities.select($"entity_key", hubExpr.as("hub"),
       struct(gazRank.as("r"), $"entity_key".as("k")).as("init"))
     // byHub is component-count-sized — far below the entity table; AQE
     // broadcasts it when measured small
@@ -114,15 +109,20 @@ object Canonicalize {
     * otherwise. Costs one action; test/debug only. */
   private[graft] def verifyFixpoint(entities: DataFrame,
       comp: DataFrame): Unit = {
-    val edges = entityForms(entities)
-    val frozen = comp.persist()
-    val byForm = edges.join(frozen, "entity_key")
-      .groupBy(col("form")).agg(min(col("component")).as("fcomp"))
-    val changed = edges.join(byForm, "form")
-      .groupBy(col("entity_key")).agg(min(col("fcomp")).as("next"))
-      .join(frozen, "entity_key")
-      .where(col("next") =!= col("component")).count()
-    frozen.unpersist()
+    // (entity_key, form) edges; the form key includes the kind
+    val edges = entities
+      .select(col("entity_key"), col("kind"), explode(formsExpr).as("f"))
+      .select(col("entity_key"),
+        concat_ws(" ", col("kind"), col("f")).as("form"))
+    val changed = Caches.scoped { scope =>
+      val frozen = scope.persist(comp)
+      val byForm = edges.join(frozen, "entity_key")
+        .groupBy(col("form")).agg(min(col("component")).as("fcomp"))
+      edges.join(byForm, "form")
+        .groupBy(col("entity_key")).agg(min(col("fcomp")).as("next"))
+        .join(frozen, "entity_key")
+        .where(col("next") =!= col("component")).count()
+    }
     require(changed == 0,
       s"CC not converged: $changed components still moving — a " +
         "normalizer violates the refinement-chain contract " +

@@ -3,6 +3,7 @@ package graft.labels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.pipeline.Caches
 
 /** Q8 — labeled-neighbor navigation, ported from
   * `Relation.labeled_neighbor` (`/root/reference/iepy/data/models.py:511-566`).
@@ -73,16 +74,16 @@ object NeighborNav {
       labels: DataFrame,
       objId: Long,
       back: Boolean,
-      judge: Option[String] = None): Option[Long] = {
-    val ls = labeledSegments(segments, evidences, labels, judge).persist()
-    try {
-      val head = ls.agg(
-        count(lit(1)).as("n"),
-        max(col("segment_id")).as("last"),
-        max(when(col("segment_id") === objId, lit(1)).otherwise(lit(0)))
-          .as("present")).head()
-      if (head.getLong(0) == 0L) return None
-      if (head.getInt(2) == 0) return Some(head.getLong(1))
+      judge: Option[String] = None): Option[Long] = Caches.scoped { scope =>
+    val ls = scope.persist(labeledSegments(segments, evidences, labels, judge))
+    val head = ls.agg(
+      count(lit(1)).as("n"),
+      max(col("segment_id")).as("last"),
+      max(when(col("segment_id") === objId, lit(1)).otherwise(lit(0)))
+        .as("present")).head()
+    if (head.getLong(0) == 0L) None
+    else if (head.getInt(2) == 0) Some(head.getLong(1))
+    else {
       val probe =
         if (back) ls.where(col("segment_id") < objId)
           .agg(max(col("segment_id")))
@@ -90,6 +91,6 @@ object NeighborNav {
           .agg(min(col("segment_id")))
       val r = probe.head()
       Some(if (r.isNullAt(0)) objId else r.getLong(0))
-    } finally ls.unpersist(false)
+    }
   }
 }

@@ -136,7 +136,7 @@ object ActiveLearning {
     // shuffle partitions makes every one of the CV's many tiny jobs pay
     // 32 task launches for a handful of rows each.
     val w = Window.partitionBy(col("label")).orderBy(col("evidence_id"))
-    // eager localCheckpoint, not persist + count: the five fold fits
+    // eager local checkpoint, not persist + count: the five fold fits
     // and scorings issue ~80 actions over this table, and each action
     // re-analyzes the logical plan — a persist leaves the 13-column
     // feature expression tree in every downstream plan (cache
@@ -146,7 +146,8 @@ object ActiveLearning {
     val folded = graft.features.Features.withDefaultFeatures(labeled)
       .withColumn("fold", (row_number().over(w) - 1) % 5)
       .coalesce(RelationClassifier.trainPartitions(perClass.sum))
-    val pooled = graft.pipeline.Caches.checkpointed(folded) { folded =>
+    val pooled = graft.pipeline.Caches.scoped { scope =>
+      val folds = scope.checkpoint(folded)
       // folds evaluated concurrently — Spark happily runs independent
       // actions from multiple threads, and each fold's fit is tiny
       import scala.concurrent.{Await, Future}
@@ -155,8 +156,8 @@ object ActiveLearning {
       Await.result(
         Future.sequence((0 until 5).map { k =>
           Future {
-            val train = folded.filter(col("fold") =!= k)
-            val test = folded.filter(col("fold") === k)
+            val train = folds.filter(col("fold") =!= k)
+            val test = folds.filter(col("fold") === k)
             val m = RelationClassifier.fit(train, classifier)
             m.transform(test).select(col("margin"), col("label").cast("int"))
               .collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq

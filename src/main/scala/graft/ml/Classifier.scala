@@ -186,7 +186,7 @@ object RelationClassifier {
     // caller's partitioning untouched.
     val input = featurized(labeled.coalesce(trainPartitions(nRows)))
       .withColumn("y", col("label").cast("double"))
-    // TRUNCATE the logical plan (eager localCheckpoint), don't just
+    // TRUNCATE the logical plan (eager local checkpoint), don't just
     // cache it: the vectorizer fits and the training-row collects each
     // re-analyze/re-optimize the logical plan — persist() substitutes
     // the cache only at physical planning, so the 13-column feature
@@ -194,7 +194,8 @@ object RelationClassifier {
     // Both checkpoints are labeled-set-sized by contract and freed
     // before fit returns; lost-executor recompute safety is irrelevant
     // at that size (the fit simply fails and is retried by its caller).
-    graft.pipeline.Caches.checkpointed(input) { checkpointed =>
+    graft.pipeline.Caches.scoped { scope =>
+      val checkpointed = scope.checkpoint(input)
       // vocab cap: a memory guard, not a semantic knob — annotation-bounded
       // label sets sit far below it; a corpus-sized vocabulary would blow
       // the driver-held CountVectorizerModel otherwise.
@@ -227,14 +228,12 @@ object RelationClassifier {
       // second truncation point: the scaler fit and the final-stage fit
       // both action over this subtree, whose plan now carries the four
       // vectorizer transforms + the inner-SVC scoring
-      graft.pipeline.Caches.checkpointed(
-          denseFeatures(innerSvc, sparse)) { dense =>
-        val scaler = new StandardScaler().setInputCol("dense_features")
-          .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
-          .fit(dense)
-        Model(vectorizers, innerSvc, scaler, classifier,
-          stage.fit(scaler.transform(dense)))
-      }
+      val dense = scope.checkpoint(denseFeatures(innerSvc, sparse))
+      val scaler = new StandardScaler().setInputCol("dense_features")
+        .setOutputCol("scaled_features").setWithMean(true).setWithStd(true)
+        .fit(dense)
+      Model(vectorizers, innerSvc, scaler, classifier,
+        stage.fit(scaler.transform(dense)))
     }
   }
 

@@ -2,6 +2,7 @@ package graft.output
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Caches
 
 /** Evaluation operators (M1/M2).
   *
@@ -21,19 +22,18 @@ object Metrics {
       precision: Double, recall: Double, f1: Double)
 
   /** Distributed set intersection: one left-semi join + three counts. */
-  def evaluate(predicted: DataFrame, gold: DataFrame): PRF1 = {
-    val keys = Seq("subj", "pred", "obj")
-    val p = predicted.select(keys.map(col): _*).distinct().persist()
-    val g = gold.select(keys.map(col): _*).distinct().persist()
-    try {
+  def evaluate(predicted: DataFrame, gold: DataFrame): PRF1 =
+    Caches.scoped { scope =>
+      val keys = Seq("subj", "pred", "obj")
+      val p = scope.persist(predicted.select(keys.map(col): _*).distinct())
+      val g = scope.persist(gold.select(keys.map(col): _*).distinct())
       val nP = p.count(); val nG = g.count()
       val correct = p.join(g, keys, "left_semi").count()
       val prec = if (nP == 0) 1.0 else correct.toDouble / nP
       val rec = if (nG == 0) 1.0 else correct.toDouble / nG
       val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
       PRF1(correct, nP, nG, prec, rec, f1)
-    } finally { p.unpersist(); g.unpersist() }
-  }
+    }
 
   /** Confusion counts of boolean prediction `p` vs truth `r` plus
     * accuracy/precision/recall/F1, one row per `keys` group (one global

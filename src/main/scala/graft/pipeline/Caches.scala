@@ -1,53 +1,65 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.{DataFrame, Dataset, classic}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Registry for operator-internal persisted intermediates.
+/** The one owner of cache lifetime: every persist and local checkpoint
+  * in the library goes through a [[Caches.Scope]], which frees exactly
+  * what it recorded.
   *
-  * Some operators persist a derived table that their (lazy) result keeps
-  * referencing — e.g. the LSH band table self-joined for candidate
-  * pairs, or the hashed token-set dimension joined twice. The operator
-  * cannot unpersist it before returning (the caller has not acted yet),
-  * and the caller cannot either (the table is internal). Left alone,
-  * each call leaks one cached table per long-lived session.
+  * Contract: a persisted entry may be released early — it is recomputed,
+  * never wrong. A checkpoint entry must not be read after release — its
+  * lineage is truncated, so freed blocks cannot be recomputed.
   *
-  * Contract: operators wrap such persists in [[tracked]]; any point that
-  * knows the results are materialized (a pipeline run handle, a bench
-  * harness between timed queries, a driver round boundary) calls
-  * [[release]]. Releasing early is always safe — an unpersisted
-  * intermediate is recomputed, never wrong.
+  * Call-local tables use [[scoped]]; a pipeline run keeps its scope in
+  * its `RunHandle`. An operator whose lazy result reads a table it
+  * persisted (the LSH band table, the hashed token-set dimension) wraps
+  * it in [[tracked]], the JVM-global scope that the bench harness and
+  * `Verify` free with [[release]] between queries.
   */
 object Caches {
-  private val registered =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  def tracked(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    registered.add(p)
-    p
-  }
+  /** Thread-safe; [[release]] never blocks and may be called again (it
+    * then frees what was recorded since). */
+  final class Scope {
+    private val frees = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  def release(): Unit = {
-    var df = registered.poll()
-    while (df != null) { df.unpersist(false); df = registered.poll() }
-  }
+    def persist[T](ds: Dataset[T]): Dataset[T] = {
+      val p = ds.persist()
+      frees.add(() => p.unpersist(false))
+      p
+    }
 
-  /** Runs `body` over an eager `localCheckpoint()` of `df` and frees the
-    * checkpoint's blocks when `body` returns or throws. For a table that
-    * many actions read within one call (the checkpoint truncates the
-    * logical plan each action re-analyzes). `body`'s result must not be
-    * a lazy plan over the checkpoint: once freed, the blocks cannot be
-    * recomputed. */
-  def checkpointed[T](df: DataFrame)(body: DataFrame => T): T = {
-    val cp = df.localCheckpoint()
-    try body(cp)
-    finally cp match {
-      case d: classic.Dataset[_] => d.queryExecution.logical match {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    /** An eager `localCheckpoint()`: truncates the logical plan that each
+      * action over `df` would otherwise re-analyze. */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint()
+      cp match {
+        case d: classic.Dataset[_] => d.queryExecution.logical match {
+          case r: LogicalRDD => frees.add(() => r.rdd.unpersist(blocking = false))
+          case _ => ()
+        }
         case _ => ()
       }
-      case _ => ()
+      cp
+    }
+
+    def release(): Unit = {
+      var f = frees.poll()
+      while (f != null) { f(); f = frees.poll() }
     }
   }
+
+  /** Runs `body` over a fresh scope, released when `body` returns or
+    * throws; the result must not be a lazy plan over its checkpoints. */
+  def scoped[T](body: Scope => T): T = {
+    val s = new Scope
+    try body(s) finally s.release()
+  }
+
+  private val global = new Scope
+
+  def tracked(df: DataFrame): DataFrame = global.persist(df)
+
+  def release(): Unit = global.release()
 }

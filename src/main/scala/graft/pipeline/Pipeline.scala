@@ -82,7 +82,7 @@ object Pipeline {
     * gazette + camel NER (no-overlap combine, gazette first), dedupe,
     * segment. Pure function — runs as one fused map.
     *
-    * `withParses`: the stored-doc surface ([[preprocess]]) populates the
+    * `withParses`: a caller that keeps the returned `Doc` gets the
     * per-sentence shallow-parse column (`syntactic_sentences`,
     * reference models.py:86); the fused triple extract passes false —
     * it never stores docs, so building parse strings there would be
@@ -188,36 +188,39 @@ object Pipeline {
     }
   }
 
-  /** Full-run handle: the triples plan, a cache-release hook, and the
-    * run metrics (accumulator values are valid after the caller's final
-    * action on the triples). */
+  /** One pipeline run: the triples plan, the run metrics (valid after
+    * the caller's final action on the triples), the extract batch dir a
+    * checkpointed run added (None in memory, and for a no-op resume),
+    * and the scope owning the run's caches. */
   final case class RunHandle(
       triples: DataFrame,
-      cleanup: () => Unit,
-      truncatedSegments: org.apache.spark.util.LongAccumulator)
-
-  /** Full run: returns the triples DataFrame [subj, pred, obj,
-    * evidence_id] and a cleanup handle releasing the intermediate caches
-    * (call it after the final action on the triples). */
-  def runWithCleanup(spark: SparkSession, raw: Dataset[RawDoc],
-      gazette: Seq[(String, String)]): (DataFrame, () => Unit) = {
-    val h = runWithMetrics(spark, raw, gazette)
-    (h.triples, h.cleanup)
+      truncatedSegments: org.apache.spark.util.LongAccumulator,
+      newExtractBatch: Option[String],
+      scope: Caches.Scope) {
+    /** Frees this run's caches only; call after the final action. */
+    def cleanup(): Unit = scope.release()
   }
 
+  /** [[runWithMetrics]] as (triples, cleanup). */
+  def runWithCleanup(spark: SparkSession, raw: Dataset[RawDoc],
+      gazette: Seq[(String, String)]): (DataFrame, () => Unit) = {
+    val h = runWithMetrics(spark, raw, gazette); (h.triples, () => h.cleanup())
+  }
+
+  /** Full in-memory run; the handle's triples are [subj, pred, obj,
+    * evidence_id]. */
   def runWithMetrics(spark: SparkSession, raw: Dataset[RawDoc],
       gazette: Seq[(String, String)]): RunHandle = {
     val trunc = spark.sparkContext.longAccumulator("truncated_segments")
+    val scope = new Caches.Scope
     // ONE narrow pass over raw docs; only ids/keys/answers are cached —
     // token arrays never leave the extract stage (cache-write of fat doc
     // bundles was the measured non-scaling cost at SF=0.1), negative
     // predictions are dropped at the source (the triple path never
     // reads them), entity rows arrive doc-locally deduped
-    val extracted = extract(spark, raw, gazette, Some(trunc),
-      keepNegatives = false).persist()
-    val (triples, cleanup) = assembleTriples(spark, extracted)
-    RunHandle(triples,
-      () => { extracted.unpersist(); cleanup() }, trunc)
+    val extracted = scope.persist(extract(spark, raw, gazette, Some(trunc),
+      keepNegatives = false))
+    RunHandle(assembleTriples(spark, extracted, scope), trunc, None, scope)
   }
 
   /** Global entity dedupe (one row per entity_key) — THE aggregation
@@ -254,29 +257,18 @@ object Pipeline {
     * `Canonicalize`) directly, since it merges them with carried
     * state. */
   private[graft] def assembleTriples(spark: SparkSession,
-      extracted: Dataset[DocExtract]): (DataFrame, () => Unit) = {
+      extracted: Dataset[DocExtract], scope: Caches.Scope): DataFrame = {
     import spark.implicits._
     val predictions = extracted.flatMap(_.predictions)
     // entities feed CC three ways (edges, initial components, canonical
     // ranking) — persist to shuffle the mention table once, not thrice
-    val entities = dedupeEntities(extracted.flatMap(_.entities).toDF())
-      .persist()
-    val canonical = Canonicalize.components(spark, entities).persist()
+    val entities = scope.persist(
+      dedupeEntities(extracted.flatMap(_.entities).toDF()))
+    val canonical = scope.persist(Canonicalize.components(spark, entities))
     // Everything above is lazy — the caller's first action runs ONE job:
     // preprocess (cached), CC chain, and the two canonical-key joins.
-    val triples = triplesOf(predictions.toDF().filter($"answer"), canonical)
-    (triples,
-      () => { entities.unpersist(); canonical.unpersist(); Caches.release() })
+    triplesOf(predictions.toDF().filter($"answer"), canonical)
   }
-
-  /** A [[runCheckpointed]] result: the triples plan, the batch dir this
-    * run added to the extract checkpoint (None when the resume found
-    * nothing missing and recomputed NOTHING), and the cache-release
-    * hook. */
-  final case class CheckpointedRun(
-      triples: DataFrame,
-      newExtractBatch: Option[String],
-      cleanup: () => Unit)
 
   /** Opt-in per-stage checkpointed run (north rule: resumable from
     * checkpoint; reference resumes preprocess per doc,
@@ -289,28 +281,30 @@ object Pipeline {
     * processes ONLY the missing docs. Link/canonicalize/triple-assembly
     * are global (connected components span docs, so any new doc can
     * reshape them) and cheap relative to extract — they recompute from
-    * the checkpointed extract table every run. */
+    * the checkpointed extract table every run. `truncatedSegments`
+    * counts only the segments of the docs this run extracted. */
   def runCheckpointed(spark: SparkSession, raw: Dataset[RawDoc],
-      gazette: Seq[(String, String)], workDir: String): CheckpointedRun = {
+      gazette: Seq[(String, String)], workDir: String): RunHandle = {
     import spark.implicits._
+    val trunc = spark.sparkContext.longAccumulator("truncated_segments")
     val rawWithId = raw.toDF().withColumn("doc_id",
       concat($"repo", lit("/"), $"path", lit("@"), $"commit"))
     val before = Checkpoint.committedBatches(workDir, "extract").toSet
     val extracted = Checkpoint.stage(spark, workDir, "extract", "doc_id",
       rawWithId,
       todo => extract(spark, todo.drop("doc_id").as[RawDoc], gazette,
-        keepNegatives = false).toDF())
+        Some(trunc), keepNegatives = false).toDF())
       .as[DocExtract]
     val newBatch = Checkpoint.committedBatches(workDir, "extract")
       .filterNot(before).headOption
-    val (triples, cleanup) = assembleTriples(spark, extracted)
-    CheckpointedRun(triples, newBatch, cleanup)
+    val scope = new Caches.Scope
+    RunHandle(assembleTriples(spark, extracted, scope), trunc, newBatch, scope)
   }
 
   /** Full run (convenience; caches stay alive with the session). */
   def run(spark: SparkSession, raw: Dataset[RawDoc],
       gazette: Seq[(String, String)]): DataFrame =
-    runWithCleanup(spark, raw, gazette)._1
+    runWithMetrics(spark, raw, gazette).triples
 
   /** Materialize triples through the resolved [[graft.sources.TripleSink]]
     * (north rule: partitioned, subject-hash-bucketed triple tables).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.canonical.Canonicalize
-import graft.pipeline.{Fs, Pipeline}
+import graft.pipeline.{Caches, Fs, Pipeline}
 import graft.schema.RawDoc
 
 /** Structured-Streaming ingest for the KG pipeline: the batch engine's
@@ -29,9 +29,9 @@ import graft.schema.RawDoc
   * can only reshape components REACHABLE from its own entities' forms.
   * Per micro-batch the linker therefore:
   *
-  *   1. finds the prior components TOUCHED by the batch (batch forms
-  *      joined against the accumulated entity-form table — entity-vocab
-  *      bounded, never corpus bounded);
+  *   1. finds the prior components TOUCHED by the batch (batch CC hub
+  *      keys, [[Canonicalize.hubExpr]], joined against the accumulated
+  *      entity table — entity-vocab bounded, never corpus bounded);
   *   2. re-runs CC on touched-component entities + batch entities ONLY
   *      (the star-shape contract in [[Canonicalize.formsExpr]] makes
   *      one component-hop closure sufficient: every merge chain passes
@@ -240,18 +240,13 @@ object StreamingExtract {
       .filter(d => Fs.exists(s"$d/_COMMIT"))
       .lastOption
 
-    // local persist tracking: unpersist exactly what this step cached
-    // (not catalog-wide clearCache — the enclosing session may hold
-    // caches the caller owns)
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = {
-      persisted += df.persist(); df
-    }
-
-    try {
+    // the step frees exactly what it cached (not catalog-wide
+    // clearCache, nor the global tracked queue — the enclosing session
+    // may hold caches other callers own), also when it fails
+    Caches.scoped { scope =>
       val batchExtract = spark.read.parquet(s"$extractDir/$curName")
         .as[Pipeline.DocExtract]
-      val batchEnts = cached(Pipeline.dedupeEntities(
+      val batchEnts = scope.persist(Pipeline.dedupeEntities(
         batchExtract.flatMap(_.entities).toDF()))
       val batchPreds = batchExtract.flatMap(_.predictions).toDF()
         .filter($"answer")
@@ -259,22 +254,23 @@ object StreamingExtract {
       val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev, delta) =
         prevDir match {
           case None =>
-            val canon = cached(Canonicalize.components(spark, batchEnts))
+            val canon = scope.persist(Canonicalize.components(spark, batchEnts))
             (batchEnts, canon, Pipeline.triplesOf(batchPreds, canon),
               batchEnts.count(), 0L, 0L,
               None: Option[(DataFrame, DataFrame)])
           case Some(p) =>
-            val prevEnts = cached(spark.read.parquet(s"$p/entities"))
-            val prevCanon = cached(spark.read.parquet(s"$p/canonical"))
+            val prevEnts = scope.persist(spark.read.parquet(s"$p/entities"))
+            val prevCanon = scope.persist(spark.read.parquet(s"$p/canonical"))
             val prevTriples = spark.read.parquet(s"$p/triples")
             // 1. touched components: prior entities sharing ANY
-            //    (kind, form) with a batch entity, lifted to their
-            //    component. Both sides entity-vocab bounded.
-            val batchForms = Canonicalize.entityForms(batchEnts)
-              .select($"form").distinct()
-            // touched = prior entities sharing a (kind, form) with the
-            // batch, PLUS prior entities whose entity_key itself recurs
-            // in the batch. The second leg is NOT redundant: coref
+            //    (kind, form) — equivalently the CC hub key — with a batch
+            //    entity, lifted to their component. Both sides
+            //    entity-vocab bounded.
+            val batchHubs = batchEnts.select(Canonicalize.hubExpr.as("hub"))
+              .distinct()
+            // touched = prior entities sharing a hub with the batch, PLUS
+            // prior entities whose entity_key itself recurs in the
+            // batch. The second leg is NOT redundant: coref
             // repointing can attach a form-disjoint, lexicographically
             // smaller alias to an existing key (e.g. a created anaphora
             // mention on a gazette canonical), and dedupeEntities'
@@ -283,15 +279,16 @@ object StreamingExtract {
             // untouched, newCanon holds the key twice (sub-CC + untouched
             // remainder) and the alias-min's split/re-merge never applies,
             // breaking the bit-identical-to-full-re-link guarantee.
-            val touchedKeys0 = Canonicalize.entityForms(prevEnts)
-              .join(batchForms, "form").select($"entity_key")
+            val touchedKeys0 = prevEnts
+              .select($"entity_key", Canonicalize.hubExpr.as("hub"))
+              .join(batchHubs, "hub").select($"entity_key")
               .unionByName(prevEnts
                 .join(batchEnts.select($"entity_key"),
                   Seq("entity_key"), "leftsemi")
                 .select($"entity_key"))
               .distinct()
-            val touchedComps = cached(prevCanon.join(touchedKeys0, "entity_key")
-              .select($"canonical").distinct())
+            val touchedComps = scope.persist(prevCanon
+              .join(touchedKeys0, "entity_key").select($"canonical").distinct())
             // every entity of a touched component (the CC re-run needs the
             // full component, or the representative election would forget
             // members)
@@ -299,13 +296,13 @@ object StreamingExtract {
               .join(touchedComps, Seq("canonical"), "leftsemi")
               .drop("canonical")
             // 2. CC over touched + batch only
-            val ccInput = cached(Pipeline.dedupeEntities(
+            val ccInput = scope.persist(Pipeline.dedupeEntities(
               touchedEnts.unionByName(batchEnts)))
             val subCanon = Canonicalize.components(spark, ccInput)
             // 3. untouched remainder keeps its canonical verbatim
             val untouched = prevCanon
               .join(touchedComps, Seq("canonical"), "left_anti")
-            val newCanon = cached(subCanon.unionByName(
+            val newCanon = scope.persist(subCanon.unionByName(
               untouched.select($"entity_key", $"canonical")))
             // 4. triples: keep rows of untouched components; rebuild rows
             //    whose subject or object component was touched, from their
@@ -316,7 +313,7 @@ object StreamingExtract {
                 Seq("subj"), "left_anti")
               .join(touchedComps.withColumnRenamed("canonical", "obj"),
                 Seq("obj"), "left_anti")
-            val touchedAllKeys = cached(prevCanon
+            val touchedAllKeys = scope.persist(prevCanon
               .join(touchedComps, Seq("canonical"), "leftsemi")
               .select($"entity_key"))
             val oldDirs = extractDirsBefore(extractDir, curName)
@@ -351,7 +348,7 @@ object StreamingExtract {
       // an uncommitted dir the next attempt ignores
       allEnts.write.mode("overwrite").parquet(s"$cur/entities")
       newCanon.write.mode("overwrite").parquet(s"$cur/canonical")
-      val persistedTriples = cached(triples)
+      val persistedTriples = scope.persist(triples)
       persistedTriples.write.mode("overwrite").parquet(s"$cur/triples")
       val totalEnts = spark.read.parquet(s"$cur/entities").count()
       Fs.writeString(s"$cur/metrics.json",
@@ -394,11 +391,6 @@ object StreamingExtract {
       // one compacted dir every `compactEvery` batches (a replay of THIS
       // batch is untouched — only strictly-earlier dirs compact)
       maybeCompactExtract(spark, extractDir, curName, compactEvery)
-    } finally { // a failing step must not leave its caches behind either
-      persisted.foreach(_.unpersist())
-      // release any operator-internal tracked caches — the same release
-      // the batch run handle performs post-materialize
-      graft.pipeline.Caches.release()
     }
   }
 }

@@ -150,8 +150,9 @@ object TextOps {
     // `bands` keys. The per-doc key table is tiny (docs x bands 32-char
     // keys) but expensive to derive (text scan + k md5-minima per doc) —
     // persist it so the per-band self-joins don't recompute the scan.
-    // Tracked: Caches.release() (bench harness / pipeline run handle)
-    // unpersists it once downstream results are materialized.
+    // Tracked: the global `Caches.release` (the bench harness and Verify
+    // call it between queries) unpersists it once downstream results are
+    // materialized.
     val bandKeys = (0 until bands).map { b =>
       val slots = (0 until rows).map(r => col(s"mh_${b * rows + r}"))
       md5(concat_ws("|", slots: _*)).as(s"bk_$b")
@@ -234,9 +235,9 @@ object TextOps {
     * shuffles only id-width rows, never two sets per pair twice. The set
     * table is derived once but joined TWICE (a and b sides): persisted,
     * since without it each side recomputes the text scan + tokenize +
-    * hash (measured ~2x on the verify stage); Caches.release()
-    * unpersists it. Sets arrive sorted so the intersect is an
-    * allocation-free merge count (IntersectCountSorted): the sort is paid
+    * hash (measured ~2x on the verify stage); the global
+    * `Caches.release` unpersists it. Sets arrive sorted so the intersect
+    * is an allocation-free merge count (IntersectCountSorted): the sort is paid
     * once per doc, the merge once per pair, and |union| comes from the
     * sizes without a second array walk. */
   private def setJaccardOfPairs(docs: DataFrame, pairs: DataFrame,

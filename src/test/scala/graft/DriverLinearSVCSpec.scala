@@ -117,8 +117,9 @@ class DriverLinearSVCSpec extends SparkSpec {
   }
 
   test("the training summary outlives the input's freed checkpoint") {
-    val m = graft.pipeline.Caches.checkpointed(zeroVariance.coalesce(1)) { df =>
-      configure(new DriverLinearSVC(), settings.head).fit(df)
+    val m = graft.pipeline.Caches.scoped { scope =>
+      configure(new DriverLinearSVC(), settings.head)
+        .fit(scope.checkpoint(zeroVariance.coalesce(1)))
     }
     assert(m.summary.predictions.count() == 40)
     assert(m.summary.accuracy > 0.5)

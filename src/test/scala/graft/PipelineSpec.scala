@@ -3,7 +3,8 @@ package graft
 import graft.canonical.Canonicalize
 import graft.corpus.CorpusGen
 import graft.output.Metrics
-import graft.pipeline.Pipeline
+import graft.pipeline.{Caches, Pipeline}
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end golden-triple gate: the full pipeline on the deterministic
   * synthetic corpus must reach P/R >= 0.95 vs the by-construction golden
@@ -151,6 +152,43 @@ class PipelineSpec extends SparkSpec {
       s""""truncated_segments":${h.truncatedSegments.value}"""),
       s"metrics.json must carry the cap count, got: $json")
     h.cleanup()
+    // the checkpointed run counts the segments of the docs it extracts:
+    // the same doc in a fresh dir, then a no-op resume in that dir
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_trunc_ckpt")
+      .toString
+    val c1 = Pipeline.runCheckpointed(spark, raw, CorpusGen.gazette(sf), ckpt)
+    assert(c1.triples.count() == nTriples)
+    assert(c1.truncatedSegments.value >= 1,
+      "the checkpointed run must count the 272-pair segment too")
+    c1.cleanup()
+    val c2 = Pipeline.runCheckpointed(spark, raw, CorpusGen.gazette(sf), ckpt)
+    assert(c2.triples.count() == nTriples)
+    assert(c2.newExtractBatch.isEmpty)
+    assert(c2.truncatedSegments.value == 0,
+      "a no-op resume extracts nothing, so truncates nothing")
+    c2.cleanup()
+  }
+
+  test("a run frees its own caches and nothing else") {
+    val sc = spark.sparkContext
+    // a table another caller owns, tracked in the global queue
+    val other = Caches.tracked(spark.range(1000).toDF("n"))
+    assert(other.count() == 1000)
+    val before = sc.getPersistentRDDs.size
+    val sf = 0.0003
+    val h = Pipeline.runWithMetrics(spark, CorpusGen.rawDocs(spark, sf),
+      CorpusGen.gazette(sf))
+    assert(h.triples.count() > 0)
+    assert(sc.getPersistentRDDs.size > before, "the run cached nothing")
+    h.cleanup()
+    assert(other.storageLevel != StorageLevel.NONE,
+      "the run released a table it does not own")
+    assert(sc.getPersistentRDDs.size == before,
+      s"the run left ${sc.getPersistentRDDs.size - before} cached tables")
+    h.cleanup() // repeatable: nothing left to free
+    assert(sc.getPersistentRDDs.size == before)
+    Caches.release()
+    assert(other.storageLevel == StorageLevel.NONE)
   }
 
   test("TripleSink seam: no Iceberg runtime here -> parquet analog resolved") {

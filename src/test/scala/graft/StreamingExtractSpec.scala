@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.corpus.CorpusGen
-import graft.pipeline.{Fs, Pipeline}
+import graft.pipeline.{Caches, Fs, Pipeline}
 import graft.schema.RawDoc
 import graft.streaming.StreamingExtract
 
@@ -33,10 +33,21 @@ class StreamingExtractSpec extends SparkSpec {
     assert(StreamingExtract
       .extractStream(spark, ms.toDS(), gazette).isStreaming)
 
+    // a table another caller owns, tracked in the global queue: a link
+    // step frees exactly its own caches and leaves this one cached
+    val other = Caches.tracked(spark.range(1000).toDF("n"))
+    assert(other.count() == 1000)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val q = StreamingExtract.runToTriples(spark, ms.toDS(), gazette, dir)
     try {
       ms.addData(first)
       q.processAllAvailable()
+      assert(other.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE,
+        "a link step released a table it does not own")
+      assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+        "a link step left its caches behind")
+      Caches.release()
       val mid = spark.read.parquet(s"$dir/triples").count()
       assert(mid > 0, "first micro-batch produced no triples")
       val m0 = latestMetrics(dir)
