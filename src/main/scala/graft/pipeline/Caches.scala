@@ -13,9 +13,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Call-local tables use [[scoped]]; a pipeline run keeps its scope in
   * its `RunHandle`. An operator whose lazy result reads a table it
-  * persisted (the LSH band table, the hashed token-set dimension) wraps
-  * it in [[tracked]], the JVM-global scope that the bench harness and
-  * `Verify` free with [[release]] between queries.
+  * persisted (the LSH band table, the hashed token-set dimension,
+  * `Pipeline.run`'s tables) wraps it in [[tracked]], the JVM-global
+  * scope that the bench harness and `Verify` free with [[release]]
+  * between queries.
   */
 object Caches {
 
@@ -57,7 +58,7 @@ object Caches {
     try body(s) finally s.release()
   }
 
-  private val global = new Scope
+  private[graft] val global = new Scope
 
   def tracked(df: DataFrame): DataFrame = global.persist(df)
 

@@ -47,11 +47,10 @@ object Fs {
     * still safe here because swapped tables are read only between batch
     * rounds, never concurrently with the swap. */
   def swapInto(tmp: String, target: String): Unit = {
+    recoverSwap(target)
     val fs = of(target)
     val tgt = new Path(target)
     val old = new Path(target + "_old")
-    if (!fs.exists(tgt) && fs.exists(old))
-      require(fs.rename(old, tgt), s"crash recovery $old -> $target failed")
     if (fs.exists(old)) fs.delete(old, true)
     val hadTarget = fs.exists(tgt)
     if (hadTarget)
@@ -62,14 +61,16 @@ object Fs {
   }
 
   /** Restore a table lost to a crash mid-[[swapInto]]: if `target` is
-    * missing but `<target>_old` exists, rename it back. Returns true if
-    * a restore happened. */
+    * missing but `<target>_old` exists, rename it back (throws if that
+    * rename fails). Returns true if a restore happened. */
   def recoverSwap(target: String): Boolean = {
     val fs = of(target)
     val tgt = new Path(target)
     val old = new Path(target + "_old")
-    if (!fs.exists(tgt) && fs.exists(old)) { fs.rename(old, tgt); true }
-    else false
+    if (!fs.exists(tgt) && fs.exists(old)) {
+      require(fs.rename(old, tgt), s"crash recovery $old -> $target failed")
+      true
+    } else false
   }
 
   /** Child directories of `parent` whose name starts with `prefix`,

@@ -210,9 +210,12 @@ object Pipeline {
   /** Full in-memory run; the handle's triples are [subj, pred, obj,
     * evidence_id]. */
   def runWithMetrics(spark: SparkSession, raw: Dataset[RawDoc],
-      gazette: Seq[(String, String)]): RunHandle = {
+      gazette: Seq[(String, String)]): RunHandle =
+    runIn(spark, raw, gazette, new Caches.Scope)
+
+  private def runIn(spark: SparkSession, raw: Dataset[RawDoc],
+      gazette: Seq[(String, String)], scope: Caches.Scope): RunHandle = {
     val trunc = spark.sparkContext.longAccumulator("truncated_segments")
-    val scope = new Caches.Scope
     // ONE narrow pass over raw docs; only ids/keys/answers are cached —
     // token arrays never leave the extract stage (cache-write of fat doc
     // bundles was the measured non-scaling cost at SF=0.1), negative
@@ -301,10 +304,12 @@ object Pipeline {
     RunHandle(assembleTriples(spark, extracted, scope), trunc, newBatch, scope)
   }
 
-  /** Full run (convenience; caches stay alive with the session). */
+  /** Full run (convenience). The triples are a lazy plan over the run's
+    * caches, so they join the global queue that [[Caches.release]]
+    * frees. */
   def run(spark: SparkSession, raw: Dataset[RawDoc],
       gazette: Seq[(String, String)]): DataFrame =
-    runWithMetrics(spark, raw, gazette).triples
+    runIn(spark, raw, gazette, Caches.global).triples
 
   /** Materialize triples through the resolved [[graft.sources.TripleSink]]
     * (north rule: partitioned, subject-hash-bucketed triple tables).

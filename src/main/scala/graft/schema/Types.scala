@@ -102,29 +102,8 @@ final case class Evidence(
     postags: Array[String],
     mentions: Array[SegMention])
 
-/** A label on an evidence candidate (reference `iepy/data/models.py:663-706`).
-  * label in {YE, NO, SK, NS}. */
-final case class Label(
-    evidence_id: String,
-    label: String,
-    relation: String,
-    judge: String,
-    by_machine: Boolean,
-    modification_ts: Long)
-
-/** The output fact (reference `iepy/extraction/terminal.py:168-179`):
-  * canonical subject/object keys + the supporting evidence. */
-final case class Triple(
-    subj: String,
-    pred: String,
-    obj: String,
-    evidence_id: String)
-
 /** A relation definition (reference `iepy/data/models.py:482-505`). */
 final case class Relation(
     name: String,
     leftKind: String,
     rightKind: String)
-
-/** A gazette entry (reference `iepy/data/models.py:719-725`). */
-final case class GazetteItem(literal: String, kind: String)

@@ -24,25 +24,30 @@ import graft.schema.RawDoc
   *
   * Cross-document linking (connected-components canonicalization) is a
   * GLOBAL computation — any new doc can reshape components. But it can
-  * still be updated incrementally WITHOUT approximation, because CC
-  * merges only travel along shared (kind, surface-form) edges: a batch
-  * can only reshape components REACHABLE from its own entities' forms.
-  * Per micro-batch the linker therefore:
+  * still be updated incrementally WITHOUT approximation, because every
+  * component is exactly one CC hub group ([[Canonicalize.hubExpr]]:
+  * kind plus most-folded form): a batch can only reshape the groups of
+  * the hubs it carries, plus the prior groups of entity keys that recur
+  * in it (a recurring key may arrive with a smaller alias that moves it
+  * to another hub). Per micro-batch the linker therefore:
   *
-  *   1. finds the prior components TOUCHED by the batch (batch CC hub
-  *      keys, [[Canonicalize.hubExpr]], joined against the accumulated
-  *      entity table — entity-vocab bounded, never corpus bounded);
-  *   2. re-runs CC on touched-component entities + batch entities ONLY
-  *      (the star-shape contract in [[Canonicalize.formsExpr]] makes
-  *      one component-hop closure sufficient: every merge chain passes
-  *      through a batch entity, whose direct form-neighbors all lie in
-  *      touched components);
-  *   3. unions the untouched remainder of the previous canonical map —
-  *      bit-identical to a full re-link (the spec proves stream==batch);
+  *   1. finds the TOUCHED hubs (the batch's hubs plus the prior hubs of
+  *      its recurring keys) and the prior entities in them — one
+  *      semi-join against the accumulated entity table, entity-vocab
+  *      bounded, never corpus bounded;
+  *   2. re-runs CC on touched + batch entities ONLY (every touched hub
+  *      group enters whole, so the representative election sees all of
+  *      its members);
+  *   3. unions the untouched remainder of the previous canonical map (an
+  *      entity-key anti-join) — bit-identical to a full re-link (the
+  *      spec proves stream==batch);
   *   4. rebuilds only the triples whose subject OR object component was
   *      touched (their source predictions re-joined against the new
   *      canonical map), keeps the rest of the previous triple table
   *      as-is, and swaps the union into `workDir/triples`.
+  *
+  * The first batch takes the same path: no prior state is empty prior
+  * state.
   *
   * Per-batch cost is therefore: one id-width columnar scan of the
   * accumulated extract table (to fetch predictions touching touched
@@ -106,51 +111,47 @@ object StreamingExtract {
       .start()
   }
 
-  /** Tier of an extract dir name: plain batch dirs are tier 0, tiered
-    * compacts `batch_XXXXXXXX_cT` are tier T, and LEGACY cumulative
-    * compacts `batch_XXXXXXXX_compact` (which by construction folded
-    * EVERYTHING up to their bound) rank above every tier so the
-    * supersession rule below treats them as the covering prefix they
-    * are. */
-  private def tierOf(name: String): Int =
-    if (name.endsWith("_compact")) Int.MaxValue
-    else {
-      val i = name.lastIndexOf("_c")
-      if (i > 0 && name.drop(i + 2).nonEmpty &&
-          name.drop(i + 2).forall(_.isDigit)) name.drop(i + 2).toInt
-      else 0
-    }
+  /** An extract dir, parsed once from its name: a plain batch dir
+    * `batch_XXXXXXXX` is tier 0 and its own covered-range bound; a
+    * size-tiered compact `batch_<bound>_c<T>` is tier T. */
+  private final case class ExtractDir(path: String, bound: String, tier: Int)
 
-  /** Covered-range upper bound of an extract dir name (the plain batch
-    * name itself for tier 0). */
-  private def boundOf(name: String): String =
-    if (name.endsWith("_compact")) name.stripSuffix("_compact")
-    else if (tierOf(name) > 0) name.take(name.lastIndexOf("_c"))
-    else name
-
-  /** The committed extract dirs strictly BEFORE `curName`, compaction
-    * aware. Compacts are size-tiered (see [[maybeCompactExtract]]):
-    * tier T+1 dirs fold `every` CONSECUTIVE OLDEST tier-T units, so at
-    * any moment the committed tiers partition the batch sequence into
-    * a prefix of high tiers and a tail of lower ones. The live view is
-    * therefore: every committed dir NOT superseded by a committed
-    * HIGHER-tier compact whose bound reaches it (a crash between a
-    * compact's commit marker and the deletion of its inputs leaves
-    * both on disk; reading both would double-count rows). */
-  private[graft] def extractDirsBefore(extractDir: String,
-      curName: String): Seq[String] = {
-    val committed = Fs.listDirs(extractDir, "batch_")
-      .filter(d => boundOf(d.split('/').last) < curName)
-      .filter(d => tierOf(d.split('/').last) == 0 ||
-        Fs.exists(s"$d/_COMPACT_COMMIT"))
-    committed.filterNot { d =>
-      val n = d.split('/').last
-      committed.exists { c =>
-        val cn = c.split('/').last
-        tierOf(cn) > tierOf(n) && boundOf(cn) >= boundOf(n)
-      }
-    }.sortBy(d => boundOf(d.split('/').last))
+  private def parseExtractDir(path: String): ExtractDir = {
+    val name = path.split('/').last
+    val i = name.lastIndexOf("_c")
+    val t = name.drop(i + 2)
+    if (i > 0 && t.nonEmpty && t.forall(_.isDigit))
+      ExtractDir(path, name.take(i), t.toInt)
+    else ExtractDir(path, name, 0)
   }
+
+  /** The committed extract dirs strictly BEFORE `curName` (a compact
+    * counts once its `_COMPACT_COMMIT` marker exists). */
+  private def committedBefore(extractDir: String,
+      curName: String): Seq[ExtractDir] =
+    Fs.listDirs(extractDir, "batch_").map(parseExtractDir)
+      .filter(d => d.bound < curName &&
+        (d.tier == 0 || Fs.exists(s"${d.path}/_COMPACT_COMMIT")))
+
+  /** The live view of `committed`, sorted by bound. Compacts are
+    * size-tiered (see [[maybeCompactExtract]]): tier T+1 dirs fold
+    * `every` CONSECUTIVE OLDEST tier-T units, so at any moment the
+    * committed tiers partition the batch sequence into a prefix of high
+    * tiers and a tail of lower ones. The live view is therefore: every
+    * committed dir NOT superseded by a committed HIGHER-tier compact
+    * whose bound reaches it (a crash between a compact's commit marker
+    * and the deletion of its inputs leaves both on disk; reading both
+    * would double-count rows). */
+  private def live(committed: Seq[ExtractDir]): Seq[ExtractDir] =
+    committed.filterNot(d =>
+      committed.exists(c => c.tier > d.tier && c.bound >= d.bound))
+      .sortBy(_.bound)
+
+  /** The live extract dirs strictly BEFORE `curName`, compaction
+    * aware (see [[live]]). */
+  private[graft] def extractDirsBefore(extractDir: String,
+      curName: String): Seq[String] =
+    live(committedBefore(extractDir, curName)).map(_.path)
 
   /** Size-tiered compaction of the extract layout: whenever `every`
     * units of one tier exist, the OLDEST `every` fold into one unit of
@@ -160,11 +161,8 @@ object StreamingExtract {
     * on an object store (every incremental link re-lists and re-opens
     * them); tiering keeps the dir count at O(every * log_every(N))
     * while each row is rewritten only when it climbs a tier — total
-    * rewrite O(N log N) bytes over a stream's lifetime. The previous
-    * single-compact scheme folded the WHOLE prefix into a fresh
-    * cumulative compact every `every` batches: O(N^2 / every) bytes
-    * rewritten, which at real trigger rates makes compaction itself
-    * the dominant write cost of the stream.
+    * rewrite O(N log N) bytes over a stream's lifetime (folding the
+    * whole prefix every `every` batches would rewrite O(N^2 / every)).
     *
     * Crash safety, per fold: (1) the compacted dir is written first,
     * (2) its `_COMPACT_COMMIT` marker second, (3) the folded inputs
@@ -184,35 +182,26 @@ object StreamingExtract {
     if (every <= 0) return 0L
     var rewritten = 0L
     // finish any interrupted cleanup first (superseded leftovers linger
-    // only until the next link step)
-    def sweep(): Unit = {
-      val live = extractDirsBefore(extractDir, curName)
-      Fs.listDirs(extractDir, "batch_")
-        .filter(d => boundOf(d.split('/').last) < curName)
-        .filterNot(live.contains)
-        .filter(d => tierOf(d.split('/').last) == 0 ||
-          Fs.exists(s"$d/_COMPACT_COMMIT")) // keep in-progress folds
-        .foreach(Fs.deleteRecursive)
-    }
-    sweep()
+    // only until the next link step); an uncommitted fold is not in
+    // `committed`, so it stays for the same fold to overwrite
+    val committed = committedBefore(extractDir, curName)
+    val kept = live(committed)
+    committed.filterNot(kept.contains).foreach(d => Fs.deleteRecursive(d.path))
     var folded = true
     while (folded) {
       folded = false
-      val live = extractDirsBefore(extractDir, curName)
-      val byTier = live.groupBy(d => tierOf(d.split('/').last))
-      // lowest full tier folds first; legacy cumulative compacts
-      // (Int.MaxValue) are already a covering prefix and never re-fold
-      byTier.toSeq.sortBy(_._1)
-        .find { case (t, ds) => t != Int.MaxValue && ds.size >= every }
+      // lowest full tier folds first; `live` is bound-sorted, and so is
+      // each tier's group
+      live(committedBefore(extractDir, curName)).groupBy(_.tier)
+        .toSeq.sortBy(_._1).find(_._2.size >= every)
         .foreach { case (t, ds) =>
-          val fold = ds.sortBy(d => boundOf(d.split('/').last)).take(every)
-          val bound = boundOf(fold.last.split('/').last)
-          val target = s"$extractDir/${bound}_c${t + 1}"
-          val df = spark.read.parquet(fold: _*)
+          val fold = ds.take(every)
+          val target = s"$extractDir/${fold.last.bound}_c${t + 1}"
+          val df = spark.read.parquet(fold.map(_.path): _*)
           df.write.mode("overwrite").parquet(target)
           rewritten += spark.read.parquet(target).count()
           Fs.writeString(s"$target/_COMPACT_COMMIT", "")
-          fold.foreach(Fs.deleteRecursive)
+          fold.foreach(d => Fs.deleteRecursive(d.path))
           folded = true
         }
     }
@@ -250,111 +239,98 @@ object StreamingExtract {
         batchExtract.flatMap(_.entities).toDF()))
       val batchPreds = batchExtract.flatMap(_.predictions).toDF()
         .filter($"answer")
+      // no prior state is EMPTY prior state: the first batch links
+      // through the same steps, over empty tables
+      def prior(table: String, empty: => DataFrame): DataFrame =
+        prevDir.fold(empty)(p => spark.read.parquet(s"$p/$table"))
+      val prevEnts = scope.persist(
+        prior("entities", Seq.empty[Pipeline.EntityRow].toDF()))
+      val prevCanon = scope.persist(prior("canonical",
+        Seq.empty[(String, String)].toDF("entity_key", "canonical")))
+      val prevTriples = prior("triples",
+        Seq.empty[(String, String, String, String)]
+          .toDF("subj", "pred", "obj", "evidence_id"))
 
-      val (allEnts, newCanon, triples, ccInputN, touchedN, keptPrev, delta) =
-        prevDir match {
-          case None =>
-            val canon = scope.persist(Canonicalize.components(spark, batchEnts))
-            (batchEnts, canon, Pipeline.triplesOf(batchPreds, canon),
-              batchEnts.count(), 0L, 0L,
-              None: Option[(DataFrame, DataFrame)])
-          case Some(p) =>
-            val prevEnts = scope.persist(spark.read.parquet(s"$p/entities"))
-            val prevCanon = scope.persist(spark.read.parquet(s"$p/canonical"))
-            val prevTriples = spark.read.parquet(s"$p/triples")
-            // 1. touched components: prior entities sharing ANY
-            //    (kind, form) — equivalently the CC hub key — with a batch
-            //    entity, lifted to their component. Both sides
-            //    entity-vocab bounded.
-            val batchHubs = batchEnts.select(Canonicalize.hubExpr.as("hub"))
-              .distinct()
-            // touched = prior entities sharing a hub with the batch, PLUS
-            // prior entities whose entity_key itself recurs in the
-            // batch. The second leg is NOT redundant: coref
-            // repointing can attach a form-disjoint, lexicographically
-            // smaller alias to an existing key (e.g. a created anaphora
-            // mention on a gazette canonical), and dedupeEntities'
-            // min(alias) then REPLACES the key's form set — without the
-            // key-identity leg the key's prior component reads as
-            // untouched, newCanon holds the key twice (sub-CC + untouched
-            // remainder) and the alias-min's split/re-merge never applies,
-            // breaking the bit-identical-to-full-re-link guarantee.
-            val touchedKeys0 = prevEnts
-              .select($"entity_key", Canonicalize.hubExpr.as("hub"))
-              .join(batchHubs, "hub").select($"entity_key")
-              .unionByName(prevEnts
-                .join(batchEnts.select($"entity_key"),
-                  Seq("entity_key"), "leftsemi")
-                .select($"entity_key"))
-              .distinct()
-            val touchedComps = scope.persist(prevCanon
-              .join(touchedKeys0, "entity_key").select($"canonical").distinct())
-            // every entity of a touched component (the CC re-run needs the
-            // full component, or the representative election would forget
-            // members)
-            val touchedEnts = prevEnts.join(prevCanon, "entity_key")
-              .join(touchedComps, Seq("canonical"), "leftsemi")
-              .drop("canonical")
-            // 2. CC over touched + batch only
-            val ccInput = scope.persist(Pipeline.dedupeEntities(
-              touchedEnts.unionByName(batchEnts)))
-            val subCanon = Canonicalize.components(spark, ccInput)
-            // 3. untouched remainder keeps its canonical verbatim
-            val untouched = prevCanon
-              .join(touchedComps, Seq("canonical"), "left_anti")
-            val newCanon = scope.persist(subCanon.unionByName(
-              untouched.select($"entity_key", $"canonical")))
-            // 4. triples: keep rows of untouched components; rebuild rows
-            //    whose subject or object component was touched, from their
-            //    source predictions (id-width columnar scan of the
-            //    accumulated extract — text never lives there)
-            val keep = prevTriples
-              .join(touchedComps.withColumnRenamed("canonical", "subj"),
-                Seq("subj"), "left_anti")
-              .join(touchedComps.withColumnRenamed("canonical", "obj"),
-                Seq("obj"), "left_anti")
-            val touchedAllKeys = scope.persist(prevCanon
-              .join(touchedComps, Seq("canonical"), "leftsemi")
-              .select($"entity_key"))
-            val oldDirs = extractDirsBefore(extractDir, curName)
-            val touchedOldPreds =
-              if (oldDirs.isEmpty) batchPreds.limit(0)
-              else {
-                val oldPreds = spark.read.parquet(oldDirs: _*)
-                  .as[Pipeline.DocExtract]
-                  .flatMap(_.predictions).toDF().filter($"answer")
-                // OR-semi-join (left OR right key touched): two semi
-                // joins + distinct — prediction rows are value-identical
-                // duplicates when both sides match, so distinct is exact
-                oldPreds.join(touchedAllKeys
-                    .withColumnRenamed("entity_key", "left_key"),
-                    Seq("left_key"), "leftsemi")
-                  .unionByName(oldPreds.join(touchedAllKeys
-                    .withColumnRenamed("entity_key", "right_key"),
-                    Seq("right_key"), "leftsemi"))
-                  .distinct()
-              }
-            val rebuilt = Pipeline.triplesOf(
-              batchPreds.unionByName(touchedOldPreds), newCanon)
-            val allEnts = Pipeline.dedupeEntities(
-              prevEnts.unionByName(batchEnts))
-            (allEnts, newCanon, keep.unionByName(rebuilt),
-              ccInput.count(), touchedComps.count(), 1L,
-              Some((touchedComps, rebuilt)): Option[(DataFrame, DataFrame)])
+      // 1. touched components. Every component is exactly one CC hub
+      //    group ([[Canonicalize.hubExpr]]), so a batch touches the hubs
+      //    of its own entities PLUS the prior hubs of entity keys that
+      //    recur in the batch. The second leg is NOT redundant: coref
+      //    repointing can attach a form-disjoint, lexicographically
+      //    smaller alias to an existing key (e.g. a created anaphora
+      //    mention on a gazette canonical), and dedupeEntities'
+      //    min(alias) then REPLACES the key's form set — without the
+      //    key-identity leg the key's prior component reads as
+      //    untouched, newCanon holds the key twice (sub-CC + untouched
+      //    remainder) and the alias-min's split/re-merge never applies,
+      //    breaking the bit-identical-to-full-re-link guarantee. Both
+      //    sides entity-vocab bounded.
+      val touchedHubs = batchEnts.select(Canonicalize.hubExpr.as("hub"))
+        .unionByName(prevEnts
+          .join(batchEnts.select($"entity_key"), Seq("entity_key"),
+            "leftsemi")
+          .select(Canonicalize.hubExpr.as("hub")))
+        .distinct()
+      // every entity of a touched component (the CC re-run needs the
+      // full component, or the representative election would forget
+      // members)
+      val touchedEnts = scope.persist(prevEnts
+        .join(touchedHubs, Canonicalize.hubExpr === touchedHubs("hub"),
+          "leftsemi"))
+      val touchedKeys = touchedEnts.select($"entity_key")
+      val touchedComps = scope.persist(prevCanon
+        .join(touchedKeys, Seq("entity_key"), "leftsemi")
+        .select($"canonical").distinct())
+      // 2. CC over touched + batch only
+      val ccInput = scope.persist(Pipeline.dedupeEntities(
+        touchedEnts.unionByName(batchEnts)))
+      val subCanon = Canonicalize.components(spark, ccInput)
+      // 3. untouched remainder keeps its canonical verbatim
+      val newCanon = scope.persist(subCanon.unionByName(
+        prevCanon.join(touchedKeys, Seq("entity_key"), "left_anti")
+          .select($"entity_key", $"canonical")))
+      // 4. triples: keep rows of untouched components; rebuild rows
+      //    whose subject or object component was touched, from their
+      //    source predictions (id-width columnar scan of the
+      //    accumulated extract — text never lives there)
+      val keep = prevTriples
+        .join(touchedComps.withColumnRenamed("canonical", "subj"),
+          Seq("subj"), "left_anti")
+        .join(touchedComps.withColumnRenamed("canonical", "obj"),
+          Seq("obj"), "left_anti")
+      val oldDirs = extractDirsBefore(extractDir, curName)
+      val touchedOldPreds =
+        if (oldDirs.isEmpty) batchPreds.limit(0)
+        else {
+          val oldPreds = spark.read.parquet(oldDirs: _*)
+            .as[Pipeline.DocExtract]
+            .flatMap(_.predictions).toDF().filter($"answer")
+          // OR-semi-join (left OR right key touched): two semi joins +
+          // distinct — prediction rows are value-identical duplicates
+          // when both sides match, so distinct is exact
+          oldPreds.join(touchedKeys.withColumnRenamed("entity_key", "left_key"),
+              Seq("left_key"), "leftsemi")
+            .unionByName(oldPreds.join(touchedKeys
+              .withColumnRenamed("entity_key", "right_key"),
+              Seq("right_key"), "leftsemi"))
+            .distinct()
         }
+      val rebuilt = Pipeline.triplesOf(
+        batchPreds.unionByName(touchedOldPreds), newCanon)
+      val allEnts = Pipeline.dedupeEntities(prevEnts.unionByName(batchEnts))
 
       // write state (overwrite: a replayed batch rewrites identical
       // content), then the _COMMIT marker LAST — a crash mid-write leaves
       // an uncommitted dir the next attempt ignores
       allEnts.write.mode("overwrite").parquet(s"$cur/entities")
       newCanon.write.mode("overwrite").parquet(s"$cur/canonical")
-      val persistedTriples = scope.persist(triples)
+      val persistedTriples = scope.persist(keep.unionByName(rebuilt))
       persistedTriples.write.mode("overwrite").parquet(s"$cur/triples")
       val totalEnts = spark.read.parquet(s"$cur/entities").count()
       Fs.writeString(s"$cur/metrics.json",
-        s"""{"batch_id":$batchId,"cc_input_entities":$ccInputN,""" +
-          s""""touched_components":$touchedN,"total_entities":$totalEnts,""" +
-          s""""incremental":$keptPrev}""")
+        s"""{"batch_id":$batchId,"cc_input_entities":${ccInput.count()},""" +
+          s""""touched_components":${touchedComps.count()},""" +
+          s""""total_entities":$totalEnts,""" +
+          s""""incremental":${if (prevDir.isDefined) 1 else 0}}""")
       Fs.writeString(s"$cur/_COMMIT", "")
       // visible table: swap a copy in, so readers never see a torn dir and
       // the immutable state copy stays pristine for the next batch/replay
@@ -372,21 +348,16 @@ object StreamingExtract {
         .filter(_ => graft.sources.IcebergTripleSink.available)
         .foreach { tbl =>
           val sink = new graft.sources.IcebergTripleSink
-          delta match {
-            case None =>
-              sink.write(spark, persistedTriples, tbl, buckets = 32,
-                metrics = Map("batch_id" -> batchId))
-            case Some((touched, rebuilt)) =>
-              sink.writeIncremental(spark, rebuilt, touched, tbl)
-          }
+          if (prevDir.isEmpty)
+            sink.write(spark, persistedTriples, tbl, buckets = 32,
+              metrics = Map("batch_id" -> batchId))
+          else sink.writeIncremental(spark, rebuilt, touchedComps, tbl)
         }
       // prune states older than the one a replay of THIS batch would need
-      prevDir.foreach { p =>
-        val prevName = p.split('/').last
-        Fs.listDirs(stateRoot, "batch_")
-          .filter(d => d.split('/').last < prevName)
-          .foreach(Fs.deleteRecursive)
-      }
+      // (listed paths share one prefix, so they compare as names)
+      prevDir.foreach(p =>
+        Fs.listDirs(stateRoot, "batch_").filter(_ < p)
+          .foreach(Fs.deleteRecursive))
       // keep the extract layout bounded: fold accumulated batch dirs into
       // one compacted dir every `compactEvery` batches (a replay of THIS
       // batch is untouched — only strictly-earlier dirs compact)

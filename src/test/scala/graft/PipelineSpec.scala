@@ -189,6 +189,17 @@ class PipelineSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size == before)
     Caches.release()
     assert(other.storageLevel == StorageLevel.NONE)
+
+    // the convenience run returns only its lazy plan: its caches join the
+    // global queue, so the release between queries frees them
+    val beforeRun = sc.getPersistentRDDs.size
+    assert(Pipeline.run(spark, CorpusGen.rawDocs(spark, sf),
+      CorpusGen.gazette(sf)).count() > 0)
+    assert(sc.getPersistentRDDs.size > beforeRun, "the run cached nothing")
+    Caches.release()
+    assert(sc.getPersistentRDDs.size == beforeRun,
+      s"Pipeline.run left ${sc.getPersistentRDDs.size - beforeRun} " +
+        "cached tables after Caches.release()")
   }
 
   test("TripleSink seam: no Iceberg runtime here -> parquet analog resolved") {

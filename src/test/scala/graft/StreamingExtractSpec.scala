@@ -291,7 +291,51 @@ class StreamingExtractSpec extends SparkSpec {
       .select("canonical").head().getString(0) == "zebraFun")
   }
 
-  test("tiered compaction: cascading folds, crash leftovers, legacy-compact compat") {
+  test("replaying a link step rewrites identical state") {
+    // foreachBatch is at-least-once: a replayed batch N rebuilds from
+    // state N-1 and must overwrite state N with identical content. Batch
+    // 0 links over empty prior state, batch 1 over batch 0's (its
+    // "other_fun" shares batch 0's hub "FUNCTION otherfun" and zebraFun
+    // recurs, so it touches both prior components); each is linked
+    // twice.
+    import spark.implicits._
+    import Pipeline.{DocExtract, EntityRow, Prediction}
+    val dir = Files.createTempDirectory("graft-stream-replay").toString
+    val batches = Seq(
+      Seq(DocExtract("d1",
+        Array(Prediction("ev1", "calls", "zebraFun", "d1 FUNCTION 5 6",
+          answer = true)),
+        Array(
+          EntityRow("zebraFun", "FUNCTION", "zebraFun", from_gazette = true),
+          EntityRow("d1 FUNCTION 5 6", "FUNCTION", "otherFun",
+            from_gazette = false)))),
+      Seq(DocExtract("d2",
+        Array(Prediction("ev2", "calls", "d2 FUNCTION 0 1", "zebraFun",
+          answer = true)),
+        Array(
+          EntityRow("zebraFun", "FUNCTION", "zebraFun", from_gazette = true),
+          EntityRow("d2 FUNCTION 0 1", "FUNCTION", "other_fun",
+            from_gazette = false)))))
+    def snapshot(state: String): Seq[Seq[String]] =
+      Seq("entities", "canonical", "triples").map(t =>
+        spark.read.parquet(s"$state/$t").collect().map(_.toString).toSeq
+          .sorted) :+ Seq(Fs.readString(s"$state/metrics.json"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.toDS().write.parquet(f"$dir/extract_stream/batch_$i%08d")
+      val state = f"$dir/state/batch_$i%08d"
+      StreamingExtract.incrementalLink(spark, dir, i.toLong)
+      val first = snapshot(state)
+      StreamingExtract.incrementalLink(spark, dir, i.toLong)
+      val replayed = snapshot(state)
+      assert(replayed == first, s"replay of batch $i changed its state")
+      val triples = replayed(2)
+      assert(triples.nonEmpty && triples == triples.distinct,
+        s"batch $i triples: $triples")
+    }
+    assert(latestMetrics(dir)("touched_components") == 2)
+  }
+
+  test("tiered compaction: cascading folds, crash leftovers") {
     import spark.implicits._
     def mkPlain(dir: String, i: Int): Unit =
       Seq((i.toLong, s"doc$i")).toDF("doc_id", "tag")
@@ -328,25 +372,5 @@ class StreamingExtractSpec extends SparkSpec {
       every = 5)
     assert(names(d2) == Set("batch_00000001_c1", "batch_00000002"),
       s"sweep left: ${names(d2)}")
-
-    // legacy cumulative `_compact` dirs cover EVERYTHING up to their
-    // bound (they folded the whole prefix), including crash leftovers,
-    // and never re-fold; new tiers build above them
-    val d3 = Files.createTempDirectory("graft-compact-legacy").toString
-    (0 until 6).foreach(mkPlain(d3, _))
-    spark.read.parquet((0 until 4).map(i => f"$d3/batch_$i%08d"): _*)
-      .write.parquet(s"$d3/batch_00000003_compact")
-    Fs.writeString(s"$d3/batch_00000003_compact/_COMPACT_COMMIT", "")
-    val view3 = StreamingExtract.extractDirsBefore(d3, "batch_00000006")
-    assert(view3.map(_.split('/').last) ==
-      Seq("batch_00000003_compact", "batch_00000004", "batch_00000005"))
-    val rewritten3 = StreamingExtract.maybeCompactExtract(spark, d3,
-      "batch_00000006", every = 2)
-    // plains 4,5 fold into one c1; the legacy prefix is untouched
-    assert(rewritten3 == 2L)
-    assert(names(d3) == Set("batch_00000003_compact", "batch_00000005_c1"),
-      s"dirs: ${names(d3)}")
-    assert(spark.read.parquet(StreamingExtract
-      .extractDirsBefore(d3, "batch_00000006"): _*).count() == 6L)
   }
 }
