@@ -1,23 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Codegen'd cosine similarity over two `array<float>`/`array<double>`
-  * columns.
+/** Cosine similarity over two `array<float>`/`array<double>` columns.
   *
-  * Why a custom Expression (the brief's preference order (b)): the
-  * composed built-in form
-  * `aggregate(zip_with(a,b,_*_),0,+) / (sqrt(...)*sqrt(...))`
-  * materializes an intermediate array per row and walks both inputs three
-  * times; in the ANN hot path (every candidate pair at 100 TB scale) this
-  * single fused loop does one pass, zero allocations, inside whole-stage
-  * codegen.
+  * Why a custom Expression: the composed built-in form
+  * ([[graft.simsearch.SimSearch.cosineComposed]],
+  * `aggregate(zip_with(a,b,_*_),0,+) / (sqrt(...)*sqrt(...))`) is
+  * interpreted lambda evaluation that materializes an intermediate array
+  * per row and walks both inputs three times. Here one kernel walks
+  * both arrays once and accumulates the dot product and both norms
+  * together; the ANN hot path (every candidate pair) calls it from
+  * whole-stage codegen through [[Kernel.call]].
   *
   * Numeric contract: elements widened to double, sequential left-to-right
   * accumulation — bit-identical to the composed form AND to DuckDB's
@@ -25,7 +25,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Degenerate inputs match the composed form's NULL propagation:
   * length-mismatched arrays (zip_with pads with nulls -> null product ->
   * null sum) and null elements both yield NULL, never a truncated or
-  * garbage value.
+  * garbage value. A zero-norm input (all zeros, or two empty arrays)
+  * yields NaN (0/0), where the composed form's division by zero fails
+  * under ANSI mode.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -33,13 +35,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // AbstractDataType/TypeCollection are private[sql]; enforce the input
   // contract through checkInputDataTypes (NEVER in the constructor —
   // Catalyst rewrites construct copies with intermediate children)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
       case _ => false
     })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
       s"cosine_similarity expects array<float>/array<double>, got " +
         s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
   }
@@ -49,15 +51,17 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // null even on non-null inputs: length mismatch / null elements
   override def nullable: Boolean = true
 
-  private def elemIsFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  // resolved once per instance, not per row; lazy for the same reason
+  // the type check is not in the constructor
+  @transient private lazy val leftIsFloat = Kernel.isFloatArray(left)
+  @transient private lazy val rightIsFloat = Kernel.isFloatArray(right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** The kernel: boxed cosine, or null on a length mismatch or a null
+    * element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (y.numElements() != n) return null
-    val lf = elemIsFloat(left); val rf = elemIsFloat(right)
+    val lf = leftIsFloat; val rf = rightIsFloat
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -70,39 +74,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val getX =
-        if (elemIsFloat(left)) s"(double) $a.getFloat($i)"
-        else s"$a.getDouble($i)"
-      val getY =
-        if (elemIsFloat(right)) s"(double) $b.getFloat($i)"
-        else s"$b.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $xi = $getX;
-         |    double $yi = $getY;
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      Kernel.call(ctx, ev, this, orNull = true, a, b))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

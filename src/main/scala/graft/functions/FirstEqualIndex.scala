@@ -37,9 +37,8 @@ case class FirstEqualIndex(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  def compute(la: Any, ra: Any): Int = {
-    val a = la.asInstanceOf[ArrayData]
-    val b = ra.asInstanceOf[ArrayData]
+  /** The kernel (never null on non-null inputs). */
+  def compute(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
@@ -49,13 +48,12 @@ case class FirstEqualIndex(left: Expression, right: Expression)
     -1
   }
 
-  override def nullSafeEval(la: Any, ra: Any): Any = compute(la, ra)
+  override def nullSafeEval(la: Any, ra: Any): Any =
+    compute(la.asInstanceOf[ArrayData], ra.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("firstEqualIndex", this, getClass.getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (la, ra) =>
-      s"${ev.value} = $ref.compute($la, $ra);")
-  }
+      Kernel.call(ctx, ev, this, orNull = false, la, ra))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FirstEqualIndex =

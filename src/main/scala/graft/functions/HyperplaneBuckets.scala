@@ -1,23 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Codegen'd OR-banded sign-bit LSH bucketing over an embedding column:
-  * returns `array<long>` of `bands` bucket ids, bit j of band b = sign of
-  * the projection onto pseudo-random hyperplane p = b*planesPerBand + j.
+/** OR-banded sign-bit LSH bucketing over an embedding column: returns
+  * `array<long>` of `bands` bucket ids, bit j of band b = sign of the
+  * projection onto pseudo-random hyperplane p = b*planesPerBand + j.
   *
-  * Why a custom Expression (brief preference order (b)): the composed
-  * form ([[graft.simsearch.SimSearch.bucketKey]]) evaluates one
+  * Why a custom Expression: the composed form
+  * ([[graft.simsearch.SimSearch.bucketKey]]) evaluates one
   * `aggregate(zip_with(...))` per plane — bands*planesPerBand = 128
   * traversals of the embedding with an intermediate array allocation
-  * each. This fused loop reads the embedding ONCE, accumulating all 128
-  * projections per element, inside whole-stage codegen with zero
-  * intermediate allocations.
+  * each. Here one kernel reads the embedding once, accumulating all
+  * projections per element into one per-row array; whole-stage codegen
+  * calls it through [[Kernel.call]].
   *
   * Numeric contract: hyperplane component for (plane p, dim i) =
   * ((i*2654435761 + p*40503 + 2166136261) mod 1000003) / 500001.5 - 1.0,
@@ -25,37 +26,38 @@ import org.apache.spark.sql.types._
   * element order — bit-identical to the composed form AND to the DuckDB
   * oracle's SQL mirror (SparkEntry.lshBandCtes), so swapping it in
   * changes no query result. Null arrays and null elements yield NULL
-  * (same convention as [[CosineSimilarity]]).
+  * (same convention as [[CosineSimilarity]]) and an empty array sets
+  * every bit (all its projections are 0.0); the composed form clears
+  * every bit in those three cases.
   */
 case class HyperplaneBuckets(child: Expression, bands: Int,
     planesPerBand: Int) extends UnaryExpression {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_buckets expects array<float>/array<double>, got " +
-            other.catalogString)
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"hyperplane_buckets expects array<float>/array<double>, got " +
+          other.catalogString)
     }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  // resolved once per instance, not per row (see CosineSimilarity)
+  @transient private lazy val isFloat = Kernel.isFloatArray(child)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  /** The kernel: the bucket ids, or null on a null element. */
+  def compute(x: ArrayData): ArrayData = {
     val n = x.numElements()
     val nPlanes = bands * planesPerBand
     val proj = new Array[Double](nPlanes)
-    val isFloat = elemIsFloat
+    val f = isFloat
     var i = 0
     while (i < n) {
       if (x.isNullAt(i)) return null
-      val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val xi = if (f) x.getFloat(i).toDouble else x.getDouble(i)
       val base = i.toLong * 2654435761L
       var p = 0
       while (p < nPlanes) {
@@ -80,47 +82,10 @@ case class HyperplaneBuckets(child: Expression, bands: Int,
     new GenericArrayData(buckets)
   }
 
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val xi = ctx.freshName("xi")
-      val base = ctx.freshName("base")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val proj = ctx.freshName("proj")
-      val buckets = ctx.freshName("buckets")
-      val nPlanes = bands * planesPerBand
-      val getX =
-        if (elemIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double[] $proj = new double[$nPlanes];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $xi = $getX;
-         |  long $base = ((long) $i) * 2654435761L;
-         |  for (int $p = 0; $p < $nPlanes; $p++) {
-         |    long $h = ($base + ((long) $p) * 40503L + 2166136261L) % 1000003L;
-         |    $proj[$p] += $xi * (((double) $h) / 500001.5 - 1.0);
-         |  }
-         |}
-         |if (!${ev.isNull}) {
-         |  long[] $buckets = new long[$bands];
-         |  for (int $b = 0; $b < $bands; $b++) {
-         |    long $v = 0L;
-         |    for (int $j = 0; $j < $planesPerBand; $j++) {
-         |      if ($proj[$b * $planesPerBand + $j] >= 0) $v |= 1L << $j;
-         |    }
-         |    $buckets[$b] = $v;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($buckets);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => Kernel.call(ctx, ev, this, orNull = true, a))
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneBuckets =
     copy(child = newChild)

@@ -13,6 +13,10 @@ import org.apache.spark.sql.types._
   * `size(array_intersect(a, b))` under those preconditions (which the
   * hashed-token/shingle dimension tables in [[graft.textops.TextOps]]
   * establish with `sort_array(array_distinct(...))`-shaped derivations).
+  * Arrays that may hold null elements (`containsNull = true`) are
+  * rejected at analysis, as in [[FirstEqualIndex]]: the merge loop reads
+  * elements without null checks. Sortedness and distinctness are
+  * documented, not checked.
   *
   * Why a custom Expression: `array_intersect` allocates an OpenHashSet
   * AND an output array per row, only for `size` to throw the elements
@@ -27,19 +31,18 @@ case class IntersectCountSorted(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"intersect_count_sorted expects two array<bigint>, got " +
-          s"${l.catalogString}, ${r.catalogString}")
+        "intersect_count_sorted expects two array<bigint> without null " +
+          s"elements (containsNull = false), got $l, $r")
     }
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  def compute(la: Any, ra: Any): Int = {
-    val a = la.asInstanceOf[ArrayData]
-    val b = ra.asInstanceOf[ArrayData]
+  /** The kernel (never null on non-null inputs). */
+  def compute(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
@@ -55,13 +58,12 @@ case class IntersectCountSorted(left: Expression, right: Expression)
     c
   }
 
-  override def nullSafeEval(la: Any, ra: Any): Any = compute(la, ra)
+  override def nullSafeEval(la: Any, ra: Any): Any =
+    compute(la.asInstanceOf[ArrayData], ra.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("intersectCountSorted", this, getClass.getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (la, ra) =>
-      s"${ev.value} = $ref.compute($la, $ra);")
-  }
+      Kernel.call(ctx, ev, this, orNull = false, la, ra))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntersectCountSorted =

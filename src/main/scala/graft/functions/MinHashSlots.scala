@@ -72,9 +72,9 @@ case class MinHashSlots(child: Expression, k: Int) extends UnaryExpression {
     false
   }
 
-  /** Single-pass computation; called from both eval and codegen. */
-  def compute(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  /** The kernel: k minima in one token pass, or null on a null
+    * element. */
+  def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val md = digestTL.get()
     val minima = new Array[Array[Byte]](k)
@@ -97,22 +97,10 @@ case class MinHashSlots(child: Expression, k: Int) extends UnaryExpression {
       minima.map(m => if (m == null) null else toHex(m)): Array[Any])
   }
 
-  override def nullSafeEval(a: Any): Any = compute(a)
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the work IS the hash loop — generated code calls back into this
-    // instance (one virtual call per row) so the surrounding projection
-    // stays inside whole-stage codegen
-    val ref = ctx.addReferenceObj("minhashSlots", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val res = ctx.freshName("res")
-      s"""
-         |Object $res = $ref.compute($a);
-         |if ($res == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $res; }
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernel.call(ctx, ev, this, orNull = true, a))
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSlots =
     copy(child = newChild)

@@ -43,10 +43,8 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
   @transient private lazy val digestTL: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Single-pass computation; called from both eval and codegen.
-    * Returns null (as java.lang.Object) on null elements. */
-  def compute(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
+  /** The kernel: the boxed signature, or null on a null element. */
+  def compute(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     val md = digestTL.get()
     val counts = new Array[Int](64)
@@ -76,19 +74,10 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
     java.lang.Long.valueOf(sig)
   }
 
-  override def nullSafeEval(a: Any): Any = compute(a)
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashSig", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val res = ctx.freshName("res")
-      s"""
-         |Object $res = $ref.compute($a);
-         |if ($res == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) $res).longValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => Kernel.call(ctx, ev, this, orNull = true, a))
 
   override protected def withNewChildInternal(newChild: Expression): SimHashSig =
     copy(child = newChild)

@@ -39,7 +39,7 @@ object SimSearch {
     dot(a, b) / (norm(a) * norm(b))
 
   /** Hot-path cosine: the custom codegen'd Catalyst expression — one
-    * fused loop, no intermediate array, bit-identical values to
+    * pass over both arrays, no intermediate array, bit-identical values to
     * [[cosineComposed]] (same left-to-right double accumulation). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity.cosine(a, b)

@@ -173,39 +173,34 @@ object StreamingExtract {
     * excludes — the cleanup sweep here finishes the deletion. Only
     * dirs strictly before the CURRENT batch are compacted: the current
     * batch dir may still be replayed by the engine and must stay
-    * individually overwritable.
-    *
-    * Returns the number of rows rewritten (0 when nothing folded) so
-    * callers/specs can audit the cumulative rewrite cost. */
+    * individually overwritable. The live view is listed once and then
+    * kept in memory: each fold replaces its inputs with its target. */
   private[graft] def maybeCompactExtract(spark: SparkSession,
-      extractDir: String, curName: String, every: Int): Long = {
-    if (every <= 0) return 0L
-    var rewritten = 0L
+      extractDir: String, curName: String, every: Int): Unit = {
+    if (every <= 0) return
     // finish any interrupted cleanup first (superseded leftovers linger
     // only until the next link step); an uncommitted fold is not in
     // `committed`, so it stays for the same fold to overwrite
     val committed = committedBefore(extractDir, curName)
     val kept = live(committed)
     committed.filterNot(kept.contains).foreach(d => Fs.deleteRecursive(d.path))
-    var folded = true
-    while (folded) {
-      folded = false
-      // lowest full tier folds first; `live` is bound-sorted, and so is
-      // each tier's group
-      live(committedBefore(extractDir, curName)).groupBy(_.tier)
-        .toSeq.sortBy(_._1).find(_._2.size >= every)
-        .foreach { case (t, ds) =>
+    // lowest full tier folds first; `view` is bound-sorted, and so is
+    // each tier's group
+    @annotation.tailrec
+    def foldFrom(view: Seq[ExtractDir]): Unit =
+      view.groupBy(_.tier).toSeq.sortBy(_._1).find(_._2.size >= every) match {
+        case None =>
+        case Some((t, ds)) =>
           val fold = ds.take(every)
-          val target = s"$extractDir/${fold.last.bound}_c${t + 1}"
-          val df = spark.read.parquet(fold.map(_.path): _*)
-          df.write.mode("overwrite").parquet(target)
-          rewritten += spark.read.parquet(target).count()
-          Fs.writeString(s"$target/_COMPACT_COMMIT", "")
+          val target = ExtractDir(
+            s"$extractDir/${fold.last.bound}_c${t + 1}", fold.last.bound, t + 1)
+          spark.read.parquet(fold.map(_.path): _*)
+            .write.mode("overwrite").parquet(target.path)
+          Fs.writeString(s"${target.path}/_COMPACT_COMMIT", "")
           fold.foreach(d => Fs.deleteRecursive(d.path))
-          folded = true
-        }
-    }
-    rewritten
+          foldFrom(live(target +: view.filterNot(fold.contains)))
+      }
+    foldFrom(kept)
   }
 
   /** One incremental link step over the just-written extract batch.

