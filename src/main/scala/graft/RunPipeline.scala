@@ -11,6 +11,8 @@ import graft.pipeline.Pipeline
   *
   * Usage: RunPipeline [sf] [cores] [outDir | --bench]
   *
+  * `cores` defaults to `SPARK_GRAFT_CPUS`, else the machine's core count.
+  *
   * `--bench` times the pipeline without scoring it: one warm-up run, then
   * the minimum of three timed runs. Comparing `RunPipeline 1.0 1 --bench`
   * with `RunPipeline 1.0 4 --bench` gives the N→4N scaling efficiency.
@@ -20,8 +22,8 @@ import graft.pipeline.Pipeline
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(0.001)
-    val cores = args.lift(1).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val cores = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString))
     val outDir = args.lift(2)
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

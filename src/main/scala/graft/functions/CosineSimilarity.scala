@@ -26,8 +26,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * length-mismatched arrays (zip_with pads with nulls -> null product ->
   * null sum) and null elements both yield NULL, never a truncated or
   * garbage value. A zero-norm input (all zeros, or two empty arrays)
-  * yields NaN (0/0), where the composed form's division by zero fails
-  * under ANSI mode.
+  * yields NULL, as DuckDB's oracle gives for 0/0 (the composed form's
+  * division by zero fails under ANSI mode). A NaN there would rank the
+  * zero vector first under `cos desc`: Spark orders NaN above every
+  * double.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -56,8 +58,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   @transient private lazy val leftIsFloat = Kernel.isFloatArray(left)
   @transient private lazy val rightIsFloat = Kernel.isFloatArray(right)
 
-  /** The kernel: boxed cosine, or null on a length mismatch or a null
-    * element. */
+  /** The kernel: boxed cosine, or null on a length mismatch, a null
+    * element or a zero norm. */
   def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (y.numElements() != n) return null
@@ -71,7 +73,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       dot += xi * yi; na += xi * xi; nb += yi * yi
       i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    if (na == 0.0 || nb == 0.0) null
+    else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
   override def nullSafeEval(a: Any, b: Any): Any =

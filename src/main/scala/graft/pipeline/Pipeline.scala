@@ -273,33 +273,40 @@ object Pipeline {
     triplesOf(predictions.toDF().filter($"answer"), canonical)
   }
 
-  /** Opt-in per-stage checkpointed run (north rule: resumable from
-    * checkpoint; reference resumes preprocess per doc,
+  /** Opt-in checkpointed run (north rule: resumable from checkpoint;
+    * reference resumes preprocess per doc,
     * `/root/reference/iepy/data/db.py:94-114`).
     *
     * The EXTRACT stage — tokenize/NER/coref/segment/rule-match, ~all of
-    * the pipeline's compute — checkpoints per doc through
-    * [[Checkpoint.stage]]: a killed run loses only its uncommitted batch,
-    * and a rerun anti-joins the corpus against committed batches and
-    * processes ONLY the missing docs. Link/canonicalize/triple-assembly
-    * are global (connected components span docs, so any new doc can
-    * reshape them) and cheap relative to extract — they recompute from
-    * the checkpointed extract table every run. `truncatedSegments`
-    * counts only the segments of the docs this run extracted. */
+    * the pipeline's compute — checkpoints per doc in the [[Checkpoint]]
+    * store under `workDir/extract`: a killed run loses only its
+    * uncommitted batch, and a rerun anti-joins the corpus against the
+    * live view and extracts ONLY the missing docs into a new batch (none
+    * when nothing is missing). Link/canonicalize/triple-assembly are
+    * global (connected components span docs, so any new doc can reshape
+    * them) and cheap relative to extract — they recompute from the
+    * checkpointed extract table every run. `truncatedSegments` counts
+    * only the segments of the docs this run extracted. */
   def runCheckpointed(spark: SparkSession, raw: Dataset[RawDoc],
       gazette: Seq[(String, String)], workDir: String): RunHandle = {
     import spark.implicits._
     val trunc = spark.sparkContext.longAccumulator("truncated_segments")
     val rawWithId = raw.toDF().withColumn("doc_id",
       concat($"repo", lit("/"), $"path", lit("@"), $"commit"))
-    val before = Checkpoint.committedBatches(workDir, "extract").toSet
-    val extracted = Checkpoint.stage(spark, workDir, "extract", "doc_id",
-      rawWithId,
-      todo => extract(spark, todo.drop("doc_id").as[RawDoc], gazette,
-        Some(trunc), keepNegatives = false).toDF())
-      .as[DocExtract]
-    val newBatch = Checkpoint.committedBatches(workDir, "extract")
-      .filterNot(before).headOption
+    val root = s"$workDir/extract"
+    val done = Checkpoint.live(root)
+    val todo =
+      if (done.isEmpty) rawWithId
+      else rawWithId.join(spark.read.parquet(done: _*).select("doc_id"),
+        Seq("doc_id"), "left_anti")
+    // emptiness checked on the anti-joined INPUT (cheap key scan), never
+    // on the extract output — that would extract twice
+    val newBatch = Option.when(done.isEmpty || !todo.isEmpty)(
+      Checkpoint.append(spark, root, s"$workDir/_manifest/extract",
+        extract(spark, todo.drop("doc_id").as[RawDoc], gazette,
+          Some(trunc), keepNegatives = false).toDF()))
+    val extracted =
+      spark.read.parquet(Checkpoint.live(root): _*).as[DocExtract]
     val scope = new Caches.Scope
     RunHandle(assembleTriples(spark, extracted, scope), trunc, newBatch, scope)
   }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.canonical.Canonicalize
-import graft.pipeline.{Caches, Fs, Pipeline}
+import graft.pipeline.{Caches, Checkpoint, Fs, Pipeline}
 import graft.schema.RawDoc
 
 /** Structured-Streaming ingest for the KG pipeline: the batch engine's
@@ -17,10 +17,12 @@ import graft.schema.RawDoc
   * no shuffle, no state store, no watermark needed. Exactly-once per
   * doc comes from the source's offset tracking PLUS an idempotent sink:
   * foreachBatch is at-least-once, so each micro-batch overwrites its
-  * own batchId-named dir (a crash-replayed batch rewrites identical
-  * content instead of appending duplicates) — the streaming twin of
-  * the batch path's per-doc checkpoint anti-join
-  * ([[graft.pipeline.Checkpoint]]).
+  * own batchId-indexed dir (a crash-replayed batch rewrites identical
+  * content instead of appending duplicates). The extract batches live
+  * in the same per-doc store as the checkpointed batch run's
+  * ([[graft.pipeline.Checkpoint]]): the stream commits, lists, reads
+  * and compacts `extract_stream/` through it, under its one commit rule
+  * (Spark's `_SUCCESS`).
   *
   * Cross-document linking (connected-components canonicalization) is a
   * GLOBAL computation — any new doc can reshape components. But it can
@@ -103,104 +105,11 @@ object StreamingExtract {
         // replays the batch), so each batch OVERWRITES its own
         // batchId-named dir instead of appending to a shared one —
         // a replay rewrites identical content, never duplicates docs
-        batch.write.mode("overwrite")
-          .parquet(f"$extractDir/batch_$batchId%08d")
+        Checkpoint.write(batch, extractDir, batchId, SaveMode.Overwrite)
         incrementalLink(batch.sparkSession, workDir, batchId, icebergTable,
           compactEvery)
       }
       .start()
-  }
-
-  /** An extract dir, parsed once from its name: a plain batch dir
-    * `batch_XXXXXXXX` is tier 0 and its own covered-range bound; a
-    * size-tiered compact `batch_<bound>_c<T>` is tier T. */
-  private final case class ExtractDir(path: String, bound: String, tier: Int)
-
-  private def parseExtractDir(path: String): ExtractDir = {
-    val name = path.split('/').last
-    val i = name.lastIndexOf("_c")
-    val t = name.drop(i + 2)
-    if (i > 0 && t.nonEmpty && t.forall(_.isDigit))
-      ExtractDir(path, name.take(i), t.toInt)
-    else ExtractDir(path, name, 0)
-  }
-
-  /** The committed extract dirs strictly BEFORE `curName` (a compact
-    * counts once its `_COMPACT_COMMIT` marker exists). */
-  private def committedBefore(extractDir: String,
-      curName: String): Seq[ExtractDir] =
-    Fs.listDirs(extractDir, "batch_").map(parseExtractDir)
-      .filter(d => d.bound < curName &&
-        (d.tier == 0 || Fs.exists(s"${d.path}/_COMPACT_COMMIT")))
-
-  /** The live view of `committed`, sorted by bound. Compacts are
-    * size-tiered (see [[maybeCompactExtract]]): tier T+1 dirs fold
-    * `every` CONSECUTIVE OLDEST tier-T units, so at any moment the
-    * committed tiers partition the batch sequence into a prefix of high
-    * tiers and a tail of lower ones. The live view is therefore: every
-    * committed dir NOT superseded by a committed HIGHER-tier compact
-    * whose bound reaches it (a crash between a compact's commit marker
-    * and the deletion of its inputs leaves both on disk; reading both
-    * would double-count rows). */
-  private def live(committed: Seq[ExtractDir]): Seq[ExtractDir] =
-    committed.filterNot(d =>
-      committed.exists(c => c.tier > d.tier && c.bound >= d.bound))
-      .sortBy(_.bound)
-
-  /** The live extract dirs strictly BEFORE `curName`, compaction
-    * aware (see [[live]]). */
-  private[graft] def extractDirsBefore(extractDir: String,
-      curName: String): Seq[String] =
-    live(committedBefore(extractDir, curName)).map(_.path)
-
-  /** Size-tiered compaction of the extract layout: whenever `every`
-    * units of one tier exist, the OLDEST `every` fold into one unit of
-    * the next tier (`batch_<bound>_c<tier+1>`, bound = the fold's max
-    * covered batch), cascading upward until no tier is full. At real
-    * trigger rates the one-dir-per-batch layout is a small-files bomb
-    * on an object store (every incremental link re-lists and re-opens
-    * them); tiering keeps the dir count at O(every * log_every(N))
-    * while each row is rewritten only when it climbs a tier — total
-    * rewrite O(N log N) bytes over a stream's lifetime (folding the
-    * whole prefix every `every` batches would rewrite O(N^2 / every)).
-    *
-    * Crash safety, per fold: (1) the compacted dir is written first,
-    * (2) its `_COMPACT_COMMIT` marker second, (3) the folded inputs
-    * are deleted last. A crash before (2) leaves an ignored
-    * uncommitted dir that the same deterministic fold overwrites on
-    * the next call; a crash between (2) and (3) leaves duplicates on
-    * disk that [[extractDirsBefore]]'s supersession rule already
-    * excludes — the cleanup sweep here finishes the deletion. Only
-    * dirs strictly before the CURRENT batch are compacted: the current
-    * batch dir may still be replayed by the engine and must stay
-    * individually overwritable. The live view is listed once and then
-    * kept in memory: each fold replaces its inputs with its target. */
-  private[graft] def maybeCompactExtract(spark: SparkSession,
-      extractDir: String, curName: String, every: Int): Unit = {
-    if (every <= 0) return
-    // finish any interrupted cleanup first (superseded leftovers linger
-    // only until the next link step); an uncommitted fold is not in
-    // `committed`, so it stays for the same fold to overwrite
-    val committed = committedBefore(extractDir, curName)
-    val kept = live(committed)
-    committed.filterNot(kept.contains).foreach(d => Fs.deleteRecursive(d.path))
-    // lowest full tier folds first; `view` is bound-sorted, and so is
-    // each tier's group
-    @annotation.tailrec
-    def foldFrom(view: Seq[ExtractDir]): Unit =
-      view.groupBy(_.tier).toSeq.sortBy(_._1).find(_._2.size >= every) match {
-        case None =>
-        case Some((t, ds)) =>
-          val fold = ds.take(every)
-          val target = ExtractDir(
-            s"$extractDir/${fold.last.bound}_c${t + 1}", fold.last.bound, t + 1)
-          spark.read.parquet(fold.map(_.path): _*)
-            .write.mode("overwrite").parquet(target.path)
-          Fs.writeString(s"${target.path}/_COMPACT_COMMIT", "")
-          fold.foreach(d => Fs.deleteRecursive(d.path))
-          foldFrom(live(target +: view.filterNot(fold.contains)))
-      }
-    foldFrom(kept)
   }
 
   /** One incremental link step over the just-written extract batch.
@@ -228,7 +137,8 @@ object StreamingExtract {
     // clearCache, nor the global tracked queue — the enclosing session
     // may hold caches other callers own), also when it fails
     Caches.scoped { scope =>
-      val batchExtract = spark.read.parquet(s"$extractDir/$curName")
+      val batchExtract = spark.read.parquet(
+        s"$extractDir/${Checkpoint.batchName(batchId)}")
         .as[Pipeline.DocExtract]
       val batchEnts = scope.persist(Pipeline.dedupeEntities(
         batchExtract.flatMap(_.entities).toDF()))
@@ -292,7 +202,7 @@ object StreamingExtract {
           Seq("subj"), "left_anti")
         .join(touchedComps.withColumnRenamed("canonical", "obj"),
           Seq("obj"), "left_anti")
-      val oldDirs = extractDirsBefore(extractDir, curName)
+      val oldDirs = Checkpoint.liveBefore(extractDir, batchId)
       val touchedOldPreds =
         if (oldDirs.isEmpty) batchPreds.limit(0)
         else {
@@ -356,7 +266,7 @@ object StreamingExtract {
       // keep the extract layout bounded: fold accumulated batch dirs into
       // one compacted dir every `compactEvery` batches (a replay of THIS
       // batch is untouched — only strictly-earlier dirs compact)
-      maybeCompactExtract(spark, extractDir, curName, compactEvery)
+      Checkpoint.compact(spark, extractDir, batchId, compactEvery)
     }
   }
 }

@@ -1,79 +1,80 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
-import graft.pipeline.Checkpoint
+import graft.corpus.CorpusGen
+import graft.pipeline.{Checkpoint, Fs, Pipeline}
 
 /** North-rule resumability: kill/rerun recomputes nothing already
   * checkpointed; manifest carries per-partition lineage. */
 class CheckpointSpec extends SparkSpec {
 
-  test("stage resume computes only missing keys; finished work untouched") {
+  private val sf = 0.0002
+  private lazy val gazette = CorpusGen.gazette(sf)
+  private lazy val all = CorpusGen.rawDocs(spark, sf)
+  private lazy val half = all.filter(d => d.path.length % 2 == 0)
+
+  private def docIds(batch: String): Set[String] = {
     import spark.implicits._
+    spark.read.parquet(batch).select("doc_id").as[String].collect().toSet
+  }
+
+  private def name(path: String) = path.split('/').last
+
+  test("extract resume computes only missing docs; finished work untouched") {
     val dir = Files.createTempDirectory("graft-ckpt").toString
-    val computeCalls = spark.sparkContext.longAccumulator("calls")
 
-    def compute(df: org.apache.spark.sql.DataFrame) = {
-      val acc = computeCalls
-      df.as[(Long, String)].map { case (k, v) =>
-        acc.add(1); (k, v.toUpperCase)
-      }.toDF("k", "v")
-    }
+    // first run: half the corpus, all of it extracted
+    val r1 = Pipeline.runCheckpointed(spark, half, gazette, dir)
+    r1.cleanup()
+    val b1 = docIds(r1.newExtractBatch.get)
+    assert(b1.size == half.count())
 
-    // first run: half the input
-    val half = spark.range(5).select($"id".as("k"),
-      concat(lit("x"), $"id").as("v"))
-    Checkpoint.stage(spark, dir, "upper", "k", half, compute)
-    assert(computeCalls.value == 5)
+    // resume with the FULL corpus: only the missing docs are extracted
+    val r2 = Pipeline.runCheckpointed(spark, all, gazette, dir)
+    r2.cleanup()
+    val b2 = docIds(r2.newExtractBatch.get)
+    assert(b2.size == all.count() - half.count())
+    assert(b1.intersect(b2).isEmpty, "a finished doc was extracted again")
 
-    // resume with the FULL input: only the 5 new keys computed
-    val full = spark.range(10).select($"id".as("k"),
-      concat(lit("x"), $"id").as("v"))
-    val out = Checkpoint.stage(spark, dir, "upper", "k", full, compute)
-    assert(computeCalls.value == 10)
-    assert(out.count() == 10)
-
-    // third run, nothing missing: zero recompute
-    Checkpoint.stage(spark, dir, "upper", "k", full, compute)
-    assert(computeCalls.value == 10)
+    // third run, nothing missing: no new batch
+    val r3 = Pipeline.runCheckpointed(spark, all, gazette, dir)
+    r3.cleanup()
+    assert(r3.newExtractBatch.isEmpty)
+    assert(Checkpoint.live(s"$dir/extract").map(name) ==
+      Seq("batch_00000000", "batch_00000001"))
 
     // manifest exists with per-batch, per-partition rows
-    val manifest = spark.read.json(s"$dir/_manifest/upper")
-    assert(manifest.agg(sum("rows")).head.getLong(0) == 10)
+    val manifest = spark.read.json(s"$dir/_manifest/extract")
+    assert(manifest.agg(sum("rows")).head.getLong(0) == all.count())
     assert(manifest.columns.toSet ==
       Set("batch", "partition", "rows", "min_key", "max_key", "stage"))
     assert(manifest.select("batch").distinct().count() == 2)
   }
 
-  test("uncommitted (crashed) batch dirs are invisible to resume") {
-    import spark.implicits._
+  test("uncommitted (crashed) extract batch dirs are invisible to resume") {
     val dir = Files.createTempDirectory("graft-ckpt2").toString
-    val in = spark.range(3).select($"id".as("k"), $"id".as("v"))
-    Checkpoint.stage(spark, dir, "s", "k", in, identity)
-    // simulate a crashed job: task files present, no _SUCCESS marker
-    val garbage = s"$dir/s/batch_00007"
-    spark.range(100).select($"id".as("k"), $"id".as("v"))
+    Pipeline.runCheckpointed(spark, half, gazette, dir).cleanup()
+    // simulate a crashed run over the full corpus: task files present,
+    // no _SUCCESS marker
+    val garbage = s"$dir/extract/batch_00000007"
+    Pipeline.extract(spark, all, gazette, keepNegatives = false)
       .write.parquet(garbage)
-    graft.pipeline.Fs.deleteRecursive(s"$garbage/_SUCCESS")
-    val out = Checkpoint.stage(spark, dir, "s", "k", in, identity)
-    assert(out.count() == 3, "marker-less batch leaked into reads")
-    // and the next real batch must not collide with the garbage index
-    val more = spark.range(5).select($"id".as("k"), $"id".as("v"))
-    assert(Checkpoint.stage(spark, dir, "s", "k", more, identity)
-      .count() == 5)
-    assert(Checkpoint.committedBatches(dir, "s")
-      .exists(_.endsWith("batch_00008")))
+    Fs.deleteRecursive(s"$garbage/_SUCCESS")
+    assert(Checkpoint.live(s"$dir/extract").map(name) == Seq("batch_00000000"))
+    // the rerun extracts the docs the garbage holds, into the next
+    // index after the garbage's, never colliding with it
+    val r = Pipeline.runCheckpointed(spark, all, gazette, dir)
+    assert(r.triples.count() > 0)
+    r.cleanup()
+    assert(name(r.newExtractBatch.get) == "batch_00000008")
+    assert(docIds(r.newExtractBatch.get).size == all.count() - half.count())
+    assert(spark.read.parquet(Checkpoint.live(s"$dir/extract"): _*).count() ==
+      all.count(), "marker-less batch leaked into reads")
   }
 
   test("checkpointed pipeline: kill/rerun reuses extract batches, triples identical") {
-    import graft.corpus.CorpusGen
-    import graft.pipeline.Pipeline
-    val sf = 0.0002
     val dir = Files.createTempDirectory("graft-ckpt-run").toString
-    val gazette = CorpusGen.gazette(sf)
-    val all = CorpusGen.rawDocs(spark, sf)
-    val half = all.filter(d => d.path.length % 2 == 0)
 
     // run 1 "dies" after extract committed batch 0 (on half the corpus)
     val r1 = Pipeline.runCheckpointed(spark, half, gazette, dir)
@@ -112,5 +113,34 @@ class CheckpointSpec extends SparkSpec {
     assert(r3.newExtractBatch.isEmpty)
     assert(r3.triples.count() == expected.size)
     r3.cleanup()
+  }
+
+  test("a checkpoint of 5-digit batch names resumes; indices order as numbers") {
+    val dir = Files.createTempDirectory("graft-ckpt-width").toString
+    // an earlier layout named batches `batch_NNNNN`: commit one there
+    val r1 = Pipeline.runCheckpointed(spark, half, gazette, dir)
+    r1.cleanup()
+    Fs.of(dir).rename(new org.apache.hadoop.fs.Path(r1.newExtractBatch.get),
+      new org.apache.hadoop.fs.Path(s"$dir/extract/batch_00003"))
+    // resume: only the missing docs, into index 4 (whose 8-digit name
+    // sorts BEFORE `batch_00003` as a string)
+    val r2 = Pipeline.runCheckpointed(spark, all, gazette, dir)
+    val triples = r2.triples
+      .select("subj", "pred", "obj", "evidence_id").collect().toSet
+    r2.cleanup()
+    assert(name(r2.newExtractBatch.get) == "batch_00000004")
+    assert(docIds(r2.newExtractBatch.get).size == all.count() - half.count())
+    assert(Checkpoint.live(s"$dir/extract").map(name) ==
+      Seq("batch_00003", "batch_00000004"))
+    assert(Checkpoint.liveBefore(s"$dir/extract", 4).map(name) ==
+      Seq("batch_00003"))
+    val (oneShot, cl) = Pipeline.runWithCleanup(spark, all, gazette)
+    assert(triples == oneShot
+      .select("subj", "pred", "obj", "evidence_id").collect().toSet)
+    cl()
+    // and a third run is a no-op
+    val r3 = Pipeline.runCheckpointed(spark, all, gazette, dir)
+    r3.cleanup()
+    assert(r3.newExtractBatch.isEmpty)
   }
 }

@@ -95,6 +95,17 @@ class SimSearchSpec extends SparkSpec {
       s"top-1 agreement ${hits.toDouble / exactTop.size}")
   }
 
+  test("cosineTopK never ranks a zero vector: its cosine is NULL, not NaN") {
+    // Spark orders NaN above every double, so a 0/0 score would put the
+    // zero vector first for every query under `cos desc`
+    val zero = Seq((9999L, Array.fill(64)(0.0f))).toDF("id", "embedding")
+    val corpus = clustered.unionByName(zero)
+    val top = SimSearch.cosineTopK(corpus.where($"id" % 4 === 0), corpus, 2)
+    assert(top.count() == 60)
+    assert(top.where($"neighbor_id" === 9999L).isEmpty,
+      "zero vector ranked among the top 2")
+  }
+
   test("FirstEqualIndex == composed first-equal-position form") {
     // the codegen'd predicate behind the first-matching-band dedup must
     // agree with the composed higher-order-function reference on every

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.corpus.CorpusGen
-import graft.pipeline.{Caches, Fs, Pipeline}
+import graft.pipeline.{Caches, Checkpoint, Fs, Pipeline}
 import graft.schema.RawDoc
 import graft.streaming.StreamingExtract
 
@@ -182,7 +182,7 @@ class StreamingExtractSpec extends SparkSpec {
     val compacts = dirs.filter(isCompact)
     val plains = dirs.filterNot(isCompact)
     assert(compacts.nonEmpty, "no compaction after 20 batches at every=5")
-    assert(compacts.forall(d => Fs.exists(s"$d/_COMPACT_COMMIT")))
+    assert(compacts.forall(Fs.hasSuccess))
     assert(plains.size <= 6, s"compaction left ${plains.size} plain dirs")
     assert(spark.read.parquet(dirs: _*).count() == 20L)
 
@@ -347,29 +347,43 @@ class StreamingExtractSpec extends SparkSpec {
     // rewritten once per tier, ending in ONE c3 dir
     val d1 = Files.createTempDirectory("graft-compact-cascade").toString
     (0 until 8).foreach(mkPlain(d1, _))
-    StreamingExtract.maybeCompactExtract(spark, d1, "batch_00000008",
-      every = 2)
+    Checkpoint.compact(spark, d1, before = 8, every = 2)
     assert(names(d1) == Set("batch_00000007_c3"), s"dirs: ${names(d1)}")
-    val view1 = StreamingExtract.extractDirsBefore(d1, "batch_00000008")
+    val view1 = Checkpoint.liveBefore(d1, 8)
     assert(view1.map(_.split('/').last) == Seq("batch_00000007_c3"))
     assert(spark.read.parquet(view1: _*).select("doc_id")
       .as[Long].collect().sorted.toSeq == (0L until 8L))
 
-    // crash between _COMPACT_COMMIT and input cleanup: the committed
+    // crash between the compact's commit and input cleanup: the committed
     // compact supersedes its still-on-disk inputs (no double count),
     // and the next call's sweep deletes them
     val d2 = Files.createTempDirectory("graft-compact-crash").toString
     (0 until 3).foreach(mkPlain(d2, _))
     spark.read.parquet(f"$d2/batch_${0}%08d", f"$d2/batch_${1}%08d")
       .write.parquet(s"$d2/batch_00000001_c1")
-    Fs.writeString(s"$d2/batch_00000001_c1/_COMPACT_COMMIT", "")
-    val view2 = StreamingExtract.extractDirsBefore(d2, "batch_00000003")
+    val view2 = Checkpoint.liveBefore(d2, 3)
     assert(view2.map(_.split('/').last) ==
       Seq("batch_00000001_c1", "batch_00000002"))
     assert(spark.read.parquet(view2: _*).count() == 3L)
-    StreamingExtract.maybeCompactExtract(spark, d2, "batch_00000003",
-      every = 5)
+    Checkpoint.compact(spark, d2, before = 3, every = 5)
     assert(names(d2) == Set("batch_00000001_c1", "batch_00000002"),
       s"sweep left: ${names(d2)}")
+
+    // crash before the compact's commit: a compact dir without _SUCCESS
+    // (here holding only part of its fold) is ignored, and the same fold
+    // overwrites it
+    val d3 = Files.createTempDirectory("graft-compact-uncommitted").toString
+    (0 until 3).foreach(mkPlain(d3, _))
+    spark.read.parquet(f"$d3/batch_${0}%08d")
+      .write.parquet(s"$d3/batch_00000002_c1")
+    Fs.deleteRecursive(s"$d3/batch_00000002_c1/_SUCCESS")
+    assert(Checkpoint.liveBefore(d3, 3).map(_.split('/').last) ==
+      Seq("batch_00000000", "batch_00000001", "batch_00000002"))
+    Checkpoint.compact(spark, d3, before = 3, every = 3)
+    assert(names(d3) == Set("batch_00000002_c1"), s"dirs: ${names(d3)}")
+    val view3 = Checkpoint.liveBefore(d3, 3)
+    assert(view3.map(_.split('/').last) == Seq("batch_00000002_c1"))
+    assert(spark.read.parquet(view3: _*).select("doc_id")
+      .as[Long].collect().sorted.toSeq == (0L until 3L))
   }
 }
