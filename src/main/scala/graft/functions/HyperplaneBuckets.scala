@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   *
   * Why a custom Expression: the composed form
   * ([[graft.simsearch.SimSearch.bucketKey]]) evaluates one
-  * `aggregate(zip_with(...))` per plane — bands*planesPerBand = 128
+  * `aggregate(transform(...))` per plane — bands*planesPerBand = 128
   * traversals of the embedding with an intermediate array allocation
   * each. Here one kernel reads the embedding once, accumulating all
   * projections per element into one per-row array; whole-stage codegen
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
   * oracle's SQL mirror (SparkEntry.lshBandCtes), so swapping it in
   * changes no query result. Null arrays and null elements yield NULL
   * (same convention as [[CosineSimilarity]]) and an empty array sets
-  * every bit (all its projections are 0.0); the composed form clears
-  * every bit in those three cases.
+  * every bit (all its projections are 0.0), as in the composed form;
+  * the composed form clears every bit on a null array or element.
   */
 case class HyperplaneBuckets(child: Expression, bands: Int,
     planesPerBand: Int) extends UnaryExpression {

@@ -85,10 +85,8 @@ object SimSearch {
   def bucketKey(embedding: Column, nPlanes: Int, firstPlane: Int = 0): Column =
     (0 until nPlanes).map { j =>
       val proj = aggregate(
-        zip_with(embedding,
-          sequence(lit(0), size(embedding) - 1),
-          (x, i) => x.cast("double") *
-            planeComponent(firstPlane + j, i.cast("long"))),
+        transform(embedding, (x, i) => x.cast("double") *
+          planeComponent(firstPlane + j, i.cast("long"))),
         lit(0.0), (acc, v) => acc + v)
       when(proj >= 0, lit(1L << j)).otherwise(0L)
     }.reduce((a, b) => a.bitwiseOR(b))
@@ -106,7 +104,7 @@ object SimSearch {
       planesPerBand: Int = 8): DataFrame =
     // fused custom Expression: ONE pass over the embedding computes all
     // bands*planesPerBand projections (the composed per-plane
-    // aggregate(zip_with(...)) form walks the array 128 times);
+    // aggregate(transform(...)) form walks the array 128 times);
     // bit-identical outputs — SimSearchSpec proves it against bucketKey.
     // Embeddings deliberately NOT carried: the band join moves
     // (id, band, bucket) rows only; embeddings re-attach from the

@@ -145,10 +145,8 @@ class ExpressionPathsSpec extends SparkSpec {
         HyperplaneBuckets.buckets(col("e"), bands, planes),
         array((0 until bands).map(b =>
           SimSearch.bucketKey(col("e"), planes, firstPlane = b * planes)): _*), {
-          // the composed form clears every bit in these three cases
+          // the composed form clears every bit in these two cases
           case Row(e: Seq[Any] @unchecked) if hasNull(e) => null
-          case Row(e: Seq[Any] @unchecked) if e.isEmpty =>
-            Seq.fill(bands)((1L << planes) - 1) // every projection is 0.0
           case Row(null) => null
         })
     }
