@@ -346,10 +346,14 @@ object SparkEntry {
     * order under parallel aggregation is unspecified and could flip a
     * sign bit of a projection near zero (rounding protects cosine
     * values, not sign bits). Matches Spark's left-to-right double
-    * accumulation in `HyperplaneBuckets`. */
+    * accumulation in `HyperplaneBuckets`. A NULL embedding gets no
+    * bucket, as in the kernel: `e` drops it, so no later step reads it
+    * (DuckDB 1.0 raises in `list_dot_product` on a table that holds a
+    * NULL list, even on rows a filter or join has already dropped). */
   private def lshBandCtes(bands: Int = 16, ppb: Int = 8): String =
     s"""WITH e AS (SELECT CAST(vec_id AS BIGINT) AS id,
-       |             CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       |             CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+       |           WHERE embedding IS NOT NULL),
        |pl AS (SELECT CAST(unnest(generate_series(0, ${bands * ppb - 1})) AS BIGINT) AS p),
        |proj AS (SELECT e.id, pl.p,
        |    list_dot_product(e.emb,

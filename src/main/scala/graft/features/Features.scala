@@ -102,9 +102,9 @@ object Features {
 
   def numberOfTokens(tokens: Column): Column = size(tokens)
 
-  /** F22 tree-walk features (see [[IobChunker]]). The one UDF pair in
-    * the feature set — maximal-run chunking plus the reference's exact
-    * tree walk are imperative per-row logic with no clean built-in
+  /** F22 IOB chunk features (see [[IobChunker]]). The one UDF pair in
+    * the feature set — maximal-run chunking plus the IOB walk over the
+    * chunks are imperative per-row logic with no clean built-in
     * composition; input is the row's postag array only (bytes per row,
     * no broadcast state), so the codegen break is local to these two
     * columns. */

@@ -1,32 +1,28 @@
 package graft.features
 
-/** F22: parse-tree IOB features (reference `lex_features.py:38-71`).
+/** F22: IOB chunk features (reference `lex_features.py:38-71`).
   *
   * The reference walks constituency trees (`segment.lex_trees`) that its
   * own preprocess never populates — the module is incomplete upstream
   * (`lex_features.py:5-9` is abandoned mid-function with a stray print
   * and returns `set()` unconditionally; `_bag_of_eo_IOB_chain:12-27`
   * stops at a commented-out `#chain =`), so these features never fire in
-  * a stock install. We complete the WHAT the finished half specifies:
+  * a stock install. Here both features derive from the P3 POS tags, with
+  * no stored tree:
   *
-  *  - a deterministic shallow parse: `S -> chunk -> preterminal -> token`
-  *    via regex chunking over the P3 POS tags (NP/VP/PP runs) — the same
-  *    tree SHAPE the reference's tree-walk assumes (leaves under POS
-  *    preterminals, chunks above them, `S` at the root);
-  *  - `chunk_tag` (`lex_features.py:41-57`): per leaf, the node two
-  *    levels up (`path[:-2]`); tag `O` when that is the root `S`
-  *    (unchunked token), else `{B|I}-<label>` by the preterminal's
-  *    position inside the chunk;
-  *  - `iob_chain` (`lex_features.py:60-71`): the "/"-joined
-  *    modifier-label chain along `path[:-1]`; a root-level token's chain
-  *    is empty, yielding `""` — kept verbatim (the reference adds it to
-  *    the set too).
+  *  - [[chunks]] splits the tag sequence into maximal NP/VP/PP runs
+  *    ([[chunkLabel]]); the rest stay unchunked — the two-level shape
+  *    `S -> chunk -> preterminal -> token` the reference's walk assumes;
+  *  - `chunk_tag` (`lex_features.py:41-57`): per token, `{B|I}-<label>`
+  *    by its position inside its chunk, `O` when it is unchunked (the
+  *    node two levels up is the root);
+  *  - `iob_chain` (`lex_features.py:60-71`): the same walk, except that
+  *    an unchunked token's chain is empty, yielding `""` — kept verbatim
+  *    (the reference adds it to the set too). On two levels a chunked
+  *    token's chain is its IOB tag.
   *
-  * On this two-level shallow parse the chain per leaf has length <= 1 —
-  * deeper grammars would grow it; the walk is implemented over the
-  * general shape so a richer chunker drops in without touching the
-  * features. The abandoned per-entity-occurrence bag (:5-9) returns the
-  * empty set in the reference and is therefore not ported.
+  * The abandoned per-entity-occurrence bag (:5-9) returns the empty set
+  * in the reference and is therefore not ported.
   */
 object IobChunker {
 
@@ -59,176 +55,21 @@ object IobChunker {
     out.toSeq
   }
 
-  /** `chunk_tag`: the distinct IOB tag set over all leaves, sorted for
-    * cross-run determinism (the reference returns an unordered set). */
-  def chunkTags(postags: Seq[String]): Seq[String] =
-    chunks(postags).flatMap { c =>
-      c.label match {
-        case None => (c.start until c.end).map(_ => "O")
-        case Some(l) =>
-          (c.start until c.end).map(t => if (t == c.start) s"B-$l" else s"I-$l")
-      }
-    }.distinct.sorted
+  /** `chunk_tag`: the distinct IOB tag set over all leaves — `O` for
+    * unchunked tokens. Sorted for cross-run determinism (the reference
+    * returns an unordered set). */
+  def chunkTags(postags: Seq[String]): Seq[String] = walk(postags, "O")
 
-  /** `iob_chain`: the distinct chain set over all leaves — on the
-    * shallow parse, `{B|I}-<label>` for chunked tokens and the empty
-    * chain `""` for root-level ones (reference behavior of
+  /** `iob_chain`: the distinct chain set over all leaves — the empty
+    * chain `""` for unchunked tokens (reference behavior of
     * `"/".join([])`). Sorted for determinism. */
-  def iobChains(postags: Seq[String]): Seq[String] =
+  def iobChains(postags: Seq[String]): Seq[String] = walk(postags, "")
+
+  /** The one F22 walk: `{B|I}-<label>` by position inside each chunk,
+    * `outside` for unchunked tokens; distinct and sorted. */
+  private def walk(postags: Seq[String], outside: String): Seq[String] =
     chunks(postags).flatMap { c =>
-      c.label match {
-        case None => (c.start until c.end).map(_ => "")
-        case Some(l) =>
-          (c.start until c.end).map(t => if (t == c.start) s"B-$l" else s"I-$l")
-      }
+      (c.start until c.end).map(t =>
+        c.label.fold(outside)(l => (if (t == c.start) "B-" else "I-") + l))
     }.distinct.sorted
-
-  /** PTB-convention escaping for parse leaves (the reference's R7
-    * bracket translation applied in reverse position: brackets inside a
-    * tree would break re-parsing). */
-  private def leaf(tag: String, token: String): String = {
-    val t = token.replace("(", "-LRB-").replace(")", "-RRB-")
-    s"($tag $t)"
-  }
-
-  /** One sentence's shallow parse as a bracketed s-expression —
-    * `S -> chunk -> preterminal -> token`, the storage form of the
-    * reference's `syntactic_sentences` column (`models.py:86`):
-    * chunked runs become `(NP (NN foo) ...)`, unchunked tokens sit
-    * directly under S as `(tag token)`. Deterministic in (tokens,
-    * postags). */
-  def sexpr(tokens: Seq[String], postags: Seq[String]): String = {
-    require(tokens.length == postags.length,
-      s"${tokens.length} tokens vs ${postags.length} tags")
-    val parts = chunks(postags).map { c =>
-      val leaves = (c.start until c.end)
-        .map(i => leaf(postags(i), tokens(i)))
-      c.label match {
-        case None => leaves.mkString(" ")
-        case Some(l) => s"($l ${leaves.mkString(" ")})"
-      }
-    }
-    s"(S ${parts.mkString(" ")})"
-  }
-
-  /** Per-sentence parses for a whole document (parallel arrays +
-    * sentence boundary indices, the [[graft.schema.Doc]] layout). */
-  def docParses(tokens: Array[String], postags: Array[String],
-      sentences: Array[Int]): Array[String] =
-    sentences.sliding(2).collect { case Array(a, b) if b > a =>
-      sexpr(tokens.slice(a, b).toSeq, postags.slice(a, b).toSeq)
-    }.toArray
-
-  // --- consuming the stored parse -----------------------------------
-  //
-  // The reference's tree walks operate on the STORED tree
-  // (`segment.lex_trees`), not on the tag arrays; the walks below do
-  // the same over `Doc.parses`, so the column is consumable exactly
-  // the way `syntactic_sentences` was meant to be. `FeatureConfigSpec`
-  // proves them equal to the tag-derived `chunkTags`/`iobChains` on
-  // pipeline output — the stored parse carries everything F22 needs.
-
-  sealed trait Tree
-  final case class Leaf(tag: String, token: String) extends Tree
-  final case class Node(label: String, children: Seq[Tree]) extends Tree
-
-  /** Parse one stored s-expression back into its tree. Inverse of
-    * [[sexpr]] up to the standard PTB escaping ambiguity (a literal
-    * source token `-LRB-` and an escaped `(` both read back as `(` —
-    * the same convention the reference's R7 translation commits to). */
-  def parseSexpr(s: String): Tree = {
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(' || c == ')') { toks += c.toString; i += 1 }
-      else if (c.isWhitespace) i += 1
-      else {
-        var j = i
-        while (j < s.length && !s.charAt(j).isWhitespace &&
-          s.charAt(j) != '(' && s.charAt(j) != ')') j += 1
-        toks += s.substring(i, j)
-        i = j
-      }
-    }
-    var pos = 0
-    def unescape(t: String): String =
-      t.replace("-LRB-", "(").replace("-RRB-", ")")
-    def node(): Tree = {
-      require(toks(pos) == "(", s"expected ( at $pos in: $s")
-      pos += 1
-      val label = toks(pos); pos += 1
-      if (toks(pos) != "(" && toks(pos) != ")") {
-        // preterminal: exactly one atom child
-        val tok = toks(pos); pos += 1
-        require(toks(pos) == ")", s"unterminated leaf at $pos in: $s")
-        pos += 1
-        Leaf(label, unescape(tok))
-      } else {
-        val children = scala.collection.mutable.ArrayBuffer.empty[Tree]
-        while (toks(pos) == "(") children += node()
-        require(toks(pos) == ")", s"unterminated node at $pos in: $s")
-        pos += 1
-        Node(label, children.toSeq)
-      }
-    }
-    val root = node()
-    require(pos == toks.length, s"trailing content after tree: $s")
-    root
-  }
-
-  /** (tag, token) leaves of a stored parse, in token order. */
-  def leavesOf(parse: String): Seq[(String, String)] = {
-    def walk(t: Tree): Seq[(String, String)] = t match {
-      case Leaf(tag, token) => Seq((tag, token))
-      case Node(_, cs) => cs.flatMap(walk)
-    }
-    walk(parseSexpr(parse))
-  }
-
-  /** `chunk_tag` walked from the stored tree (`lex_features.py:41-57`):
-    * per leaf, the node two levels up — `O` when that is the root,
-    * else `{B|I}-<label>` by position inside the chunk node. Distinct
-    * + sorted like [[chunkTags]]. */
-  def chunkTagsOfParse(parse: String): Seq[String] =
-    walkIob(parse)._1
-
-  /** `iob_chain` walked from the stored tree (`lex_features.py:60-71`):
-    * the "/"-joined modifier-label chain along `path[:-1]` — `""` for
-    * root-level leaves. Distinct + sorted like [[iobChains]]. */
-  def iobChainsOfParse(parse: String): Seq[String] =
-    walkIob(parse)._2
-
-  private def walkIob(parse: String): (Seq[String], Seq[String]) = {
-    val tags = scala.collection.mutable.ArrayBuffer.empty[String]
-    val chains = scala.collection.mutable.ArrayBuffer.empty[String]
-    // path = labels of the nodes ABOVE the preterminal, innermost
-    // first; the root's label is excluded (reference: tag `O` exactly
-    // when `path[:-2]` is the root, chain slice drops the root too).
-    // `posInParent` = the child's index inside its parent node — for a
-    // leaf under a chunk that is its position in the chunk (B vs I).
-    def walk(t: Tree, path: List[String], posInParent: Int): Unit =
-      t match {
-        case Leaf(_, _) =>
-          path match {
-            case Nil => tags += "O"; chains += ""
-            case chunk :: above =>
-              val iob = (if (posInParent == 0) "B-" else "I-") + chunk
-              tags += iob
-              // shallow tree: chain == iob; a deeper grammar joins the
-              // outer modifier labels in front — same walk either way
-              chains += (iob :: above).reverse.mkString("/")
-          }
-        case Node(label, cs) =>
-          cs.zipWithIndex.foreach { case (c, i) =>
-            walk(c, label :: path, i)
-          }
-      }
-    parseSexpr(parse) match {
-      case Node(_, cs) =>
-        cs.zipWithIndex.foreach { case (c, i) => walk(c, Nil, i) }
-      case Leaf(_, _) => tags += "O"; chains += ""
-    }
-    (tags.distinct.sorted.toSeq, chains.distinct.sorted.toSeq)
-  }
 }

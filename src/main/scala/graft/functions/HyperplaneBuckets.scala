@@ -27,8 +27,10 @@ import org.apache.spark.sql.types._
   * oracle's SQL mirror (SparkEntry.lshBandCtes), so swapping it in
   * changes no query result. Null arrays and null elements yield NULL
   * (same convention as [[CosineSimilarity]]) and an empty array sets
-  * every bit (all its projections are 0.0), as in the composed form;
-  * the composed form clears every bit on a null array or element.
+  * every bit (all its projections are 0.0), as in the composed form.
+  * The DuckDB mirror also gives a NULL array no bucket (its `e` CTE
+  * skips it); the composed form clears every bit on a null array or
+  * element, and DuckDB raises on a null element.
   */
 case class HyperplaneBuckets(child: Expression, bands: Int,
     planesPerBand: Int) extends UnaryExpression {

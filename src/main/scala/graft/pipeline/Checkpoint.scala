@@ -51,6 +51,12 @@ object Checkpoint {
       }
     }
 
+  /** Every `batch_*` dir under `root` as (index, path), committed or
+    * not, sorted by index: the stream's link-state dirs are listed
+    * through the same numeric name parser as the extract dirs. */
+  private[graft] def indexed(root: String): Seq[(Long, String)] =
+    all(root).map(b => (b.index, b.path)).sortBy(_._1)
+
   private def committedBefore(root: String, index: Long): Seq[Batch] =
     all(root).filter(b => b.index < index && Fs.hasSuccess(b.path))
 

@@ -80,30 +80,18 @@ object Pipeline {
 
   /** Per-document preprocess: tokenize, sentence-split, POS, lemmas,
     * gazette + camel NER (no-overlap combine, gazette first), dedupe,
-    * segment. Pure function — runs as one fused map.
-    *
-    * `withParses`: a caller that keeps the returned `Doc` gets the
-    * per-sentence shallow-parse column (`syntactic_sentences`,
-    * reference models.py:86); the fused triple extract passes false —
-    * it never stores docs, so building parse strings there would be
-    * pure hot-path waste at corpus scale. */
-  def preprocessDoc(raw: RawDoc, gazette: LiteralNer,
-      withParses: Boolean = true): DocBundle = {
+    * segment. Pure function — runs as one fused map. */
+  def preprocessDoc(raw: RawDoc, gazette: LiteralNer): DocBundle = {
     val docId = s"${raw.repo}/${raw.path}@${raw.commit}"
     val tk = Tokenizer(raw.content)
-    val tags = PosTagger.tag(tk.tokens)
     val doc = Doc(
       doc_id = docId, repo = raw.repo, path = raw.path,
       commit = raw.commit, lang = raw.lang, text = raw.content,
       content_sha256 = graft.corpus.CorpusGen.sha256(raw.content),
       tokens = tk.tokens, offsets = tk.spans,
       lemmas = PosTagger.lemmas(tk.tokens),
-      postags = tags,
-      sentences = tk.sentences,
-      parses =
-        if (withParses) graft.features.IobChunker.docParses(
-          tk.tokens, tags, tk.sentences)
-        else Array.empty)
+      postags = PosTagger.tag(tk.tokens),
+      sentences = tk.sentences)
     val gazetteMentions = NerRunner.run(gazette, 0, docId, tk.tokens, tk.sentences)
     val camelMentions = NerRunner.run(camelNer, 1, docId, tk.tokens, tk.sentences)
     val combined = NerRunner.dedupe(
@@ -163,7 +151,7 @@ object Pipeline {
         (rel, new Rules.RuleCore(rules, rel))
       }
       it.map { rawDoc =>
-        val b = preprocessDoc(rawDoc, ner, withParses = false)
+        val b = preprocessDoc(rawDoc, ner)
         val preds = b.segments.iterator.flatMap { seg =>
           cores.iterator.flatMap { case (rel, core) =>
             val (evs, truncated) = Candidates.evidencesOfCounted(seg, rel)

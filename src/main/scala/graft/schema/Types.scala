@@ -20,13 +20,7 @@ final case class RawDoc(
 /** A preprocessed document: parallel token arrays + sentence boundaries.
   * Invariants (reference `iepy/data/models.py:167-208`):
   *  - lemmas.length == tokens.length == offsets.length == postags.length
-  *  - sentences strictly increasing, starts at 0, ends at tokens.length
-  *  - parses: one bracketed s-expression per sentence (the
-  *    `syntactic_sentences` field of the reference model,
-  *    `iepy/data/models.py:86`, populated at
-  *    `stanford_preprocess.py:199-204` from the parser annotator; here
-  *    the deterministic shallow parse — same tree shape F22's
-  *    tree-walks consume). */
+  *  - sentences strictly increasing, starts at 0, ends at tokens.length */
 final case class Doc(
     doc_id: String,
     repo: String,
@@ -39,8 +33,7 @@ final case class Doc(
     offsets: Array[Int],
     lemmas: Array[String],
     postags: Array[String],
-    sentences: Array[Int],
-    parses: Array[String] = Array.empty)
+    sentences: Array[Int])
 
 /** An entity occurrence (mention) in a document; token offsets, end
   * exclusive (reference `iepy/data/models.py:310-339`). */

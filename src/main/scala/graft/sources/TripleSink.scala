@@ -79,40 +79,39 @@ final class IcebergTripleSink extends TripleSink {
     * instead of replacing the whole table per micro-batch
     * ([[write]]'s createOrReplace, correct only for full batch
     * materialization), replace ONLY the rows of the components the
-    * batch touched — a DELETE keyed on canonical subject/object
+    * batch re-linked — a DELETE keyed on canonical subject/object
     * membership, then an APPEND of the rebuilt rows.
     *
-    * Replay safety (the streaming sink's at-least-once contract): the
-    * DELETE predicate covers the WHOLE component space the APPEND
-    * writes into — the union of the touched PRIOR canonicals and
-    * `rebuilt`'s own distinct subj/obj. Touched prior canonicals alone
-    * are not enough: `rebuilt` also carries rows under NEW canonicals —
-    * brand-new components from batch-only entities, and touched
-    * components whose min-alias canonical changed after re-CC — and on
-    * an at-least-once replay (crash after INSERT, before the streaming
-    * checkpoint commit) those rows would survive a prior-canonical-only
-    * DELETE and be appended again. With the union predicate a crash
-    * between the two statements, or a full re-run of the batch,
-    * converges to the same table instead of duplicating rows. On Iceberg each statement is one isolated
-    * snapshot; readers between the two see a table missing only
-    * touched-component rows, never a torn file set (the same guarantee
-    * the parquet path gets from its swap dir).
+    * `relinked` [canonical: String] is the key set the parquet path's
+    * keep rule drops too (see `StreamingExtract.incrementalLink`): the
+    * touched PRIOR canonicals plus every canonical the batch's CC re-run
+    * produced, new ones included. Every rebuilt row has its subj or obj
+    * in it, so an at-least-once replay (crash after INSERT, before the
+    * streaming checkpoint commit) deletes the rows the first attempt
+    * appended and converges instead of duplicating them. Rows of
+    * untouched components stay, even when a rebuilt row points into
+    * one: a key set taken from the rebuilt rows' own subj/obj would
+    * delete such a component's rows without re-appending them. On
+    * Iceberg each statement is one isolated snapshot; readers between
+    * the two see a table missing only re-linked rows, never a torn
+    * file set (the same guarantee the parquet path gets from its swap
+    * dir).
     *
-    * `touched` is the touched-component table [canonical: String];
-    * `rebuilt` the re-derived triples [subj, pred, obj, evidence_id]. */
+    * `rebuilt` holds the re-derived triples [subj, pred, obj,
+    * evidence_id]. */
   def writeIncremental(spark: SparkSession, rebuilt: DataFrame,
-      touched: DataFrame, target: String): Unit = {
+      relinked: DataFrame, target: String): Unit = {
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tv = s"graft_touched_$tag"
+    val kv = s"graft_relinked_$tag"
     val rv = s"graft_rebuilt_$tag"
-    touched.createOrReplaceTempView(tv)
+    relinked.createOrReplaceTempView(kv)
     rebuilt.createOrReplaceTempView(rv)
     try {
-      spark.sql(IcebergTripleSink.deleteStatement(target, tv, rv))
+      spark.sql(IcebergTripleSink.deleteStatement(target, kv))
       spark.sql(
         s"INSERT INTO $target SELECT subj, pred, obj, evidence_id FROM $rv")
     } finally {
-      spark.catalog.dropTempView(tv)
+      spark.catalog.dropTempView(kv)
       spark.catalog.dropTempView(rv)
     }
   }
@@ -134,14 +133,11 @@ object IcebergTripleSink {
   /** The component-space DELETE of [[IcebergTripleSink.writeIncremental]]
     * (extracted so the statement shape is spec-assertable without an
     * executing Iceberg catalog: DELETE + IN-subqueries run through
-    * Iceberg's row-level operations, which no fake can emulate). The
-    * deleted key set is the union of touched prior canonicals and the
-    * rebuilt rows' own subj/obj — see the replay-safety note on
-    * [[IcebergTripleSink.writeIncremental]]. */
+    * Iceberg's row-level operations, which no fake can emulate). Deletes
+    * every row whose subj or obj is in the re-linked key view. */
   private[graft] def deleteStatement(target: String,
-      touchedView: String, rebuiltView: String): String = {
-    val keys = s"SELECT canonical FROM $touchedView UNION " +
-      s"SELECT subj FROM $rebuiltView UNION SELECT obj FROM $rebuiltView"
+      relinkedView: String): String = {
+    val keys = s"SELECT canonical FROM $relinkedView"
     s"DELETE FROM $target WHERE subj IN ($keys) OR obj IN ($keys)"
   }
 }

@@ -123,15 +123,17 @@ object StreamingExtract {
     import spark.implicits._
     val extractDir = s"$workDir/extract_stream"
     val stateRoot = s"$workDir/state"
-    val curName = f"batch_$batchId%08d"
-    val cur = s"$stateRoot/$curName"
+    val cur = s"$stateRoot/${Checkpoint.batchName(batchId)}"
     // previous committed state: strictly earlier than THIS batch — a
     // crashed attempt at this batchId may have left a partial (or even
-    // committed) state dir, which a replay must rebuild, never read
-    val prevDir = Fs.listDirs(stateRoot, "batch_")
-      .filter(d => d.split('/').last < curName)
-      .filter(d => Fs.exists(s"$d/_COMMIT"))
+    // committed) state dir, which a replay must rebuild, never read.
+    // Indices compare as numbers: batch_100000000 sorts after
+    // batch_99999999, which a name comparison gets wrong
+    val states = Checkpoint.indexed(stateRoot)
+    val prev = states
+      .filter { case (i, d) => i < batchId && Fs.exists(s"$d/_COMMIT") }
       .lastOption
+    val prevDir = prev.map(_._2)
 
     // the step frees exactly what it cached (not catalog-wide
     // clearCache, nor the global tracked queue — the enclosing session
@@ -193,14 +195,23 @@ object StreamingExtract {
       val newCanon = scope.persist(subCanon.unionByName(
         prevCanon.join(touchedKeys, Seq("entity_key"), "left_anti")
           .select($"entity_key", $"canonical")))
+      // the re-linked key set: the touched prior canonicals plus the
+      // canonicals the sub-CC produced (newCanon's rows for ccInput's
+      // keys, so CC does not run twice). Every rebuilt row has its subj
+      // or obj in it, and every prior canonical in it is touched, so the
+      // parquet keep below and the Iceberg DELETE replace exactly the
+      // rows that step 4 rebuilds
+      val relinked = scope.persist(touchedComps.unionByName(
+        newCanon.join(ccInput.select($"entity_key"), Seq("entity_key"),
+          "leftsemi").select($"canonical")).distinct())
       // 4. triples: keep rows of untouched components; rebuild rows
-      //    whose subject or object component was touched, from their
+      //    whose subject or object component was re-linked, from their
       //    source predictions (id-width columnar scan of the
       //    accumulated extract — text never lives there)
       val keep = prevTriples
-        .join(touchedComps.withColumnRenamed("canonical", "subj"),
+        .join(relinked.withColumnRenamed("canonical", "subj"),
           Seq("subj"), "left_anti")
-        .join(touchedComps.withColumnRenamed("canonical", "obj"),
+        .join(relinked.withColumnRenamed("canonical", "obj"),
           Seq("obj"), "left_anti")
       val oldDirs = Checkpoint.liveBefore(extractDir, batchId)
       val touchedOldPreds =
@@ -244,7 +255,7 @@ object StreamingExtract {
       persistedTriples.write.mode("overwrite").parquet(tmp)
       Fs.swapInto(tmp, triplesDir)
       // optional Iceberg twin of the visible table: first batch = full
-      // snapshot write; later batches = touched-component DELETE + APPEND
+      // snapshot write; later batches = re-linked-component DELETE + APPEND
       // (NOT createOrReplace — replacing the whole table per micro-batch
       // would make the incremental link pointless on the catalog path).
       // Guarded by the runtime probe so the same code is a no-op without
@@ -256,13 +267,13 @@ object StreamingExtract {
           if (prevDir.isEmpty)
             sink.write(spark, persistedTriples, tbl, buckets = 32,
               metrics = Map("batch_id" -> batchId))
-          else sink.writeIncremental(spark, rebuilt, touchedComps, tbl)
+          else sink.writeIncremental(spark, rebuilt, relinked, tbl)
         }
       // prune states older than the one a replay of THIS batch would need
-      // (listed paths share one prefix, so they compare as names)
-      prevDir.foreach(p =>
-        Fs.listDirs(stateRoot, "batch_").filter(_ < p)
-          .foreach(Fs.deleteRecursive))
+      prev.foreach { case (p, _) =>
+        states.collect { case (i, d) if i < p => d }
+          .foreach(Fs.deleteRecursive)
+      }
       // keep the extract layout bounded: fold accumulated batch dirs into
       // one compacted dir every `compactEvery` batches (a replay of THIS
       // batch is untouched — only strictly-earlier dirs compact)

@@ -67,63 +67,6 @@ class FeatureConfigSpec extends SparkSpec {
       .withDefaultFeatures(df).columns.contains("f_chunk_tag"))
   }
 
-  test("syntactic_sentences analog: per-sentence shallow-parse s-expressions stored on Doc") {
-    import graft.features.IobChunker
-    // one sentence: chunked runs under their label, unchunked under S,
-    // PTB bracket escaping on leaves
-    val toks = Seq("The", "dog", "saw", "(", "John", ")", ".")
-    val tags = Seq("DT", "NN", "VBD", "-LRB-", "NNP", "-RRB-", ".")
-    assert(IobChunker.sexpr(toks, tags) ==
-      "(S (NP (DT The) (NN dog)) (VP (VBD saw)) (-LRB- -LRB-) " +
-        "(NP (NNP John)) (-RRB- -RRB-) (. .))")
-    // doc layout: one parse per sentence boundary pair
-    val docToks = Array("A", "runs", ".", "B", "sits", ".")
-    val docTags = Array("NNP", "VBD", ".", "NNP", "VBD", ".")
-    val parses = IobChunker.docParses(docToks, docTags, Array(0, 3, 6))
-    assert(parses.length == 2)
-    assert(parses(0) == "(S (NP (NNP A)) (VP (VBD runs)) (. .))")
-    assert(parses(1) == "(S (NP (NNP B)) (VP (VBD sits)) (. .))")
-    // populated by the pipeline's preprocess (models.py:86 analog)
-    val raw = graft.schema.RawDoc("r", "p", "c", "scala",
-      "Function parse_header_0 calls function emit_event_1 .\n")
-    val bundle = graft.pipeline.Pipeline.preprocessDoc(raw,
-      new graft.preprocess.LiteralNer(Seq(
-        ("parse_header_0", "FUNCTION"), ("emit_event_1", "FUNCTION"))))
-    assert(bundle.doc.parses.length == bundle.doc.sentences.length - 1)
-    assert(bundle.doc.parses.forall(p =>
-      p.startsWith("(S ") && p.endsWith(")")))
-  }
-
-  test("stored parse is consumable: tree walks equal the tag-derived F22 features") {
-    import graft.features.IobChunker
-    // round trip incl. PTB bracket escaping
-    val toks = Seq("The", "dog", "saw", "(", "John", ")", ".")
-    val tags = Seq("DT", "NN", "VBD", "-LRB-", "NNP", "-RRB-", ".")
-    val p = IobChunker.sexpr(toks, tags)
-    assert(IobChunker.leavesOf(p) == tags.zip(toks))
-    assert(IobChunker.chunkTagsOfParse(p) == IobChunker.chunkTags(tags))
-    assert(IobChunker.iobChainsOfParse(p) == IobChunker.iobChains(tags))
-    // pipeline output: every stored sentence parse walks to the same
-    // feature sets as the tag arrays it was built from
-    val raw = graft.schema.RawDoc("r", "p", "c", "scala",
-      "Function alpha_0 calls function beta_1 . Class Gamma2 extends class Delta3 .\n")
-    val d = graft.pipeline.Pipeline.preprocessDoc(raw,
-      new graft.preprocess.LiteralNer(Seq(
-        ("alpha_0", "FUNCTION"), ("beta_1", "FUNCTION")))).doc
-    d.sentences.sliding(2).zip(d.parses.iterator).foreach {
-      case (Array(a, b), parse) =>
-        val sTags = d.postags.slice(a, b).toSeq
-        val sToks = d.tokens.slice(a, b).toSeq
-        assert(IobChunker.leavesOf(parse).map(_._1) == sTags)
-        assert(IobChunker.leavesOf(parse).map(_._2) == sToks)
-        assert(IobChunker.chunkTagsOfParse(parse) ==
-          IobChunker.chunkTags(sTags))
-        assert(IobChunker.iobChainsOfParse(parse) ==
-          IobChunker.iobChains(sTags))
-      case _ => ()
-    }
-  }
-
   test("S3: lowercase-unless-acronym normalizer (literal.py:109-119)") {
     assert(Sources.toLowerNormalizer("The NASA Space Program") ==
       "the NASA space program")

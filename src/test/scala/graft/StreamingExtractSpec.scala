@@ -335,6 +335,60 @@ class StreamingExtractSpec extends SparkSpec {
     assert(latestMetrics(dir)("touched_components") == 2)
   }
 
+  test("state dirs compare as numbers: batch 100000000 links over batch 99999999") {
+    // batch_100000000 sorts before batch_99999999 as a name; a link step
+    // that picked its prior state by name would see none at 10^8, lose
+    // the history and never prune the older state
+    import spark.implicits._
+    import Pipeline.{DocExtract, EntityRow, Prediction}
+    val dir = Files.createTempDirectory("graft-stream-rollover").toString
+    val batches = Seq(
+      Seq(DocExtract("d1",
+        Array(Prediction("ev1", "calls", "zebraFun", "d1 FUNCTION 5 6",
+          answer = true)),
+        Array(
+          EntityRow("zebraFun", "FUNCTION", "zebraFun", from_gazette = true),
+          EntityRow("d1 FUNCTION 5 6", "FUNCTION", "otherFun",
+            from_gazette = false)))),
+      Seq(DocExtract("d2",
+        Array(Prediction("ev2", "calls", "d2 FUNCTION 0 1", "zebraFun",
+          answer = true)),
+        Array(
+          EntityRow("zebraFun", "FUNCTION", "zebraFun", from_gazette = true),
+          EntityRow("d2 FUNCTION 0 1", "FUNCTION", "someFun",
+            from_gazette = false)))),
+      Seq(DocExtract("d3",
+        Array(Prediction("ev3", "calls", "zebraFun", "d3 FUNCTION 2 3",
+          answer = true)),
+        Array(
+          EntityRow("zebraFun", "FUNCTION", "zebraFun", from_gazette = true),
+          EntityRow("d3 FUNCTION 2 3", "FUNCTION", "thirdFun",
+            from_gazette = false)))))
+    val ids = Seq(99999999L, 100000000L, 100000001L)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, String)] =
+      df.select("subj", "pred", "obj", "evidence_id")
+        .as[(String, String, String, String)].collect().toSeq.sorted
+    batches.zip(ids).zipWithIndex.foreach { case ((b, id), n) =>
+      b.toDS().write.parquet(
+        s"$dir/extract_stream/${Checkpoint.batchName(id)}")
+      StreamingExtract.incrementalLink(spark, dir, id)
+      val metrics = Fs.readString(
+        s"$dir/state/${Checkpoint.batchName(id)}/metrics.json")
+      assert(metrics.contains(s""""incremental":${if (n == 0) 0 else 1}"""),
+        s"batch $id: $metrics")
+      // the incremental triples equal a full re-link of every batch so far
+      val seen = batches.take(n + 1).flatten
+      val fullCanon = graft.canonical.Canonicalize.components(spark,
+        Pipeline.dedupeEntities(seen.flatMap(_.entities).toDF()))
+      val expected = rows(Pipeline.triplesOf(
+        seen.flatMap(_.predictions).toDF().filter($"answer"), fullCanon))
+      assert(rows(spark.read.parquet(s"$dir/triples")) == expected,
+        s"batch $id")
+    }
+    // the last link pruned the state older than its prior one
+    assert(Checkpoint.indexed(s"$dir/state").map(_._1) == ids.drop(1))
+  }
+
   test("tiered compaction: cascading folds, crash leftovers") {
     import spark.implicits._
     def mkPlain(dir: String, i: Int): Unit =

@@ -81,14 +81,12 @@ class TripleSinkSpec extends SparkSpec {
     import spark.implicits._
     // the DELETE half runs through Iceberg's row-level operations
     // (IN-subqueries), which no fake catalog can emulate — its shape is
-    // the contract: delete the WHOLE component space the APPEND
-    // re-writes (touched prior canonicals UNION rebuilt's subj/obj —
-    // rebuilt rows under NEW canonicals would otherwise survive a
-    // replay's DELETE and duplicate), so a replay converges
-    val del = IcebergTripleSink.deleteStatement("cat.db.t", "touched_v",
-      "rebuilt_v")
-    val keys = "SELECT canonical FROM touched_v UNION " +
-      "SELECT subj FROM rebuilt_v UNION SELECT obj FROM rebuilt_v"
+    // the contract: delete every row keyed into the re-linked component
+    // space (touched prior canonicals plus the canonicals the batch's CC
+    // re-run produced), which holds every row the APPEND re-writes, so a
+    // replay converges
+    val del = IcebergTripleSink.deleteStatement("cat.db.t", "relinked_v")
+    val keys = "SELECT canonical FROM relinked_v"
     assert(del == s"DELETE FROM cat.db.t WHERE subj IN ($keys) " +
       s"OR obj IN ($keys)")
 
@@ -120,5 +118,39 @@ class TripleSinkSpec extends SparkSpec {
     assert(FakeV2Catalog.tables("db.inc").rows.asScala.toSet == Set(
       Seq("funA", "calls", "funB", "ev1"),
       Seq("funA", "calls", "funC", "ev2")))
+  }
+
+  test("incremental DELETE keeps an untouched component that a rebuilt row points into") {
+    import spark.implicits._
+    // prior table: component t calls untouched component u, u calls v.
+    // The batch touches t only; its CC re-run yields t and a new w, and
+    // the rebuilt rows are (t, calls, u) and (t, calls, w). Keying the
+    // DELETE on the rebuilt rows' own obj would put u in the key set and
+    // delete (u, calls, v), which nothing re-appends.
+    val prior = Seq(("t", "calls", "u", "e1"), ("u", "calls", "v", "e2"))
+    val rebuilt = Seq(("t", "calls", "u", "e1"), ("t", "calls", "w", "e3"))
+      .toDF("subj", "pred", "obj", "evidence_id")
+    Seq("t", "w").toDF("canonical").createOrReplaceTempView("relinked_spec")
+    rebuilt.createOrReplaceTempView("rebuilt_spec")
+    // the DELETE run as a SELECT of the rows it keeps, then the APPEND
+    val del = IcebergTripleSink.deleteStatement("tbl", "relinked_spec")
+    assert(del.startsWith("DELETE FROM tbl WHERE "))
+    val where = del.stripPrefix("DELETE FROM tbl WHERE ")
+    // sorted sequences, so a duplicated row cannot hide in a set
+    def commit(table: Seq[(String, String, String, String)]) = {
+      table.toDF("subj", "pred", "obj", "evidence_id")
+        .createOrReplaceTempView("table_spec")
+      spark.sql(s"SELECT * FROM table_spec WHERE NOT ($where) " +
+        "UNION ALL SELECT * FROM rebuilt_spec").as[(String, String, String, String)].collect()
+        .toSeq.sorted
+    }
+    val expected = Seq(("t", "calls", "u", "e1"), ("t", "calls", "w", "e3"),
+      ("u", "calls", "v", "e2"))
+    val once = commit(prior)
+    assert(once == expected)
+    // a replay of the same batch over the committed table converges
+    assert(commit(once) == expected)
+    Seq("relinked_spec", "rebuilt_spec", "table_spec")
+      .foreach(spark.catalog.dropTempView)
   }
 }
